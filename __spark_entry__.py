@@ -19,15 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # every query starts by loading tables, so draining here bounds
-    # lazily-persisted tables (dedup materialize=False signatures,
-    # validate single-scan fused tables) to the one query in flight —
-    # the owner those lazy paths otherwise lack (ADVICE round 4).
-    # Queries must load tables BEFORE building lazy plans (all do:
-    # _t is always the first call).
+    # lazily-persisted tables (validate single-scan fused tables) to the
+    # one query in flight — the owner that lazy path otherwise lacks
+    # (ADVICE round 4). Queries must load tables BEFORE building lazy
+    # plans (all do: _t is always the first call).
     from sparkval.engine import release_scan_caches
-    from sparkval.pipeline.dedup import release_lazy_caches
 
-    release_lazy_caches()
     release_scan_caches()
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
@@ -130,7 +127,7 @@ def q_score_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_token_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sparkval.pipeline.dedup import _spread_small_input
+    from sparkval.session import _spread_small_input
     from sparkval.pipeline.text import with_token_count
 
     docs = _t(spark, sf_dir, "documents")
@@ -164,7 +161,7 @@ def q_exact_dup_groups_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-based language ID counts per (true lang, predicted)."""
-    from sparkval.pipeline.dedup import _spread_small_input
+    from sparkval.session import _spread_small_input
     from sparkval.pipeline.text import with_lang_id
 
     docs = _t(spark, sf_dir, "documents")
@@ -1980,7 +1977,7 @@ def q_heavy_hitters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     touch from the vocabulary counts and takes the same min-over-rows
     (deterministic: collisions only ever add, identically on both
     engines)."""
-    from sparkval.pipeline.dedup import _spread_small_input
+    from sparkval.session import _spread_small_input
     from sparkval.pipeline.text import _ws_tokens
     from sparkval.stats import (
         countmin_estimate_expr,
@@ -2026,7 +2023,7 @@ def q_stream_heavy_hitters_documents(spark: SparkSession, sf_dir: str) -> DataFr
     import shutil
     import tempfile
 
-    from sparkval.pipeline.dedup import _spread_small_input
+    from sparkval.session import _spread_small_input
     from sparkval.pipeline.text import _ws_tokens
     from sparkval.stats import countmin_estimate_expr, merge_countmin
     from sparkval.streaming import stream_heavy_hitters
@@ -2252,7 +2249,7 @@ def q_kmv_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recomputes the identical sketches (k smallest distinct
     hashes per source) AND the identical estimates — the sketch
     family's sixth monoid, fully value-oracled."""
-    from sparkval.pipeline.dedup import _spread_small_input
+    from sparkval.session import _spread_small_input
     from sparkval.stats import kmv_overlap, kmv_sketches
 
     docs = _t(spark, sf_dir, "documents")
@@ -2536,7 +2533,7 @@ def q_seasonal_anomaly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bit_lsh_near_dups_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bit-sampling LSH near-dup pairs (similarity.bit_lsh_near_dups,
-    zero-Python LSH) over embeddings ∪ planted copies with coordinate
+    Python-free band projection) over embeddings ∪ planted copies with coordinate
     3 NEGATED (vec_id + 100000). The negation flips one sign bit, so
     band 0 always disagrees and the pair surfaces only through
     OR-amplification over bands 1-7 — the bucketing logic is load

@@ -4,13 +4,14 @@ Jaccard, embedding-cosine near-dup.
 Scale design:
 - exact: hash-groupBy on a 128-bit content hash — one shuffle of
   (hash, key) pairs only, never content.
-- MinHash-LSH: per-doc signatures via ONE vectorized pandas UDF
-  (numpy, no per-row Python), then banding -> explode(bands) ->
-  groupBy(band_hash) -> within-bucket pairs. Candidate count is
-  bounded by bucket sizes, not O(n^2); hot buckets are inherently
-  rare with 32-bit band hashes and AQE splits any skewed bucket join.
-- SimHash: same shape, 64-bit signature, 4x16-bit band blocking,
-  verify by Hamming distance (built-in bit ops).
+- MinHash-LSH: per-doc signatures via ONE vectorized Arrow kernel
+  (numpy, no per-row Python), then banding -> explode(bands) with the
+  signature riding along -> bucket-local verify (pipeline.lsh): each
+  (band, bucket) scores its own pairs in place, so candidate volume
+  never crosses the shuffle, and buckets above the hot-bucket cap are
+  split into block pairs so per-task work stays bounded.
+- SimHash: same shape, 64-bit signature, ``max_hamming + 1`` bit blocks
+  as the bands, verified in place by XOR + popcount.
 - n-gram Jaccard: exact verification joined onto LSH candidates only.
 
 All thresholds/permutations are deterministic (fixed seeds) so
@@ -22,36 +23,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-#: signature tables left cached by ``materialize=False`` callers — the
-#: lazy path cannot unpersist before its caller's single action runs,
-#: so ownership transfers here; drain with release_lazy_caches()
-#: (ADVICE round 4: without an owner, a long-lived driver session
-#: running many one-shot plans accretes cached signature tables).
-_LAZY_PERSISTED: list[DataFrame] = []
-
-
-def release_lazy_caches() -> int:
-    """Unpersist signature tables registered by ``materialize=False``
-    runs of near_duplicates_minhash. Call after the single action over
-    a lazy near-dup plan (the driver entry queries call this at the
-    start of every query, bounding outstanding lazy caches to the one
-    query in flight). Returns the number of tables released."""
-    n = 0
-    while _LAZY_PERSISTED:
-        df = _LAZY_PERSISTED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing cached
-            pass
-    return n
-
+from sparkval.pipeline import lsh
+from sparkval.pipeline.lsh import _segmented_arange
+from sparkval.session import _spread_small_input
 
 # Deterministic MinHash permutation parameters (a*x+b mod p), seed 42.
 _MINHASH_P = np.uint64((1 << 61) - 1)
@@ -74,12 +53,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 
 
 _FNV = np.uint64(1099511628211)
-
-
-def _segmented_arange(counts: np.ndarray) -> np.ndarray:
-    """[0..c0), [0..c1), ... concatenated (standard segmented arange)."""
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    return np.arange(int(counts.sum()), dtype=np.int64) - np.repeat(starts, counts)
 
 
 def _arrow_shingle_stream(batch: pa.RecordBatch, text_idx: int, k: int
@@ -175,21 +148,6 @@ def _shingles(text: str, k: int = 5, unique: bool = True) -> np.ndarray:
     return np.unique(h) if unique else h
 
 
-def _spread_small_input(df: DataFrame) -> DataFrame:
-    """Small-input fast path for the signature kernels: a tiny table
-    stored as one parquet file arrives as 1-2 scan partitions and
-    starves all but 2 cores through the CPU-bound signature UDF
-    (measured: 3.0 s -> 0.4 s for 5k docs at local[32]). Repartition
-    ONLY when the input has fewer partitions than the cluster has
-    slots — at 100 TB the table always has >> slots partitions, this
-    never fires, and content never shuffles."""
-    spark = df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < slots:
-        return df.repartition(slots)
-    return df
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        k_shingle: int = 5) -> DataFrame:
     """64-permutation MinHash signature per document — one mapInArrow
@@ -249,456 +207,66 @@ def _band_table(
     )
 
 
-def minhash_candidates(sigs: DataFrame, id_col: str = "doc_id",
-                       n_bands: int = 16) -> DataFrame:
-    """LSH banding: equal band-slice -> same bucket -> candidate pair.
+def _minhash_scorer(threshold: float) -> lsh.Scorer:
+    """Signature agreement: the estimate is agreeing permutations / 64,
+    kept iff >= ``threshold``. Both the tile prefilter and the exact
+    step bulk-count agreement on the LOW 16 BITS of each permutation
+    value first (4x less memory traffic than int64): truncated equality
+    is implied by full equality, so the truncated count only ever
+    OVER-estimates, and every candidate is re-counted exactly on the
+    full values before it is kept."""
 
-    16 bands x 4 rows ~ catches Jaccard >= ~0.5 with high probability.
-    Pairs are deduped and ordered (a < b) for determinism.
-    """
-    bands = _band_table(sigs, id_col, n_bands)
-    left = bands.alias("l")
-    right = bands.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
-        .distinct()
-    )
-    return pairs
+    def read(arr: pa.Array) -> np.ndarray:
+        # zero-copy (rows, 64) view of the list column's values buffer
+        return arr.flatten().to_numpy().reshape(len(arr), _N_PERM)
 
+    def tile(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+        # transposed-contiguous int16 perm planes (measured 5x faster
+        # than row-major int64 planes at the hot-bucket shape)
+        A16 = np.ascontiguousarray(A.astype(np.int16).T)
+        B16 = np.ascontiguousarray(B.astype(np.int16).T)
+        agree = np.zeros((len(A), len(B)), dtype=np.int16)
+        for p in range(_N_PERM):
+            agree += A16[p, :, None] == B16[p, None, :]
+        return agree / float(_N_PERM) >= threshold
 
-def minhash_jaccard(sigs: DataFrame, candidates: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Estimated Jaccard for candidate pairs from signature agreement."""
-    a = sigs.select(F.col(id_col).alias("a"), F.col("signature").alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("b"), F.col("signature").alias("sig_b"))
-    joined = candidates.join(a, "a").join(b, "b")
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")), lambda v: v == 1
-        )
-    )
-    return joined.select(
-        "a", "b", (agree / F.lit(float(_N_PERM))).alias("jaccard_est")
-    )
-
-
-_PAIR_EST_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.LongType(), False),
-        T.StructField("b", T.LongType(), False),
-        T.StructField("jaccard_est", T.DoubleType(), False),
-    ]
-)
-
-#: pairwise-agreement block edge for the bucket-local verify: bounds
-#: peak kernel memory at ~(block^2 x 8 B) per perm plane regardless of
-#: bucket size (a hot bucket is processed as block-pair tiles)
-_VERIFY_BLOCK = 2048
-#: buckets below this member count take the batched pair-enumeration
-#: path (all of a group's small-bucket pairs through one vectorized
-#: compare); at or above it, the unique-collapse + block-tile path
-_VERIFY_SPLIT = 512
-#: buckets ABOVE this member count are not verified in one task at
-#: all: stage 1 re-emits their rows as (chunk_i, chunk_j) block-pair
-#: work items and a second grouped stage verifies each block pair —
-#: per-task work is bounded at ~cap^2 pair cells however large the
-#: bucket, the levenshtein block-join lesson applied to LSH buckets.
-#: When no bucket exceeds the cap (every scale measured so far), the
-#: second stage receives zero rows and costs one empty shuffle.
-_HOT_BUCKET_CAP = 8192
-
-_MINHASH_STAGE1_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.LongType(), True),
-        T.StructField("b", T.LongType(), True),
-        T.StructField("jaccard_est", T.DoubleType(), True),
-        T.StructField("band", T.IntegerType(), True),
-        T.StructField("bucket", T.IntegerType(), True),
-        T.StructField("ci", T.IntegerType(), True),
-        T.StructField("cj", T.IntegerType(), True),
-        T.StructField("_id", T.LongType(), True),
-        T.StructField("chunk", T.IntegerType(), True),
-        T.StructField("signature", T.ArrayType(T.LongType()), True),
-    ]
-)
-
-
-def _pair_agreement_emit(S, S16, ids, pi, pj, threshold, out_a, out_b, out_j):
-    """Chunked int16-prefilter + exact-recount agreement over explicit
-    row-index pair arrays; appends surviving (min, max, est) to the
-    out lists. Shared by the small-bucket batch and the hot block-pair
-    kernel so the two paths cannot drift."""
-    chunk = 1 << 21  # ~256 MB of int16 gather per tile
-    for c0 in range(0, len(pi), chunk):
-        pic, pjc = pi[c0: c0 + chunk], pj[c0: c0 + chunk]
-        agree = (S16[pic] == S16[pjc]).sum(axis=1, dtype=np.int16)
+    def exact(S: np.ndarray, pi: np.ndarray, pj: np.ndarray):
+        S16 = S.astype(np.int16)
+        agree = (S16[pi] == S16[pj]).sum(axis=1, dtype=np.int16)
         cand = np.flatnonzero(agree / float(_N_PERM) >= threshold)
-        if not len(cand):
-            continue
-        pic, pjc = pic[cand], pjc[cand]
-        exact = (S[pic] == S[pjc]).sum(axis=1)
-        est = exact / float(_N_PERM)
+        est = (S[pi[cand]] == S[pj[cand]]).sum(axis=1) / float(_N_PERM)
         keep = est >= threshold
-        if keep.any():
-            ia, ib = ids[pic[keep]], ids[pjc[keep]]
-            out_a.append(np.minimum(ia, ib))
-            out_b.append(np.maximum(ia, ib))
-            out_j.append(est[keep])
+        return cand[keep], est[keep]
 
-
-def _bucket_pairs_minhash(bands: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Bucket-local candidate generation + signature-agreement verify
-    in ONE grouped numpy kernel — the §8 rewrite of the old
-    self-join + distinct + signature-join shape, which at 10^5+ docs
-    shuffled the 512 B signature payload once per CANDIDATE PAIR
-    (O(sum of bucket^2) rows: measured 103M pairs / ~100 GB of shuffle
-    at the 100k-doc bench scale, for 62k surviving pairs).
-
-    Here the signature rides the (id, band, bucket) explode ONCE
-    (O(docs x bands) rows), buckets are verified in place with
-    vectorized agreement counts, and only pairs meeting ``threshold``
-    ever leave the kernel. Identical results by construction: the
-    candidate set (same-bucket pairs, a < b) and the estimate
-    (agreeing permutations / 64) are the same quantities the join
-    formulation computed.
-
-    Mechanics per (band, bucket) segment:
-    - rows with an IDENTICAL full signature are collapsed first
-      (np.unique on the raw signature bytes); within such a group every
-      pair agrees on all 64 perms (est exactly 1.0), and cross-group
-      estimates only need the unique-signature matrix — a hot bucket of
-      near-identical docs costs O(unique^2), not O(members^2);
-    - unique-signature agreement is computed in block tiles of
-      ``_VERIFY_BLOCK`` with one vectorized equality per perm plane;
-    - surviving (group, group) cells expand to id pairs (min, max) —
-      output volume is the true near-dup pair count, nothing else.
-
-    Buckets are grouped under a coarse deterministic key
-    (xxhash64(band, bucket) mod groups) so the grouped-map stage sees
-    O(parallelism x 32) groups instead of one Python call per bucket
-    (pure per-group overhead at millions of tiny buckets); a bucket
-    never straddles groups, so segmentation inside the kernel is
-    exact."""
-    spark = bands.sparkSession
-    n_groups = max(spark.sparkContext.defaultParallelism, 8) * 32
-
-    def _stage1_table(out_a, out_b, out_j, hot) -> pa.Table:
-        n_p = 0
-        cols: dict[str, object] = {}
-        if out_a:
-            a = np.concatenate(out_a)
-            b = np.concatenate(out_b)
-            j = np.concatenate(out_j)
-            n_p = len(a)
-        else:
-            a = b = np.empty(0, dtype=np.int64)
-            j = np.empty(0, dtype=np.float64)
-        if hot:
-            h_band = np.concatenate([h[0] for h in hot])
-            h_bucket = np.concatenate([h[1] for h in hot])
-            h_ci = np.concatenate([h[2] for h in hot])
-            h_cj = np.concatenate([h[3] for h in hot])
-            h_id = np.concatenate([h[4] for h in hot])
-            h_chunk = np.concatenate([h[5] for h in hot])
-            h_sig = np.concatenate([h[6] for h in hot])  # (rows, 64) stacked
-            n_h = len(h_id)
-        else:
-            n_h = 0
-        cols["a"] = pa.concat_arrays(
-            [pa.array(a, pa.int64()), pa.nulls(n_h, pa.int64())]
-        )
-        cols["b"] = pa.concat_arrays(
-            [pa.array(b, pa.int64()), pa.nulls(n_h, pa.int64())]
-        )
-        cols["jaccard_est"] = pa.concat_arrays(
-            [pa.array(j, pa.float64()), pa.nulls(n_h, pa.float64())]
-        )
-        if n_h:
-            cols["band"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_band.astype(np.int32))]
-            )
-            cols["bucket"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_bucket.astype(np.int32))]
-            )
-            cols["ci"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_ci.astype(np.int32))]
-            )
-            cols["cj"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_cj.astype(np.int32))]
-            )
-            cols["_id"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int64()), pa.array(h_id.astype(np.int64))]
-            )
-            cols["chunk"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.int32()), pa.array(h_chunk.astype(np.int32))]
-            )
-            sig_list = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_h + 1) * _N_PERM, pa.int32()),
-                pa.array(h_sig.reshape(-1), pa.int64()),
-            )
-            cols["signature"] = pa.concat_arrays(
-                [pa.nulls(n_p, pa.list_(pa.int64())), sig_list]
-            )
-        else:
-            cols["band"] = pa.nulls(n_p, pa.int32())
-            cols["bucket"] = pa.nulls(n_p, pa.int32())
-            cols["ci"] = pa.nulls(n_p, pa.int32())
-            cols["cj"] = pa.nulls(n_p, pa.int32())
-            cols["_id"] = pa.nulls(n_p, pa.int64())
-            cols["chunk"] = pa.nulls(n_p, pa.int32())
-            cols["signature"] = pa.nulls(n_p, pa.list_(pa.int64()))
-        return pa.table(
-            {f.name: cols[f.name] for f in _MINHASH_STAGE1_SCHEMA.fields}
-        )
-
-    def verify(tbl: pa.Table) -> pa.Table:
-        empty = _stage1_table([], [], [], [])
-        m = tbl.num_rows
-        if m < 2:
-            return empty
-        tbl = tbl.combine_chunks()
-        ids = tbl.column(id_col).to_numpy().astype(np.int64)
-        band = tbl.column("band").to_numpy()
-        bucket = tbl.column("bucket").to_numpy()
-        # zero-copy (n, 64) view of the list column's values buffer —
-        # no per-row ndarray materialization
-        sig_arr = tbl.column("signature").chunk(0)
-        S = sig_arr.flatten().to_numpy().reshape(m, _N_PERM)
-        order = np.lexsort((ids, bucket, band))
-        ids, band, bucket, S = ids[order], band[order], bucket[order], S[order]
-        seg_new = np.empty(m, dtype=bool)
-        seg_new[0] = True
-        seg_new[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
-        starts = np.flatnonzero(seg_new)
-        ends = np.append(starts[1:], m)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_j: list[np.ndarray] = []
-        hot: list[tuple] = []
-
-        def emit(a: np.ndarray, b: np.ndarray, est: float) -> None:
-            lo = np.minimum(a, b)
-            hi = np.maximum(a, b)
-            out_a.append(lo)
-            out_b.append(hi)
-            out_j.append(np.full(len(lo), est))
-
-        # Two regimes, identical semantics (the split is purely a cost
-        # model — both compute agreement over every same-bucket pair):
-        #
-        # SMALL segments (< _VERIFY_SPLIT members — the overwhelming
-        # majority: the bench-scale distribution has 397k buckets with
-        # median 2): enumerating each bucket's (i < j) member pairs and
-        # batching ALL of a group's pairs through ONE vectorized
-        # row-gather compare removes the per-bucket numpy-call floor
-        # (profiled at ~0.3 ms/bucket x 397k buckets = the whole stage).
-        #
-        # LARGE segments: identical full signatures are collapsed first
-        # (np.unique over the raw bytes — near-identical hot buckets
-        # then cost O(unique^2), not O(members^2)) and the unique
-        # matrix is compared in block tiles.
-        #
-        # Both regimes bulk-count agreement on the LOW 16 BITS of each
-        # perm value (4x less memory traffic than int64): truncation
-        # equality is implied by full equality, so the truncated count
-        # only ever OVER-estimates — no candidate is lost — and every
-        # candidate is re-counted exactly on the full values before
-        # anything is emitted.
-        S16 = S.astype(np.int16)
-        small_pi: list[np.ndarray] = []
-        small_pj: list[np.ndarray] = []
-        for s, e in zip(starts, ends):
-            mm = e - s
-            if mm < 2:
-                continue
-            if mm < _VERIFY_SPLIT:
-                ii, jj = np.triu_indices(mm, k=1)
-                small_pi.append(s + ii)
-                small_pj.append(s + jj)
-                continue
-            if mm > _HOT_BUCKET_CAP:
-                # too big to verify in one task: re-emit as block-pair
-                # work items for stage 2. Chunks are contiguous runs of
-                # the id-sorted segment (deterministic); each member is
-                # emitted once per chunk pair that includes its chunk,
-                # so every (x, y) pair lands in exactly one
-                # (min(cx,cy), max(cx,cy)) group.
-                nck = int(-(-mm // _HOT_BUCKET_CAP))  # ceil
-                chunk_of = (np.arange(mm, dtype=np.int64) * nck // mm).astype(np.int32)
-                rep_chunk = np.repeat(chunk_of, nck)
-                rep_j = np.tile(np.arange(nck, dtype=np.int32), mm)
-                hot.append((
-                    np.repeat(band[s:e], nck),
-                    np.repeat(bucket[s:e], nck),
-                    np.minimum(rep_chunk, rep_j),
-                    np.maximum(rep_chunk, rep_j),
-                    np.repeat(ids[s:e], nck),
-                    rep_chunk,
-                    np.repeat(S[s:e], nck, axis=0),
-                ))
-                continue
-            seg = np.ascontiguousarray(S[s:e])
-            seg_ids = ids[s:e]
-            # collapse identical signatures (memcmp-sorted void view)
-            void = seg.view([("", seg.dtype)] * seg.shape[1]).ravel()
-            _, first_idx, inv = np.unique(void, return_index=True, return_inverse=True)
-            u = len(first_idx)
-            U = seg[first_idx]
-            # member ids per unique-signature group
-            ginv_order = np.argsort(inv, kind="stable")
-            gbounds = np.searchsorted(inv[ginv_order], np.arange(u + 1))
-            members = [seg_ids[ginv_order[gbounds[g]: gbounds[g + 1]]] for g in range(u)]
-            # within-group pairs: est exactly 64/64
-            if 1.0 >= threshold:
-                for mem in members:
-                    k = len(mem)
-                    if k >= 2:
-                        ii, jj = np.triu_indices(k, k=1)
-                        emit(mem[ii], mem[jj], 1.0)
-            # cross-group agreement, block-tiled over transposed-
-            # contiguous int16 perm planes (measured 5x faster than
-            # row-major int64 planes at the hot-bucket shape)
-            U16T = np.ascontiguousarray(U.astype(np.int16).T)
-            for i0 in range(0, u, _VERIFY_BLOCK):
-                i1 = min(i0 + _VERIFY_BLOCK, u)
-                for j0 in range(i0, u, _VERIFY_BLOCK):
-                    j1 = min(j0 + _VERIFY_BLOCK, u)
-                    agree = np.zeros((i1 - i0, j1 - j0), dtype=np.int16)
-                    for p in range(_N_PERM):
-                        agree += U16T[p, i0:i1, None] == U16T[p, None, j0:j1]
-                    hit = agree / float(_N_PERM) >= threshold
-                    if i0 == j0:
-                        hit &= ~np.tri(*hit.shape, dtype=bool)  # strict upper
-                    gi, gj = np.nonzero(hit)
-                    if not len(gi):
-                        continue
-                    exact = (U[i0 + gi] == U[j0 + gj]).sum(axis=1)
-                    est_exact = exact / float(_N_PERM)
-                    for bi, bj, ex in zip(gi, gj, est_exact):
-                        if ex < threshold:
-                            continue
-                        A, B = members[i0 + bi], members[j0 + bj]
-                        emit(
-                            np.repeat(A, len(B)),
-                            np.tile(B, len(A)),
-                            float(ex),
-                        )
-        # one batched compare for every small-bucket pair in the group
-        if small_pi:
-            _pair_agreement_emit(
-                S, S16, ids,
-                np.concatenate(small_pi), np.concatenate(small_pj),
-                threshold, out_a, out_b, out_j,
-            )
-        return _stage1_table(out_a, out_b, out_j, hot)
-
-    def hot_verify(tbl: pa.Table) -> pa.Table:
-        """Stage 2: one (band, bucket, ci, cj) block pair — within-chunk
-        pairs when ci == cj, cross-chunk pairs otherwise. Same
-        prefilter+exact arithmetic as stage 1."""
-        empty = pa.table(
-            {"a": pa.array([], pa.int64()), "b": pa.array([], pa.int64()),
-             "jaccard_est": pa.array([], pa.float64())}
-        )
-        m = tbl.num_rows
-        if m < 2:
-            return empty
-        tbl = tbl.combine_chunks()
-        ids = tbl.column("_id").to_numpy().astype(np.int64)
-        chunk = tbl.column("chunk").to_numpy()
-        ci = int(tbl.column("ci")[0].as_py())
-        cj = int(tbl.column("cj")[0].as_py())
-        S = tbl.column("signature").chunk(0).flatten().to_numpy().reshape(m, _N_PERM)
-        S16 = S.astype(np.int16)
-        out_a: list[np.ndarray] = []
-        out_b: list[np.ndarray] = []
-        out_j: list[np.ndarray] = []
-        if ci == cj:
-            pi, pj = np.triu_indices(m, k=1)
-        else:
-            ai = np.flatnonzero(chunk == ci)
-            bi = np.flatnonzero(chunk == cj)
-            pi = np.repeat(ai, len(bi))
-            pj = np.tile(bi, len(ai))
-        _pair_agreement_emit(S, S16, ids, pi, pj, threshold, out_a, out_b, out_j)
-        if not out_a:
-            return empty
-        return pa.table(
-            {"a": pa.array(np.concatenate(out_a), pa.int64()),
-             "b": pa.array(np.concatenate(out_b), pa.int64()),
-             "jaccard_est": pa.array(np.concatenate(out_j), pa.float64())}
-        )
-
-    grouped = bands.withColumn(
-        "_grp", F.pmod(F.xxhash64("band", "bucket"), F.lit(n_groups))
-    )
-    # stage 1 feeds two consumers (verified pairs + hot work items);
-    # without a barrier each branch would re-run the verify kernel.
-    # Its output is tiny (surviving pairs + usually-zero hot rows), so
-    # an eager localCheckpoint pins one computation — NOT a result
-    # cache: it is recomputed from the parquet inputs on every fresh
-    # plan (each bench attempt builds a new one).
-    stage1 = grouped.groupBy("_grp").applyInArrow(
-        verify, _MINHASH_STAGE1_SCHEMA
-    ).localCheckpoint(eager=True)
-    verified = stage1.filter(F.col("a").isNotNull()).select("a", "b", "jaccard_est")
-    # runtime-adaptive stage 2 (the AQE idea, hand-rolled): stage 1 is
-    # already materialized, so probing for hot work items costs one
-    # ~ms job over checkpointed rows; at every scale measured so far
-    # there are none and the pipeline stays one grouped stage
-    has_hot = bool(
-        stage1.filter(F.col("_id").isNotNull()).limit(1).take(1)
-    )
-    if has_hot:
-        hot_items = stage1.filter(F.col("_id").isNotNull()).select(
-            "band", "bucket", "ci", "cj", "_id", "chunk", "signature"
-        )
-        hot_pairs = hot_items.groupBy("band", "bucket", "ci", "cj").applyInArrow(
-            hot_verify, _PAIR_EST_SCHEMA
-        )
-        verified = verified.unionByName(hot_pairs)
-    # a pair found in k bands carries the identical estimate k times
-    return verified.dropDuplicates(["a", "b"])
+    return lsh.Scorer(read, tile, exact, "jaccard_est", T.DoubleType())
 
 
 def near_duplicates_minhash(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", threshold: float = 0.7,
-                            persist_signatures: bool = True,
                             materialize: bool = True) -> DataFrame:
-    """End-to-end MinHash near-dup: signatures -> LSH banding ->
-    bucket-local agreement verify -> threshold filter.
+    """End-to-end MinHash near-dup: signatures -> 16-band LSH ->
+    bucket-local signature-agreement verify (pipeline.lsh) -> pairs
+    ``(a, b, jaccard_est)`` with ``a < b`` and estimate (agreeing
+    permutations / 64) >= ``threshold``.
 
-    Round-6 shape: the signature column rides the banding explode and
-    buckets verify IN PLACE (``_bucket_pairs_minhash``), so signatures
-    cross the shuffle once per (doc, band) — O(corpus) — instead of
-    once per candidate pair (O(sum of bucket^2); the old join shape
-    measured 103M candidate rows for 62k surviving pairs at the
-    100k-doc bench scale). The signature kernel feeds exactly one
-    consumer now, so no signature cache exists in any mode:
-    ``persist_signatures`` is retained for API compatibility but has
-    nothing left to persist, and the ``release_lazy_caches()`` registry
-    stays empty on this path. With ``materialize=True`` (default) the
-    (tiny: id-pair) result is still forced via an eager
-    localCheckpoint so multi-action callers (CC builds edges from it
-    twice) never recompute the sweep; ``materialize=False`` returns
-    the lazy single-action plan the bench/driver entries consume.
+    The signature rides the banding explode, so it crosses the shuffle
+    once per (doc, band) — O(corpus) — never once per candidate pair
+    (the old self-join shape measured 103M candidate rows for 62k
+    surviving pairs at the 100k-doc bench scale). The candidate set is
+    every same-bucket pair of distinct ids.
 
-    Results are identical to the join formulation: candidate set =
-    same-bucket pairs (a < b), estimate = agreeing permutations / 64,
-    kept iff estimate >= threshold.
+    ``materialize=True`` (default) forces the (tiny: id-pair) result
+    through an eager localCheckpoint, so multi-action callers (CC
+    builds edges from it twice) never recompute the sweep.
+    ``materialize=False`` returns a lazy plan: building it runs no
+    Spark job, and the sweep runs inside the caller's single action.
 
     No global sort: the result is a pair SET (deterministic content);
     callers needing a stable order sort the (tiny) output themselves.
     """
     sigs = minhash_signatures(df, text_col, id_col)
     bands = _band_table(sigs, id_col, n_bands=16, carry=("signature",))
-    est = _bucket_pairs_minhash(bands, id_col, threshold)
-    out = est.filter(F.col("jaccard_est") >= threshold)
+    out = lsh.bucket_pairs(bands, id_col, "signature", _minhash_scorer(threshold))
     if materialize:
         out = out.localCheckpoint(eager=True)
     return out
@@ -979,6 +547,33 @@ def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     return _spread_small_input(df.select(id_col, text_col)).mapInArrow(gen, out_schema)
 
 
+#: set-bit count of every byte value (numpy 1.26 has no bitwise_count)
+_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+
+
+def _simhash_scorer(max_hamming: int) -> lsh.Scorer:
+    """Hamming distance between 64-bit signatures, kept iff <=
+    ``max_hamming``: XOR, then a byte-LUT popcount. The tile step is
+    already exact."""
+
+    def hamming(x: np.ndarray) -> np.ndarray:
+        x = np.ascontiguousarray(x)
+        return _POP8[x.view(np.uint8)].reshape(*x.shape, 8).sum(axis=-1, dtype=np.int32)
+
+    def read(arr: pa.Array) -> np.ndarray:
+        return arr.to_numpy().reshape(len(arr), 1)
+
+    def tile(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+        return hamming(A[:, 0, None] ^ B[None, :, 0]) <= max_hamming
+
+    def exact(X: np.ndarray, pi: np.ndarray, pj: np.ndarray):
+        ham = hamming(X[pi, 0] ^ X[pj, 0])
+        keep = np.flatnonzero(ham <= max_hamming)
+        return keep, ham[keep]
+
+    return lsh.Scorer(read, tile, exact, "hamming", T.IntegerType())
+
+
 def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup via block LSH: the 64-bit signature splits into
@@ -989,12 +584,18 @@ def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
     4-block layout silently lost the recall guarantee at
     ``max_hamming >= 4``); the default 3 keeps the classic 4x16-bit
     layout bit-for-bit. Capped at 15 (16 x 4-bit blocks): beyond that
-    each block key carries so little entropy the candidate join
-    degenerates toward all-pairs — raise, don't silently scan."""
+    each block key carries so little entropy its buckets degenerate
+    toward all-pairs — raise, don't silently scan.
+
+    The blocks are the bands of the shared bucket-local verify
+    (pipeline.lsh): each (block, value) bucket scores its own pairs by
+    XOR + popcount on the carried signature, so no candidate pair
+    crosses the shuffle. Output: ``(a, b, hamming)`` with ``a < b`` and
+    ``hamming <= max_hamming``."""
     if not 0 <= max_hamming <= 15:
         raise ValueError(
             f"max_hamming={max_hamming} out of range [0, 15]: block LSH needs "
-            "max_hamming+1 blocks of >=4 bits each for a selective candidate join"
+            "max_hamming+1 blocks of >=4 bits each for selective buckets"
         )
     n_blocks = max_hamming + 1
     # near-equal widths summing to 64 (e.g. 4 blocks -> 16/16/16/16,
@@ -1019,30 +620,10 @@ def near_duplicates_simhash(df: DataFrame, text_col: str = "text",
                     for i in range(n_blocks)
                 ]
             )
-        ).alias("block", "block_val"),
+        ).alias("band", "bucket"),
     )
-    l, r = blocks.alias("l"), blocks.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.block") == F.col("r.block"))
-            & (F.col("l.block_val") == F.col("r.block_val"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("a"),
-            F.col(f"r.{id_col}").alias("b"),
-            F.col("l.simhash").alias("ha"),
-            F.col("r.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     # no global sort in the hot path — the result is a pair set
-    return (
-        cands.select("a", "b", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return lsh.bucket_pairs(blocks, id_col, "simhash", _simhash_scorer(max_hamming))
 
 
 # ---------------------------------------------------------------------------

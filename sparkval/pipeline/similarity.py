@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from sparkval.pipeline import lsh
+
 _TOPK_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.LongType(), False),
@@ -108,10 +110,9 @@ def lsh_bands(
     ~n/2^P so candidate generation never goes quadratic.
 
     Scale shape: output is ONLY (id, band, bucket) — embeddings never
-    round-trip through Python or the shuffle; candidate join volume is
-    L x (bucket-local pairs). ``keep_vec=True`` additionally carries
-    the vector column on each banding row (O(n x L x dim) — linear,
-    for the bucket-local verify that replaces per-pair vector joins).
+    enter the shuffle. ``keep_vec=True`` additionally carries the
+    vector column on each banding row (O(n x L x dim) — linear, for
+    the bucket-local verify that replaces per-pair vector joins).
     """
     rng = np.random.default_rng(seed)
     planes = rng.normal(size=(n_tables * n_planes, dim))
@@ -146,38 +147,6 @@ def lsh_bands(
             yield pd.DataFrame(out)
 
     return df.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def cosine_pairs_exact(
-    embeddings: DataFrame,
-    candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine for candidate (a, b) pairs with built-ins only:
-    zip_with dot product + aggregate norms (JVM, no UDF).
-
-    Norms are hoisted to one pass over the EMBEDDING rows (O(n)) and
-    joined in, instead of recomputed inside every pair expression —
-    candidate pairs outnumber rows by the mean bucket size, so the
-    naive form did ~3x the vector work on the pair table."""
-    def dot(x, y):
-        return F.aggregate(F.zip_with(x, y, lambda p, q: p * q),
-                           F.lit(0.0), lambda acc, v: acc + v.cast("double"))
-
-    with_norm = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        F.sqrt(dot(vec_col, vec_col)).alias("_norm"),
-    )
-    a = with_norm.select(
-        F.col(id_col).alias("a"), F.col(vec_col).alias("va"), F.col("_norm").alias("na")
-    )
-    b = with_norm.select(
-        F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), F.col("_norm").alias("nb")
-    )
-    joined = candidates.select("a", "b").join(a, "a").join(b, "b")
-    cos = dot("va", "vb") / (F.col("na") * F.col("nb"))
-    return joined.select("a", "b", F.round(cos, 9).alias("cosine"))
 
 
 def _kmeans_lite(sample: np.ndarray, k: int, iters: int = 8) -> np.ndarray:
@@ -547,109 +516,60 @@ def ivf_topk(
     )
 
 
-_PAIR_COS_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.LongType(), False),
-        T.StructField("b", T.LongType(), False),
-        T.StructField("cosine", T.DoubleType(), False),
-    ]
-)
-
-#: absolute margin for the fast matmul pre-filter inside the
-#: bucket-local verify: float32-product arithmetic differs from the
-#: float64 matmul by at most ~64 ulp(f32) ≈ 2e-7 for unit-norm
-#: vectors, so a 1e-6 band cannot drop a pair the exact arithmetic
-#: (or its 9-decimal rounding, max +5e-10) would keep
+#: absolute margin for the matmul prefilter of the bucket-local verify.
+#: The exact arithmetic forms each product x_i*y_i in the input element
+#: dtype (float32: relative error <= 2^-24 per product) and folds in
+#: float64; the prefilter multiplies float64 normalized values. The
+#: product errors are weighted by sum|x_i*y_i| <= |x||y|
+#: (Cauchy-Schwarz), so the dot differs by at most 2^-24 |x||y|, and
+#: the float32-square norms add at most ~2^-24 relative more: the two
+#: cosines differ by <= ~1.2e-7, plus float64 fold noise (~dim x 2^-53)
+#: and the 9-decimal rounding (<= 5e-10). A 1e-6 band therefore cannot
+#: drop a pair the exact arithmetic would keep, with ~8x headroom.
 _COS_MARGIN = 1e-6
 
 
-def _bucket_pairs_cosine(
-    bands: DataFrame, id_col: str, vec_col: str, threshold: float
-) -> DataFrame:
-    """Bucket-local candidate generation + exact cosine verify in one
-    grouped numpy kernel — the §8 rewrite of the old self-join +
-    distinct + two vector joins, which shuffled the embedding payload
-    once per candidate pair (measured 29M distinct pairs for 20k
-    surviving ones at the 40k-vector bench scale).
-
-    Per (band, bucket) segment: a normalized float64 matmul scores all
-    local pairs; pairs within ``_COS_MARGIN`` of ``threshold`` or
-    above are then re-scored with BIT-EXACT legacy arithmetic — the
+def _cosine_scorer(threshold: float) -> lsh.Scorer:
+    """Cosine between embedding payloads. The tile prefilter is a
+    normalized float64 matmul at ``threshold - _COS_MARGIN``; the exact
+    step recomputes the legacy per-pair arithmetic BIT-EXACTLY — the
     products in the input element dtype (zip_with multiplies floats as
-    floats), accumulated left-to-right in float64 (np.cumsum ==
-    the JVM aggregate fold), norms likewise — so the emitted cosine is
-    bit-identical to cosine_pairs_exact's pre-rounding value. Rounding
-    and the threshold filter stay JVM-side, unchanged. Pairs below the
-    margin cannot reach ``threshold`` after rounding, so the result
-    set is exactly the join formulation's."""
-    spark = bands.sparkSession
-    n_groups = max(spark.sparkContext.defaultParallelism, 8) * 32
+    floats), accumulated left-to-right in float64 (np.cumsum == the JVM
+    aggregate fold), norms likewise — and keeps cosines at or above the
+    same cut. Rounding and the threshold filter stay JVM-side, so the
+    result set is exactly the old per-pair join formulation's.
 
-    import pyarrow as pa
+    Buckets from 16 members up take the tile path: a per-pair gather of
+    dim-wide rows then costs more than one small matmul per bucket
+    (measured at 64 dims: 16 members 0.19 ms as pairs vs 0.23 ms as a
+    tile; 156 members, the 40k-vector shape, 6x faster as tiles)."""
+    cut = threshold - _COS_MARGIN
 
-    def verify(tbl: pa.Table) -> pa.Table:
-        empty = pa.table(
-            {"a": pa.array([], pa.int64()), "b": pa.array([], pa.int64()),
-             "cosine": pa.array([], pa.float64())}
-        )
-        m = tbl.num_rows
-        if m < 2:
-            return empty
-        tbl = tbl.combine_chunks()
-        ids = tbl.column(id_col).to_numpy().astype(np.int64)
-        band = tbl.column("band").to_numpy()
-        bucket = tbl.column("bucket").to_numpy()
-        # zero-copy (n, dim) view in the NATIVE element dtype — the
+    def norms(V: np.ndarray) -> np.ndarray:
+        return np.sqrt(np.cumsum((V * V).astype(np.float64), axis=1)[:, -1])
+
+    def read(arr) -> np.ndarray:
+        # zero-copy (rows, dim) view in the NATIVE element dtype — the
         # exact values the legacy per-pair expressions saw
-        vec_arr = tbl.column(vec_col).chunk(0)
-        flat = vec_arr.flatten().to_numpy()
-        V = flat.reshape(m, len(flat) // m)
-        order = np.lexsort((ids, bucket, band))
-        ids, band, bucket, V = ids[order], band[order], bucket[order], V[order]
-        # exact norms, legacy arithmetic: element-dtype squares,
-        # float64 left-fold
-        sq = V * V
-        norms = np.sqrt(np.cumsum(sq.astype(np.float64), axis=1)[:, -1])
-        Vn = V.astype(np.float64) / np.maximum(norms, 1e-300)[:, None]
-        seg_new = np.empty(m, dtype=bool)
-        seg_new[0] = True
-        seg_new[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
-        starts = np.flatnonzero(seg_new)
-        ends = np.append(starts[1:], m)
-        out: list[tuple] = []
-        cut = threshold - _COS_MARGIN
-        blk = 4096  # bounds the matmul tile at ~128 MB f64 per task
-        for s, e in zip(starts, ends):
-            if e - s < 2:
-                continue
-            for i0 in range(s, e, blk):
-                for j0 in range(i0, e, blk):
-                    sims = Vn[i0: min(i0 + blk, e)] @ Vn[j0: min(j0 + blk, e)].T
-                    hit = sims >= cut
-                    if i0 == j0:
-                        hit &= ~np.tri(*hit.shape, dtype=bool)  # strict upper
-                    ii, jj = np.nonzero(hit)
-                    if not len(ii):
-                        continue
-                    gi, gj = i0 + ii, j0 + jj
-                    prods = (V[gi] * V[gj]).astype(np.float64)
-                    dots = np.cumsum(prods, axis=1)[:, -1]
-                    cos = dots / (norms[gi] * norms[gj])
-                    out.append((ids[gi], ids[gj], cos))
-        if not out:
-            return empty
-        return pa.table(
-            {"a": pa.array(np.concatenate([o[0] for o in out]), pa.int64()),
-             "b": pa.array(np.concatenate([o[1] for o in out]), pa.int64()),
-             "cosine": pa.array(np.concatenate([o[2] for o in out]), pa.float64())}
-        )
+        return arr.flatten().to_numpy().reshape(len(arr), -1)
 
-    grouped = bands.withColumn(
-        "_grp", F.pmod(F.xxhash64("band", "bucket"), F.lit(n_groups))
-    )
-    pairs = grouped.groupBy("_grp").applyInArrow(verify, _PAIR_COS_SCHEMA)
-    # a pair surfacing from k tables carries the identical exact cosine
-    return pairs.dropDuplicates(["a", "b"])
+    def unit(A: np.ndarray) -> np.ndarray:
+        # any float64 summation order is fine here: the prefilter only
+        # has to stay within _COS_MARGIN of the exact fold
+        A = A.astype(np.float64)
+        return A / np.maximum(np.sqrt(np.einsum("ij,ij->i", A, A)), 1e-300)[:, None]
+
+    def tile(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+        return unit(A) @ unit(B).T >= cut
+
+    def exact(V: np.ndarray, pi: np.ndarray, pj: np.ndarray):
+        nv = norms(V)
+        dots = np.cumsum((V[pi] * V[pj]).astype(np.float64), axis=1)[:, -1]
+        cos = dots / (nv[pi] * nv[pj])
+        keep = np.flatnonzero(cos >= cut)
+        return keep, cos[keep]
+
+    return lsh.Scorer(read, tile, exact, "cosine", T.DoubleType(), pair_split=16)
 
 
 def near_duplicates_cosine(
@@ -666,20 +586,19 @@ def near_duplicates_cosine(
 
     Candidates from ANY of the ``n_tables`` hash tables survive
     (recall ≈ 1-(1-p)^L, see lsh_bands); false positives cost only an
-    exact-cosine verification, never a wrong answer. Round-6 shape:
-    the vector rides the banding rows (O(n x L), linear) and each
-    bucket verifies in place (``_bucket_pairs_cosine``) instead of
-    emitting candidate (a, b) rows and joining the vector payload back
-    per pair — at the 40k-vector bench scale the join shape shuffled
-    29M candidate rows to keep 20k. Emitted cosines are bit-identical
-    to cosine_pairs_exact (same products, same fold order, same
-    9-decimal rounding applied here), so the surviving pair set is
-    unchanged. No global sort: output is a pair SET (callers order if
-    needed)."""
+    exact-cosine verification, never a wrong answer. The vector rides
+    the banding rows (O(n x L), linear) and each bucket verifies in
+    place (pipeline.lsh.bucket_pairs) instead of emitting candidate
+    (a, b) rows and joining the vector payload back per pair — at the
+    40k-vector bench scale the join shape shuffled 29M candidate rows
+    to keep 20k. Emitted cosines are bit-identical to the zip_with /
+    aggregate per-pair expression (same products, same fold order),
+    rounded to 9 decimals here. No global sort: output is a pair SET
+    (callers order if needed)."""
     b = lsh_bands(
         embeddings, id_col, vec_col, n_planes, n_tables, dim, keep_vec=True
     )
-    exact = _bucket_pairs_cosine(b, id_col, vec_col, threshold)
+    exact = lsh.bucket_pairs(b, id_col, vec_col, _cosine_scorer(threshold))
     return exact.select(
         "a", "b", F.round("cosine", 9).alias("cosine")
     ).filter(F.col("cosine") >= threshold)
@@ -913,20 +832,19 @@ def bit_lsh_near_dups(
     band_bits: int = 4,
 ) -> DataFrame:
     """Near-duplicate pairs via bit-sampling LSH + exact cosine
-    verify, end-to-end in JVM built-ins (zero Python): candidates =
-    pairs sharing ANY band bucket (OR-amplified), verified with the
-    exact zip_with/aggregate cosine and kept at round(cos, 9) >=
-    ``threshold``.
+    verify: candidates = pairs sharing ANY band bucket (OR-amplified),
+    verified with the exact zip_with/aggregate cosine arithmetic and
+    kept at round(cos, 9) >= ``threshold``.
 
-    Scale shape (round 6): band projection is a map-only expression;
-    the vector rides the banding rows (O(n x bands), linear) and each
-    (band, bucket) verifies IN PLACE via the shared bucket-local
-    kernel (``_bucket_pairs_cosine``) instead of emitting candidate
-    (a, b) rows and joining the vector payload back per pair — with
-    2^band_bits buckets per band the candidate join was
-    O(n^2 x bands / 2^band_bits) rows (~400M at 40k vectors; the join
-    shape did not finish inside 10 minutes at that scale, the kernel
-    runs in seconds). Embeddings are cast to array<double> before any
+    Scale shape: band projection is a map-only JVM expression (no
+    Python); the vector rides the banding rows (O(n x bands), linear)
+    and each (band, bucket) verifies IN PLACE in the shared
+    bucket-local Arrow kernel (pipeline.lsh.bucket_pairs) instead of
+    emitting candidate (a, b) rows and joining the vector payload back
+    per pair — with 2^band_bits buckets per band the candidate join
+    was O(n^2 x bands / 2^band_bits) rows (~400M at 40k vectors; the
+    join shape did not finish inside 10 minutes at that scale, the
+    kernel runs in seconds). Embeddings are cast to array<double> before any
     arithmetic, and the kernel reproduces the zip_with/aggregate
     float64 fold bit-for-bit, so the verify still matches the float64
     SQL oracle exactly.
@@ -935,7 +853,7 @@ def bit_lsh_near_dups(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
     )
     bands = bit_lsh_bands(dbl, id_col, vec_col, n_bands, band_bits, keep_vec=True)
-    exact = _bucket_pairs_cosine(bands, id_col, vec_col, threshold)
+    exact = lsh.bucket_pairs(bands, id_col, vec_col, _cosine_scorer(threshold))
     return exact.select(
         "a", "b", F.round("cosine", 9).alias("cosine")
     ).filter(F.col("cosine") >= threshold)

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 from sparkval import tdigest
 from sparkval.config import ValidationConfig
 from sparkval.histograms import prepared_scan
+from sparkval.session import _spread_small_input
 
 
 def array_total(col) -> F.Column:
@@ -442,14 +443,14 @@ def countmin_sketches(
         )
 
     # spread a few-partition input before the Python sketch kernel
-    # (no-op whenever partitions >= slots — see _spread_narrow_scan).
+    # (no-op whenever partitions >= slots — see _spread_small_input).
     # The value column is cast to STRING (no-op for string inputs):
     # the Python hasher encodes utf-8 and the codegen estimate expr
     # hashes the string bytes, so a non-string column would either
     # crash the executor (AttributeError in term_hash) or disagree
     # with the expression side — the cast aligns both by
     # construction (ADVICE r5)
-    part = _spread_narrow_scan(
+    part = _spread_small_input(
         df.select(*group_cols, F.col(col).cast("string").alias(col))
     ).mapInPandas(partials, schema)
     return part.groupBy(*group_cols).applyInPandas(merge, schema)
@@ -574,14 +575,14 @@ def bloom_filters(
         )
 
     # spread a few-partition input before the Python sketch kernel
-    # (no-op whenever partitions >= slots — see _spread_narrow_scan).
+    # (no-op whenever partitions >= slots — see _spread_small_input).
     # The value column is cast to STRING (no-op for string inputs):
     # the Python hasher encodes utf-8 and the codegen estimate expr
     # hashes the string bytes, so a non-string column would either
     # crash the executor (AttributeError in term_hash) or disagree
     # with the expression side — the cast aligns both by
     # construction (ADVICE r5)
-    part = _spread_narrow_scan(
+    part = _spread_small_input(
         df.select(*group_cols, F.col(col).cast("string").alias(col))
     ).mapInPandas(partials, schema)
     return part.groupBy(*group_cols).applyInPandas(merge, schema)
@@ -728,7 +729,7 @@ def kmv_sketches(
     # core, not on 1-2 scan partitions (no-op at scale)
     # string cast: same hashing-alignment contract as
     # countmin_sketches (no-op for string values)
-    part = _spread_narrow_scan(df).select(
+    part = _spread_small_input(df).select(
         *group_cols, value.cast("string").alias("_v")
     ).mapInPandas(partials, schema)
     return part.groupBy(*group_cols).applyInPandas(merge, schema)
@@ -1284,22 +1285,6 @@ def correlation_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def _spread_narrow_scan(df: DataFrame) -> DataFrame:
-    """Small-input fast path for Expand-heavy aggregates (multi-distinct
-    plans copy every row once per distinct group BEFORE the first
-    partial agg): a table stored as a couple of parquet files arrives
-    as 1-3 scan partitions and serializes that copy+hash work onto as
-    many cores. Repartition ONLY when the scan is narrower than the
-    cluster — at web scale the input always has >> slots partitions
-    and this never fires (same contract as dedup._spread_small_input;
-    measured 12.5 s -> 5.0 s for the 6-column lineitem profile at
-    local[32]; the residual is the genuine distinct shuffle)."""
-    slots = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < slots:
-        return df.repartition(slots)
-    return df
-
-
 def key_candidates(
     df: DataFrame, candidates: list[tuple[str, ...]]
 ) -> DataFrame:
@@ -1326,7 +1311,7 @@ def key_candidates(
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, cand in enumerate(candidates):
         aggs.append(F.countDistinct(*cand).alias(f"__d_{i}"))
-    wide = _spread_narrow_scan(df).agg(*aggs)
+    wide = _spread_small_input(df).agg(*aggs)
     stack_args = ", ".join(
         f"'{'+'.join(cand)}', __d_{i}" for i, cand in enumerate(candidates)
     )
@@ -1600,7 +1585,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         aggs.append(F.countDistinct(F.col(c)).alias(f"__d_{i}"))
         aggs.append(F.min(F.col(c)).cast("string").alias(f"__mn_{i}"))
         aggs.append(F.max(F.col(c)).cast("string").alias(f"__mx_{i}"))
-    wide = _spread_narrow_scan(df.select(*cols)).agg(*aggs)
+    wide = _spread_small_input(df.select(*cols)).agg(*aggs)
     stack_args = ", ".join(
         f"'{c}', __nn_{i}, __d_{i}, __mn_{i}, __mx_{i}"
         for i, c in enumerate(cols)

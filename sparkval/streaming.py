@@ -305,7 +305,8 @@ def stream_contamination_gate(
     stay idempotent. Because the per-doc probe is independent of
     batching, summing n_flagged over the log equals the batch-mode
     flagged count exactly."""
-    from sparkval.pipeline.dedup import _gram_exprs, _spread_small_input
+    from sparkval.pipeline.dedup import _gram_exprs
+    from sparkval.session import _spread_small_input
     from sparkval.stats import bloom_h0_contains_expr, bloom_h0_expr
 
     filt = bloom_filter.select("filter")

@@ -6,9 +6,9 @@
 2. deterministic_order capped path: rows equal on every atomic column
    but differing in an array column no longer flap across the limit
    boundary (non-atomic hash tiebreak).
-3. near_duplicates_minhash materialize=False: lazy plan, caller-owned
-   cache (the round-3 bench-regression opt-out); default still leaves
-   zero cached tables behind.
+3. near_duplicates_minhash materialize=False: lazy plan (the round-3
+   bench-regression opt-out); neither mode leaves a cached table
+   behind.
 """
 
 import pytest
@@ -101,14 +101,17 @@ def test_minhash_materialize_false_leaves_cache_to_caller(spark):
         [(i, f"shared shingle stream number {i % 2} " * 8) for i in range(20)],
         ["doc_id", "text"],
     )
+    spark.catalog.clearCache()
+    jsc = spark._jsparkSession.sharedState().cacheManager()
     out = near_duplicates_minhash(docs, threshold=0.5, materialize=False)
-    # lazy: the pair dedup + threshold filter still sit above the
-    # (checkpointed) bucket-verify sweep — a materialize=True result
-    # would have collapsed to a bare scan of checkpointed RDD blocks
+    # lazy: the pair dedup still sits above the bucket-verify sweep — a
+    # materialize=True result collapses to a bare scan of checkpointed
+    # RDD blocks
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Aggregate" in plan, plan  # the dropDuplicates
     assert out.count() > 0
-    spark.catalog.clearCache()
+    # the verify consumes signatures once, in-plan: no cache in either mode
+    assert jsc.isEmpty()
 
     # default path: hygiene unchanged — checkpointed (no lineage) and
     # no cached tables survive
@@ -116,5 +119,4 @@ def test_minhash_materialize_false_leaves_cache_to_caller(spark):
     plan2 = out2._jdf.queryExecution().optimizedPlan().toString()
     assert "Aggregate" not in plan2, plan2
     assert out2.count() > 0
-    jsc = spark._jsparkSession.sharedState().cacheManager()
     assert jsc.isEmpty()

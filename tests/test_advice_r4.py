@@ -5,9 +5,8 @@
    another single_resolution setting) must not crash the batched
    np.stack — mismatched rows demote to the cold path and score
    bit-identically to a band-less baseline.
-2. near_duplicates_minhash(materialize=False) registers its persisted
-   signature table with pipeline.dedup.release_lazy_caches() so lazy
-   one-shot plans have a cache owner.
+2. (retired: near_duplicates_minhash no longer caches signatures in
+   any mode — tests/test_advice_r3.py pins the empty cache manager.)
 3. save_baseline on a band-carrying baseline with neither an explicit
    config nor a surviving breadcrumb warns at SAVE time (the sidecar
    records build_config null).
@@ -80,54 +79,6 @@ def test_warm_all_alien_lengths_equal_cold(spark, corpus):
     a = got.set_index(["repo_bucket", "lang"])["score"].sort_index()
     b = cold.set_index(["repo_bucket", "lang"])["score"].sort_index()
     assert np.array_equal(a.to_numpy(), b.to_numpy())
-
-
-def test_release_lazy_caches_owns_materialize_false_sigs(spark):
-    from sparkval.pipeline import dedup
-
-    dedup.release_lazy_caches()  # drain registrations from other tests
-    spark.catalog.clearCache()
-    docs = spark.createDataFrame(
-        [(i, f"shared shingle stream number {i % 2} " * 8) for i in range(20)],
-        ["doc_id", "text"],
-    )
-    # round 6: the bucket-local verify consumes signatures exactly once
-    # in-plan, so NEITHER mode creates a signature cache — the registry
-    # stays empty and the cache manager is clean throughout (the
-    # ownership problem this ADVICE item flagged no longer exists on
-    # this path)
-    out = dedup.near_duplicates_minhash(docs, threshold=0.5, materialize=False)
-    assert not dedup._LAZY_PERSISTED
-    assert out.count() > 0
-    jsc = spark._jsparkSession.sharedState().cacheManager()
-    assert jsc.isEmpty()
-    assert dedup.release_lazy_caches() == 0
-    # default materialize=True path never registers either
-    out2 = dedup.near_duplicates_minhash(docs, threshold=0.5)
-    assert out2.count() > 0
-    assert not dedup._LAZY_PERSISTED and jsc.isEmpty()
-
-
-def test_entry_loader_drains_stale_lazy_caches(spark, sf_dir):
-    """__spark_entry__._t (the first call of every entry query) drains
-    lazy caches left by a previous query's materialize=False plan."""
-    import __spark_entry__ as entry
-
-    from sparkval.pipeline import dedup
-
-    dedup.release_lazy_caches()
-    spark.catalog.clearCache()
-    # round 6: near_duplicates_minhash no longer registers lazy caches
-    # (no signature cache exists); plant one directly so the loader's
-    # drain contract — any registered lazy table is released by the
-    # first _t of the next query — stays pinned for future registrants
-    planted = spark.createDataFrame([(1, "a b c " * 10), (2, "a b c " * 10)],
-                                    ["doc_id", "text"]).persist()
-    planted.count()
-    dedup._LAZY_PERSISTED.append(planted)
-    entry._t(spark, sf_dir, "region").count()
-    assert not dedup._LAZY_PERSISTED
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_save_baseline_warns_when_breadcrumb_lost(spark, corpus, tmp_path):

@@ -92,32 +92,3 @@ def test_sketches_accept_non_string_values(spark):
     a = merge_countmin(cm, []).first()["sketch"]
     b = merge_countmin(cm2, []).first()["sketch"]
     assert list(a) == list(b)
-
-
-def test_minhash_hot_bucket_block_pairs_match_normal_path(spark, monkeypatch):
-    """The stage-2 block-pair decomposition for oversized buckets must
-    emit EXACTLY the pair set (and estimates) of the single-task path:
-    force every bucket through it by shrinking the cap, and compare
-    against the default run on the same corpus."""
-    from sparkval.pipeline import dedup
-
-    rows = []
-    base = "the quick brown fox jumps over the lazy dog again and again "
-    for i in range(40):
-        rows.append((i, base + f"tail {i % 4}"))           # 4 near-dup cliques
-        rows.append((1000 + i, base + f"tail {i % 4} !"))  # near copies
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    normal = {
-        (r["a"], r["b"]): r["jaccard_est"]
-        for r in dedup.near_duplicates_minhash(df, threshold=0.5).collect()
-    }
-    assert normal, "fixture must actually produce near-dup pairs"
-
-    monkeypatch.setattr(dedup, "_HOT_BUCKET_CAP", 6)
-    monkeypatch.setattr(dedup, "_VERIFY_SPLIT", 4)
-    hot = {
-        (r["a"], r["b"]): r["jaccard_est"]
-        for r in dedup.near_duplicates_minhash(df, threshold=0.5).collect()
-    }
-    assert hot == normal

@@ -119,9 +119,9 @@ def test_minhash_finds_near_dups(spark, dup_docs):
 
 
 def test_minhash_est_close_to_exact_jaccard(spark, dup_docs):
-    sigs = dedup.minhash_signatures(dup_docs)
-    cands = dedup.minhash_candidates(sigs)
-    est = dedup.minhash_jaccard(sigs, cands).toPandas().set_index(["a", "b"])
+    # threshold 0: every same-bucket candidate pair with its estimate
+    cands = dedup.near_duplicates_minhash(dup_docs, threshold=0.0)
+    est = cands.toPandas().set_index(["a", "b"])
     exact = dedup.ngram_jaccard_exact(dup_docs, cands, n=1).toPandas().set_index(["a", "b"])
     joined = est.join(exact, how="inner")
     # exact pair: both ~1.0

@@ -49,6 +49,7 @@ MODULES = [
     "sparkval.pipeline",
     "sparkval.pipeline.dedup",
     "sparkval.pipeline.events",
+    "sparkval.pipeline.lsh",
     "sparkval.pipeline.multimodal",
     "sparkval.pipeline.sampling",
     "sparkval.pipeline.similarity",
