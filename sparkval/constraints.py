@@ -221,29 +221,8 @@ def violations_from_row_partials(
         )
 
     if expected is not None:
-        ours = partials.select(
-            *NATURAL_KEY, "content_sha256"
-        ).withColumn("_in_snap", F.lit(True))
-        theirs = expected.select(
-            *NATURAL_KEY, F.col("content_sha256").alias("expected_sha256")
-        ).withColumn("_in_ref", F.lit(True))
-        j = ours.join(theirs, on=NATURAL_KEY, how="full_outer")
-        detail = (
-            F.when(F.col("_in_snap").isNull(), F.lit("missing_in_snapshot"))
-            .when(F.col("_in_ref").isNull(), F.lit("unexpected_in_snapshot"))
-            .when(
-                ~F.col("content_sha256").eqNullSafe(F.col("expected_sha256")),
-                F.lit("content_hash_mismatch"),
-            )
-        )
-        bad = j.withColumn("detail", detail).filter(F.col("detail").isNotNull())
         out = out.unionByName(
-            bad.select(
-                F.lit("row_invariant_sha256").alias("check"),
-                *NATURAL_KEY,
-                F.coalesce("content_sha256", "expected_sha256").alias("content_sha256"),
-                F.col("detail").cast("string").alias("detail"),
-            )
+            _manifest_join(partials.select(*NATURAL_KEY, "content_sha256"), expected)
         )
 
     return deterministic_order(out, ["check", "repo", "path", "commit"])
@@ -258,12 +237,19 @@ def manifest_violations(corpus: DataFrame, expected: DataFrame) -> DataFrame:
     (key, sha) pairs — ~100 B/row even when content is megabytes; AQE
     skew-join covers hot repos.
     """
+    return _manifest_join(content_manifest(corpus), expected)
+
+
+def _manifest_join(ours: DataFrame, expected: DataFrame) -> DataFrame:
+    """The manifest check over a (repo, path, commit, content_sha256)
+    table — shared by manifest_violations and the strip-mode finalize
+    (violations_from_row_partials, shas computed at strip time)."""
     # explicit presence flags, NOT sha-nullness: content_sha256 is NULL
     # for rows whose content is NULL (a supported state — see
     # null_violations), so a NULL-content row present on both sides
     # must classify by the flags, and NULL-vs-hash differences must
     # surface as a mismatch (eqNullSafe), not as a phantom missing row.
-    ours = content_manifest(corpus).withColumn("_in_snap", F.lit(True))
+    ours = ours.withColumn("_in_snap", F.lit(True))
     theirs = expected.select(
         *NATURAL_KEY, F.col("content_sha256").alias("expected_sha256")
     ).withColumn("_in_ref", F.lit(True))

@@ -33,7 +33,6 @@ from pyspark.sql import types as T
 
 from sparkval import kernels
 from sparkval.config import BYTE_BINS, LANG_VOCAB, LEN_BINS, ValidationConfig
-from sparkval.histograms import add_lang_hist, corpus_histograms  # noqa: F401 (public API)
 
 VERDICT_PASS = "PASS"      # score < good  (reference README.md:50-62: imperceptible)
 VERDICT_WARN = "WARN"      # good <= score < bad
@@ -281,14 +280,6 @@ def drift_verdicts(
 ) -> DataFrame:
     """Join baseline x snapshot hist tables and score each partition."""
     return drift_verdicts_joined(joined_hists(base_hists, snap_hists), config)
-
-
-def drift_check(
-    base_corpus_hists: DataFrame, snapshot: DataFrame, config: ValidationConfig
-) -> DataFrame:
-    """One-call drift check: snapshot corpus + precomputed baseline hists."""
-    snap_hists = partition_histograms(snapshot, config)
-    return drift_verdicts(base_corpus_hists, snap_hists, config)
 
 
 def drill_down_bucket(

@@ -15,6 +15,8 @@ Outputs per run:
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import itertools
 import json
 import threading
@@ -23,10 +25,10 @@ from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from sparkval import constraints
+from sparkval import constraints, histograms, io
 from sparkval.baseline import build_baseline
 from sparkval.config import ValidationConfig
-from sparkval.drift import drift_verdicts_joined, joined_hists, partition_histograms
+from sparkval.drift import drift_verdicts_joined, joined_hists
 from sparkval.schema import check_corpus_schema
 
 #: fused single-scan tables persisted by validate(single_scan=True) —
@@ -52,6 +54,13 @@ def release_scan_caches() -> int:
         except Exception:  # session already stopped
             pass
     return n
+
+
+def _read_units(spark: SparkSession, root: str, part_col: str, ids: list[str]) -> DataFrame:
+    """Committed partials of exactly ``ids``: partition-discover the
+    ``<part_col>=<id>`` dirs under ``root``, then prune to the id set —
+    any other unit committed there is never opened."""
+    return spark.read.parquet(root).filter(F.col(part_col).isin(ids))
 
 
 class ValidationCancelled(RuntimeError):
@@ -150,12 +159,6 @@ class ValidationEngine:
         if single_scan is None:
             single_scan = expected_manifest is not None
         if single_scan:
-            from sparkval.histograms import (
-                fused_scan_partials,
-                merge_histograms_with_lang,
-                split_fused,
-            )
-
             # release any fused table a PREVIOUS validate() left cached
             # before persisting a new one: direct callers in long-lived
             # sessions otherwise accrete one cached table per call
@@ -163,21 +166,11 @@ class ValidationEngine:
             # result DataFrame — a late consumer just recomputes
             # uncached.
             release_scan_caches()
-            fused = fused_scan_partials(snapshot, cfg).persist()
+            fused = histograms.fused_scan_partials(snapshot, cfg).persist()
             _SCAN_CACHES.append(fused)
-            hist_partials, row_partials = split_fused(fused)
-            violations = constraints.violations_from_row_partials(
-                row_partials, commits, expected_manifest
+            return self._finalize(
+                baseline, *histograms.split_fused(fused), commits, expected_manifest
             )
-            verdicts = self._score_hists(
-                baseline, merge_histograms_with_lang(hist_partials)
-            )
-            return {
-                "verdicts": constraints.deterministic_order(
-                    verdicts, ["repo_bucket", "lang"]
-                ),
-                "violations": violations,
-            }
 
         violations = constraints.all_violations(snapshot, commits)
         if expected_manifest is not None:
@@ -187,18 +180,45 @@ class ValidationEngine:
                 ),
                 ["check", "repo", "path", "commit"],
             )
+        out = self._finalize(baseline, histograms.partial_histograms(snapshot, cfg))
+        out["violations"] = violations
+        return out
 
-        verdicts = self._score_hists(baseline, partition_histograms(snapshot, cfg))
+    def _finalize(
+        self,
+        baseline: DataFrame,
+        hist_partials: DataFrame,
+        row_partials: DataFrame | None = None,
+        commits: DataFrame | None = None,
+        expected_manifest: DataFrame | None = None,
+    ) -> dict[str, DataFrame]:
+        """Partials -> results: the one finalize behind every validate
+        path (the StripReducer finalize, strip.rs:126-209).
 
-        return {
-            # verdict table is O(buckets x langs): single-partition
-            # sort, not a global orderBy (whose range-partition sampling
-            # pass would re-execute the whole snapshot scan lineage)
-            "verdicts": constraints.deterministic_order(
-                verdicts, ["repo_bucket", "lang"]
-            ),
-            "violations": violations,
+        ``hist_partials`` are PARTIAL_SCHEMA rows from any split of the
+        corpus — per task, strip or data file. The histograms are a
+        mergeable monoid, so the split never changes the result: one
+        ``merge_histograms_with_lang`` shuffle, then the baseline join
+        and scoring kernel. The verdict table is O(buckets x langs):
+        ``deterministic_order`` sorts it in one partition, not with a
+        global orderBy (whose range-partition sampling pass would
+        re-execute the whole scan lineage).
+
+        With ``row_partials`` (the narrow per-row check columns of a
+        fused table, ``histograms.split_fused``) every row-level
+        violation is finalized too, from those columns alone — content
+        is never read again after the partials exist."""
+        verdicts = self._score_hists(
+            baseline, histograms.merge_histograms_with_lang(hist_partials)
+        )
+        out = {
+            "verdicts": constraints.deterministic_order(verdicts, ["repo_bucket", "lang"])
         }
+        if row_partials is not None:
+            out["violations"] = constraints.violations_from_row_partials(
+                row_partials, commits, expected_manifest
+            )
+        return out
 
     def _score_hists(self, baseline: DataFrame, snap_hists: DataFrame) -> DataFrame:
         """Join a snapshot hist table against the baseline and score it
@@ -243,6 +263,77 @@ class ValidationEngine:
             return drift_verdicts_joined(joined, cfg, same_col="same_shortcut")
         return drift_verdicts_joined(joined, cfg)
 
+    # -- committed partials (strip + incremental) ------------------------------
+    def _unit_ids(self, keys: list[str]) -> list[str]:
+        """Ids of committed partial units: each key (what the unit read)
+        hashed with the config fingerprint. The fingerprint covers
+        everything that shapes a partial (e.g. n_repo_buckets), so a
+        config change flips every id and the units recompute instead of
+        reusing partials bucketed under the old config."""
+        cfg = repr(sorted(asdict(self.config).items()))
+        cfg_fp = hashlib.sha1(cfg.encode()).hexdigest()[:8]
+        return [hashlib.sha1(f"{k}|{cfg_fp}".encode()).hexdigest()[:16] for k in keys]
+
+    def _commit_units(
+        self,
+        spark: SparkSession,
+        units: list[tuple[str, list[str]]],
+        roots: list[str],
+        part_col: str,
+        write,
+        schema,
+        on_unit=None,
+        stop: CancellationToken | None = None,
+    ) -> tuple[dict[str, list[str]], int]:
+        """The commit loop shared by strip and incremental validation.
+
+        Each ``(unit_id, files)`` unit is one write job of
+        ``write(df, unit_dir)`` into ``roots[0]/<part_col>=<unit_id>``;
+        the parquet commit protocol's ``_SUCCESS`` marker is the
+        commit, so a cancelled or killed job commits nothing. A unit
+        whose marker exists under ANY of ``roots`` (probed in order)
+        is skipped, scan included. Probes go through the Hadoop
+        FileSystem API, never driver-local os.path, so the roots may
+        live on file://, hdfs://, s3a:// or a bare local path (on S3A
+        the committer still guarantees marker-implies-complete, which
+        is all resume needs). ``on_unit(i, n, done)`` fires for every
+        unit and ``stop`` is polled at each unit boundary
+        (strip.rs:510-513).
+
+        Returns ({root: ids of the units committed there}, number of
+        units written by this call)."""
+        committed: dict[str, list[str]] = {root: [] for root in roots}
+        recomputed = 0
+        for i, (uid, files) in enumerate(units):
+            where = next(
+                (r for r in roots
+                 if io.fs_exists(spark, io.uri_join(r, f"{part_col}={uid}/_SUCCESS"))),
+                None,
+            )
+            if on_unit is not None:
+                on_unit(i, len(units), where is not None)
+            if where is None:
+                if stop is not None and stop.cancelled:
+                    raise ValidationCancelled(stop.reason)
+                where = roots[0]
+                write(
+                    spark.read.schema(schema).parquet(*files),
+                    io.uri_join(where, f"{part_col}={uid}"),
+                )
+                recomputed += 1
+            committed[where].append(uid)
+        return committed, recomputed
+
+    def _write_hists(self, df: DataFrame, path: str) -> None:
+        histograms.partial_histograms(df, self.config).write.mode(
+            "overwrite"
+        ).parquet(path)
+
+    def _write_fused(self, df: DataFrame, path: str) -> None:
+        histograms.fused_scan_partials(df, self.config).write.mode(
+            "overwrite"
+        ).partitionBy("kind").parquet(path)
+
     # -- strip-mode validation ----------------------------------------------
     def validate_strips(
         self,
@@ -261,71 +352,35 @@ class ValidationEngine:
         resource that matters at 100 TB: the input scan.
 
         The snapshot table's parquet files are split into ``n_strips``
-        contiguous strips. Each strip is scanned ONCE and its partial
-        histograms (the StripReducer partial-agg state,
-        strip.rs:126-209 — a mergeable monoid, so any strip grouping
-        yields bit-identical final histograms) are committed to
-        ``checkpoint_dir`` as their own atomic write job. The
-        cancellation token is polled at strip boundaries
-        (strip.rs:510-513) and fences mid-strip jobs via the job
-        group; a cancelled strip's write never commits. A resumed run
-        skips committed strips ENTIRELY — including their scan — so
-        resume cost is proportional to the remaining input fraction
-        (measured in BENCH.md), unlike marker-table resume whose
-        lineage still rescans everything.
+        contiguous strips; each strip is scanned once and its partials
+        committed to ``checkpoint_dir`` (``_commit_units``), then
+        ``_finalize`` merges them. A resumed run skips committed strips
+        entirely, scan included, so resume cost is proportional to the
+        remaining input fraction (measured in BENCH.md). Strip ids hash
+        the strip's file paths and the config: a resume never rereads
+        committed content, and a config change recomputes every strip.
+        The finalize reads only this run's strip ids, so strips from
+        another n_strips, file set or config under a reused
+        checkpoint_dir are pruned, never merged (they stay in place).
 
-        ``checkpoint_dir`` may live on ANY Hadoop filesystem (file://,
-        hdfs://, s3a://, or a bare local path): commit probes go
-        through the FileSystem API, never driver-local os.path — on
-        the 100 TB deployment's object store a local probe would
-        silently see nothing and resume would degrade to full
-        recompute (round-3 verdict #2). Note the usual S3 caveat: the
-        parquet _SUCCESS commit marker is only atomic-rename-backed on
-        real filesystems; on S3A the committer still guarantees
-        marker-implies-complete, which is all resume needs.
+        ``include_violations=False`` commits histogram partials to
+        ``partials/strip=<sid>`` and returns verdicts; a strip already
+        committed by a full-validate run under ``fused_partials`` is
+        reused (its hist rows are a superset). ``include_violations=True``
+        makes strip mode a FULL validate (beyond the reference, whose
+        strip API returns only score/pnorm, strip.rs:601-905): each
+        strip commits ONE fused table (``fused_partials/strip=<sid>``,
+        partitioned by ``kind``) of histogram partials and the narrow
+        per-row check partials from a single pass over its content, and
+        the finalize derives every row-level violation (global
+        uniqueness counts, null_required, referential vs ``commits``,
+        sha256 manifest vs ``expected_manifest``) from them.
 
-        The finalize merge reads ONLY this run's strip ids (partition
-        filter on the ``strip`` directory column): a reused
-        checkpoint_dir holding strips from a different n_strips or an
-        older snapshot file set cannot double-count histogram mass
-        (round-3 ADVICE, medium). Foreign committed strips are left in
-        place (another run may own them) — they're pruned, not read.
-
-        Finalize = merge all strips' partials + the single kernel+join
-        stage; verdicts are identical to validate() (parity-tested).
-
-        ``include_violations=True`` makes strip mode a FULL validate
-        (beyond the reference, whose strip API returns only
-        score/pnorm, strip.rs:601-905): each strip commits ONE fused
-        partial table (``fused_partials/strip=<sid>``, partitioned by
-        ``kind``) holding both the histogram partials and the NARROW
-        per-row check partials (key, sha256, null-detail — ~100 B/row)
-        from a SINGLE pass over the strip's content
-        (histograms.fused_scan_partials — round 5; previously two
-        passes/two write jobs per strip). The finalize derives ALL
-        row-level violations (uniqueness with exact global counts,
-        null_required, referential vs ``commits``, sha256 manifest vs
-        ``expected_manifest``) from the merged kind='r' partials with
-        narrow-only joins — content is never rescanned after the strip
-        commits. Each strip's content is read ONCE total; resume skips
-        committed strips entirely. The single write job also makes the
-        strip commit atomic by construction: there is no
-        half-committed two-table state to detect (one _SUCCESS marker
-        per strip). Checkpoint dirs written by the pre-round-5 layout
-        (separate ``partials``/``row_partials`` trees) are not read by
-        full-validate runs — their strips recompute into the fused
-        layout; verdict-only runs (``include_violations=False``) keep
-        the classic ``partials`` layout and remain compatible both
-        ways.
-
-        ``on_strip(i, n, skipped)`` is an optional progress hook (the
-        per-strip progress callback a monitoring UI would attach).
+        ``stop`` fences in-flight jobs through its job group and is
+        polled at strip boundaries; with it the outputs are
+        materialized before return. ``on_strip(i, n, skipped)`` is an
+        optional per-strip progress hook.
         """
-        import hashlib
-
-        from sparkval.histograms import partial_histograms
-        from sparkval.io import fs_exists, uri_join
-
         spark = baseline.sparkSession
         if stop is not None and stop.cancelled:
             raise ValidationCancelled(stop.reason)
@@ -337,113 +392,50 @@ class ValidationEngine:
         if not files:
             raise ValueError(f"no parquet files under {snapshot_path}")
         n_strips = max(1, min(n_strips, len(files)))
-        bounds = [
-            (len(files) * i // n_strips, len(files) * (i + 1) // n_strips)
+        strips = [
+            files[len(files) * i // n_strips : len(files) * (i + 1) // n_strips]
             for i in range(n_strips)
         ]
-        sids = [
-            hashlib.sha1("\n".join(files[lo:hi]).encode()).hexdigest()[:16]
-            for lo, hi in bounds
+        units = list(zip(self._unit_ids(["\n".join(s) for s in strips]), strips))
+        fused_root = io.uri_join(checkpoint_dir, "fused_partials")
+        # verdict-only runs also resume from fused commits; the reverse
+        # recomputes (a full validate needs row partials the classic
+        # tree never wrote)
+        roots = [fused_root] if include_violations else [
+            io.uri_join(checkpoint_dir, "partials"), fused_root
         ]
 
         if stop is not None:
             sc.setJobGroup(stop.group, "sparkval strip validation",
                            interruptOnCancel=True)
-        # full-validate runs commit ONE fused table per strip (single
-        # content pass, single atomic write); verdict-only runs write
-        # the classic hist-partials layout but RESUME from either tree
-        # (a completed full validate's fused commits satisfy a later
-        # verdict-only run — its hist rows are a superset; review
-        # round 5). The reverse direction recomputes: a fused commit
-        # needs row partials the classic tree never wrote.
-        tree = "fused_partials" if include_violations else "partials"
-        fused_sids: list[str] = []  # verdict-only: strips resumed from fused
         try:
-            for i, (lo, hi) in enumerate(bounds):
-                strip_files = files[lo:hi]
-                sid = sids[i]
-                strip_dir = uri_join(checkpoint_dir, tree, f"strip={sid}")
-                done = fs_exists(spark, uri_join(strip_dir, "_SUCCESS"))
-                if not done and not include_violations:
-                    fused_dir = uri_join(
-                        checkpoint_dir, "fused_partials", f"strip={sid}"
-                    )
-                    if fs_exists(spark, uri_join(fused_dir, "_SUCCESS")):
-                        fused_sids.append(sid)
-                        done = True
-                if on_strip is not None:
-                    on_strip(i, n_strips, done)
-                if done:
-                    continue
-                if stop is not None and stop.cancelled:  # strip boundary poll
-                    raise ValidationCancelled(stop.reason)
-                strip_df = spark.read.schema(probe.schema).parquet(*strip_files)
-                # one write job per strip: the parquet commit protocol
-                # makes the strip atomic (a cancelled job commits nothing)
-                if include_violations:
-                    from sparkval.histograms import fused_scan_partials
-
-                    fused_scan_partials(strip_df, self.config).write.mode(
-                        "overwrite"
-                    ).partitionBy("kind").parquet(strip_dir)
-                else:
-                    partial_histograms(strip_df, self.config).write.mode(
-                        "overwrite"
-                    ).parquet(strip_dir)
-
+            committed, _ = self._commit_units(
+                spark, units, roots, "strip",
+                self._write_fused if include_violations else self._write_hists,
+                probe.schema, on_strip, stop,
+            )
             if stop is not None and stop.cancelled:
                 raise ValidationCancelled(stop.reason)
-            # partition-discover strip=<sid> dirs, then PRUNE to this
-            # run's sid set — stale strips under a reused checkpoint
-            # dir are never opened (partition filter), never merged
-            from sparkval.histograms import PARTIAL_SCHEMA, merge_histograms_with_lang
-
-            hist_names = [f.name for f in PARTIAL_SCHEMA.fields]
+            tables = {
+                root: _read_units(spark, root, "strip", ids)
+                for root, ids in committed.items() if ids
+            }
             if include_violations:
-                committed = spark.read.parquet(
-                    uri_join(checkpoint_dir, tree)
-                ).filter(F.col("strip").isin(sids))
-                # kind is a partition column: each consumer opens only
-                # its own files
-                hist_rows = committed.filter(F.col("kind") == "h").select(*hist_names)
-            else:
-                classic_sids = sorted(set(sids) - set(fused_sids))
-                parts = []
-                if classic_sids:  # dir exists iff any strip lives there
-                    parts.append(
-                        spark.read.parquet(uri_join(checkpoint_dir, tree))
-                        .filter(F.col("strip").isin(classic_sids))
-                        .select(*hist_names)
-                    )
-                if fused_sids:
-                    parts.append(
-                        spark.read.parquet(uri_join(checkpoint_dir, "fused_partials"))
-                        .filter(
-                            F.col("strip").isin(fused_sids) & (F.col("kind") == "h")
-                        )
-                        .select(*hist_names)
-                    )
-                hist_rows = parts[0]
-                for p in parts[1:]:
-                    hist_rows = hist_rows.unionByName(p)
-            snap_hists = merge_histograms_with_lang(hist_rows)
-            verdicts = constraints.deterministic_order(
-                self._score_hists(baseline, snap_hists), ["repo_bucket", "lang"]
-            )
-            if stop is not None:
-                verdicts = verdicts.localCheckpoint(eager=True)
-            out = {"verdicts": verdicts}
-            if include_violations:
-                violations = constraints.violations_from_row_partials(
-                    committed.filter(F.col("kind") == "r").select(
-                        "repo", "path", "commit", "content_sha256", "null_detail"
-                    ),
-                    commits,
+                out = self._finalize(
+                    baseline, *histograms.split_fused(tables[fused_root]), commits,
                     expected_manifest,
                 )
-                if stop is not None:
-                    violations = violations.localCheckpoint(eager=True)
-                out["violations"] = violations
+            else:
+                hists = [
+                    histograms.split_fused(t)[0] if root == fused_root
+                    else t.select(*histograms.PARTIAL_SCHEMA.fieldNames())
+                    for root, t in tables.items()
+                ]
+                out = self._finalize(
+                    baseline, functools.reduce(DataFrame.unionByName, hists)
+                )
+            if stop is not None:
+                out = {k: v.localCheckpoint(eager=True) for k, v in out.items()}
             return out
         except ValidationCancelled:
             raise
@@ -465,103 +457,47 @@ class ValidationEngine:
         expected_manifest: DataFrame | None = None,
         on_file=None,
     ) -> dict:
-        """Churn-proportional FULL validation: per-DATA-FILE fused
-        partials, content-addressed by (path, size, mtime), cached
-        across runs. A new snapshot of a 100 TB table with 0.1% daily
-        churn rescans 0.1% of the bytes — every unchanged file's
-        partials (histogram rows + the ~100 B/row check partials, the
-        strip-mode monoid at file granularity) are reused from
-        ``cache_dir``; the finalize merges partials for EXACTLY the
-        current file set and derives verdicts + all row-level
-        violations without touching content again.
+        """Churn-proportional FULL validation: the strip-mode fused
+        partials at data-file granularity, cached across runs in
+        ``cache_dir/file_partials/file=<fid>``. A new snapshot of a
+        100 TB table with 0.1% daily churn rescans 0.1% of the bytes;
+        every unchanged file's partials are reused, and the finalize
+        reads exactly the current file set's.
 
-        Addressing is (path, size, mtime) through the FileSystem API
-        (``io.fs_file_statuses``), not path alone: Iceberg-style
-        immutable data files make path addressing sound, but an
-        in-place rewrite (same name, new bytes) still changes
-        size/mtime, so stale reuse is impossible — a hole pure
-        path-hashed strip ids cannot close. Stale cache entries for
-        files no longer in the snapshot are pruned by partition
-        filter (never opened), exactly like stale strips.
+        A file's id hashes (path, size, mtime) through the FileSystem
+        API (``io.fs_file_statuses``, recursive, so partitioned layouts
+        are covered) plus the config: an in-place rewrite (same name,
+        new bytes) changes size/mtime, so stale reuse is impossible.
+        Cache entries of files no longer in the snapshot are pruned by
+        partition filter, never opened.
 
-        One write job per CHANGED file (the parquet commit marker is
-        the per-file atomicity fence, as in strip mode) — the right
-        trade when runs are churn-dominated; for an initial bulk
-        build at 10^6+ files, seed the cache with ``validate_strips``
-        granularity instead and let incremental take over from the
-        first delta.
+        One write job per changed file — the right trade when runs are
+        churn-dominated; for an initial bulk build at 10^6+ files, seed
+        the cache with ``validate_strips`` granularity instead and let
+        incremental take over from the first delta. ``on_file(i, n,
+        skipped)`` is an optional per-file progress hook.
 
         Returns {"verdicts", "violations", "n_files_total",
         "n_files_recomputed", "n_files_reused"}.
         """
-        import hashlib
-
-        from sparkval.histograms import (
-            PARTIAL_SCHEMA,
-            fused_scan_partials,
-            merge_histograms_with_lang,
-        )
-        from sparkval.io import fs_exists, fs_file_statuses, uri_join
-
         spark = baseline.sparkSession
-        # recursive + hidden-segment-filtered: covers partitionBy /
-        # nested data layouts exactly as spark.read.parquet does
-        statuses = fs_file_statuses(spark, snapshot_path)
+        statuses = io.fs_file_statuses(spark, snapshot_path)
         if not statuses:
             raise ValueError(f"no data files under {snapshot_path}")
         probe = spark.read.parquet(snapshot_path)
         check_corpus_schema(probe)
-        # the cache key must cover EVERYTHING that shapes a partial:
-        # the file's identity AND the config that bucketed/scored it —
-        # otherwise a config change (e.g. n_repo_buckets) would reuse
-        # stale partials with fs_exists happily true (review round 5,
-        # session 3). A config change flips every fid -> clean rebuild.
-        import dataclasses
-
-        cfg_fp = hashlib.sha1(
-            repr(sorted(dataclasses.asdict(self.config).items())).encode()
-        ).hexdigest()[:8]
-        fids = {
-            uri: hashlib.sha1(
-                f"{uri}|{size}|{mtime}|{cfg_fp}".encode()
-            ).hexdigest()[:16]
-            for uri, size, mtime in statuses
-        }
-        recomputed = 0
-        for i, (uri, _, _) in enumerate(statuses):
-            fid = fids[uri]
-            fdir = uri_join(cache_dir, "file_partials", f"file={fid}")
-            done = fs_exists(spark, uri_join(fdir, "_SUCCESS"))
-            if on_file is not None:
-                on_file(i, len(statuses), done)
-            if done:
-                continue
-            recomputed += 1
-            fdf = spark.read.schema(probe.schema).parquet(uri)
-            fused_scan_partials(fdf, self.config).write.mode(
-                "overwrite"
-            ).partitionBy("kind").parquet(fdir)
-
-        committed = spark.read.parquet(
-            uri_join(cache_dir, "file_partials")
-        ).filter(F.col("file").isin(sorted(fids.values())))
-        hist_names = [f.name for f in PARTIAL_SCHEMA.fields]
-        snap_hists = merge_histograms_with_lang(
-            committed.filter(F.col("kind") == "h").select(*hist_names)
+        root = io.uri_join(cache_dir, "file_partials")
+        fids = self._unit_ids([f"{uri}|{size}|{mtime}" for uri, size, mtime in statuses])
+        _, recomputed = self._commit_units(
+            spark, [(fid, [uri]) for fid, (uri, _, _) in zip(fids, statuses)],
+            [root], "file", self._write_fused, probe.schema, on_file,
         )
-        verdicts = constraints.deterministic_order(
-            self._score_hists(baseline, snap_hists), ["repo_bucket", "lang"]
-        )
-        violations = constraints.violations_from_row_partials(
-            committed.filter(F.col("kind") == "r").select(
-                "repo", "path", "commit", "content_sha256", "null_detail"
-            ),
-            commits,
-            expected_manifest,
+        committed = _read_units(spark, root, "file", sorted(fids))
+        out = self._finalize(
+            baseline, *histograms.split_fused(committed), commits, expected_manifest
         )
         return {
-            "verdicts": verdicts,
-            "violations": violations,
+            **out,
             "n_files_total": len(statuses),
             "n_files_recomputed": recomputed,
             "n_files_reused": len(statuses) - recomputed,
@@ -655,10 +591,8 @@ class ValidationEngine:
         point; this method stays for verdict-only monitoring loops
         where violations are recomputed-per-run by design.
         """
-        from sparkval.io import uri_join
-
         spark = snapshot.sparkSession
-        done_path = uri_join(checkpoint_dir, "verdicts")
+        done_path = io.uri_join(checkpoint_dir, "verdicts")
         # explicit classic shape: this wrapper is called per monitoring
         # cycle and returns a lazy violations plan with no place to
         # release a fused persist afterwards — AUTO would leak one
@@ -741,9 +675,7 @@ class ValidationEngine:
         Without ``spark`` the legacy local-path form still works."""
         payload = json.dumps(metrics, indent=2, default=str)
         if spark is not None:
-            from sparkval.io import fs_write_text
-
-            fs_write_text(spark, path, payload)
+            io.fs_write_text(spark, path, payload)
             return
         with open(path, "w") as f:
             f.write(payload)

@@ -12,11 +12,10 @@ Scale design (the part that must survive 100 TB):
    batch collapses to at most (#keys-in-batch) rows of packed count
    vectors. This is the map-side combine: raw content NEVER shuffles.
    100 TB of content becomes ~(tasks x keys) rows of ~2.6 KB each.
-2. ``merge_histograms`` — posexplode the partial vectors and run a
-   built-in partial+final hash aggregation on (key, bin): Spark's
-   own StripReducer (strip.rs:126-209 analog), whole-stage codegen,
-   no Python. The per-key result reassembles into arrays with
-   array_sort(collect_list(struct(bin, count))).
+2. ``merge_histograms_with_lang`` — one grouped-map merge on
+   repo_bucket: numpy sums/xors of the partial rows per (bucket,
+   lang), plus the bucket-wide lang-mix vector, in a single shuffle —
+   Spark's own StripReducer (strip.rs:126-209 analog).
 
 The histogram bins are uniform by construction, so the merge stage
 has zero skew even when repos are hot — skew lives only in the
@@ -230,7 +229,7 @@ class _HistAccumulator:
         )
 
 
-def _hist_partial_cols(batch: pa.RecordBatch, n_langs: int) -> dict:
+def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
     """The per-batch histogram-partial kernel over a prepared_scan
     batch whose first four columns are (_key, _fp, _len, _bytes):
     reads the binary column's buffers DIRECTLY (zero copies, zero
@@ -238,23 +237,7 @@ def _hist_partial_cols(batch: pa.RecordBatch, n_langs: int) -> dict:
     folds fingerprints with one segmented XOR, scatter-adds length
     bins, and bincounts content bytes. Shared verbatim by
     partial_histograms and fused_scan_partials so the two paths can
-    never drift."""
-    ukeys, n_files, nulls, total, bh, lh, fpx = _hist_partial_arrays(batch, n_langs)
-    return {
-        "repo_bucket": pa.array((ukeys // n_langs).astype(np.int32), pa.int32()),
-        "lang": pa.array([LANG_VOCAB[int(k) % n_langs] for k in ukeys], pa.string()),
-        "n_files": pa.array(n_files),
-        "n_null_content": pa.array(nulls),
-        "total_bytes": pa.array(total),
-        "byte_hist": pa.array(list(bh), pa.list_(pa.int64())),
-        "len_hist": pa.array(list(lh), pa.list_(pa.int64())),
-        "fingerprint": pa.array(fpx),
-    }
-
-
-def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
-    """Numpy form of the per-batch histogram partials (see
-    _hist_partial_cols): (ukeys, n_files, nulls, total, bh, lh, fpx)."""
+    never drift. Returns (ukeys, n_files, nulls, total, bh, lh, fpx)."""
     n = batch.num_rows
     key = batch.column(0).to_numpy()
     fp = batch.column(1).to_numpy().view(np.uint64)
@@ -444,23 +427,20 @@ MERGED_LANG_SCHEMA = T.StructType(
 )
 
 
-def merge_histograms_with_lang(partials: DataFrame, salt_levels: int = 0) -> DataFrame:
-    """Fused merge + lang-mix stage: ONE shuffle on repo_bucket does
-    both the per-(bucket, lang) histogram merge and the bucket-wide
-    lang-mix vector, instead of merge(groupBy bucket,lang) followed by
-    add_lang_hist(groupBy bucket) — the operator-fusion rewrite the
+def merge_histograms_with_lang(partials: DataFrame) -> DataFrame:
+    """Final per-(repo_bucket, lang) hist table with the bucket-wide
+    lang-mix vector (LANG_VOCAB order) on every row of the bucket.
+
+    ONE grouped-map shuffle on repo_bucket does both the per-(bucket,
+    lang) merge (vector sums are a numpy stack-sum; xor/sum are
+    associative, so any grouping of the partials gives identical
+    results) and the lang-mix vector — the operator-fusion rewrite the
     reference applied by hand everywhere (SURVEY §4), applied to
     shuffle stages: every stage saved is ~0.5-1 s of latency that would
-    otherwise be a fixed serial cost at any cluster size.
+    otherwise be a fixed serial cost at any cluster size. Partials are
+    tiny (tasks x keys rows), so stage count, not data volume,
+    dominates the merge.
     """
-    merged = partials
-    if salt_levels > 0:
-        salted = partials.withColumn(
-            "_salt", F.pmod(F.spark_partition_id(), F.lit(salt_levels))
-        )
-        merged = salted.groupBy("repo_bucket", "lang", "_salt").applyInPandas(
-            lambda pdf: _merge_group(pdf.drop(columns=["_salt"])), PARTIAL_SCHEMA
-        )
 
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = pd.concat([_merge_group(g) for _, g in pdf.groupby("lang", sort=False)])
@@ -470,64 +450,4 @@ def merge_histograms_with_lang(partials: DataFrame, salt_levels: int = 0) -> Dat
         rows["lang_hist"] = [vec] * len(rows)
         return rows
 
-    return merged.groupBy("repo_bucket").applyInPandas(merge_bucket, MERGED_LANG_SCHEMA)
-
-
-def merge_histograms(partials: DataFrame, salt_levels: int = 0) -> DataFrame:
-    """Final per-(repo_bucket, lang) histogram table.
-
-    One applyInPandas grouped merge (vector sums are a numpy stack-sum;
-    xor/sum are associative, so any grouping order gives identical
-    results). Versus a posexplode + per-bin hash-agg formulation this
-    is ~5x fewer stages — partials are tiny (tasks x keys rows), so
-    stage-scheduling overhead, not data volume, dominates the merge.
-
-    ``salt_levels`` > 0 inserts a pre-merge on (key, task-salt) to
-    bound per-group row counts when the map side produced millions of
-    partials (the 100 TB case: 100k tasks x 144 keys -> cap each final
-    group at salt_levels pre-merged rows).
-    """
-    keys = ["repo_bucket", "lang"]
-    merged = partials
-    if salt_levels > 0:
-        salted = partials.withColumn(
-            "_salt", F.pmod(F.spark_partition_id(), F.lit(salt_levels))
-        )
-        merged = (
-            salted.groupBy(*keys, "_salt")
-            .applyInPandas(
-                lambda pdf: _merge_group(pdf.drop(columns=["_salt"])), PARTIAL_SCHEMA
-            )
-        )
-    return merged.groupBy(*keys).applyInPandas(_merge_group, PARTIAL_SCHEMA)
-
-
-def corpus_histograms(corpus: DataFrame, config: ValidationConfig) -> DataFrame:
-    """scan -> map-side partials -> built-in merge. The one-stop API."""
-    return merge_histograms(partial_histograms(corpus, config))
-
-
-def add_lang_hist(hists: DataFrame) -> DataFrame:
-    """Per-bucket lang-mix vector (LANG_VOCAB order) attached to every
-    row of the bucket.
-
-    One grouped-map over the (tiny) merged hist table — deliberately
-    NOT a self-join of per-bucket totals back onto the rows: that
-    diamond would make Spark evaluate the expensive upstream
-    scan+partials lineage twice (once for the broadcast side, once for
-    the probe side).
-    """
-    schema = T.StructType(
-        list(hists.schema.fields)
-        + [T.StructField("lang_hist", T.ArrayType(T.DoubleType()), False)]
-    )
-
-    def gen(pdf: pd.DataFrame) -> pd.DataFrame:
-        counts = dict(zip(pdf["lang"], pdf["n_files"]))
-        raw = np.array([float(counts.get(l, 0)) for l in LANG_VOCAB])
-        vec = raw / max(raw.sum(), 1.0)
-        out = pdf.copy()
-        out["lang_hist"] = [vec] * len(pdf)
-        return out
-
-    return hists.groupBy("repo_bucket").applyInPandas(gen, schema)
+    return partials.groupBy("repo_bucket").applyInPandas(merge_bucket, MERGED_LANG_SCHEMA)

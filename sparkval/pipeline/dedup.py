@@ -343,6 +343,7 @@ def connected_components(pairs: DataFrame, src: str = "a", dst: str = "b",
         .localCheckpoint(eager=True)
     )
     check_every = max(1, check_every)
+    changed = None  # max_iter <= 0: the initial labels, no warning
     for it in range(max_iter):
         # candidate label for v: min label among its neighbours u
         cand = (

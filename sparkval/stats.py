@@ -500,9 +500,10 @@ def countmin_estimate_expr(
     querying a broadcast sketch costs no Python at all."""
     from sparkval.countmin import P, row_coeffs
 
-    h0 = F.conv(
-        F.substring(F.md5(F.col(term_col).cast("binary")), 1, 8), 16, 10
-    ).cast("long")
+    # hash the string form, as countmin_sketches' build side does:
+    # int -> binary is no cast under ANSI
+    term = F.col(term_col).cast("string").cast("binary")
+    h0 = F.conv(F.substring(F.md5(term), 1, 8), 16, 10).cast("long")
     ests = []
     for j, (a, b) in enumerate(row_coeffs(depth)):
         bucket = ((F.lit(a) * h0 + F.lit(b)) % F.lit(P)) % F.lit(width)
@@ -644,9 +645,11 @@ def bloom_h0_expr(term) -> F.Column:
     common-subexpression-eliminate, so the composed form pays k
     md5+conv per term."""
     term = F.col(term) if isinstance(term, str) else term
-    return F.conv(F.substring(F.md5(term.cast("binary")), 1, 8), 16, 10).cast(
-        "long"
-    )
+    # hash the string form, as bloom_filters' build side does: int ->
+    # binary is no cast under ANSI
+    return F.conv(
+        F.substring(F.md5(term.cast("string").cast("binary")), 1, 8), 16, 10
+    ).cast("long")
 
 
 def bloom_h0_contains_expr(

@@ -755,6 +755,34 @@ def test_bloom_contains_expr_matches_kernel(spark):
         assert member == bloom.contains(f, term), term
 
 
+def test_sketch_probes_over_int_terms_agree_with_build(spark):
+    """Count-min and Bloom probes over a non-string term column hash
+    its string form, as the build side does (ADVICE: int -> binary
+    raised AnalysisException under ANSI)."""
+    from sparkval.stats import (
+        bloom_contains_expr,
+        bloom_filters,
+        countmin_estimate_expr,
+        countmin_sketches,
+    )
+
+    df = spark.createDataFrame([("g", i % 37) for i in range(500)], "lang string, term int")
+    exact = df.groupBy("lang", "term").agg(F.count(F.lit(1)).alias("exact"))
+    got = (
+        exact.join(countmin_sketches(df, "term", ["lang"]).select("lang", "sketch"), "lang")
+        .join(bloom_filters(df, "term", ["lang"]).select("lang", "filter"), "lang")
+        .select(
+            "exact",
+            countmin_estimate_expr("term").alias("est"),
+            bloom_contains_expr("term").alias("member"),
+        )
+        .collect()
+    )
+    assert len(got) == 37
+    assert all(r["est"] >= r["exact"] for r in got)
+    assert all(r["member"] for r in got)
+
+
 def test_bloom_decontaminate_planted(spark):
     from sparkval.pipeline.dedup import bloom_decontaminate
 

@@ -483,6 +483,20 @@ def test_connected_components_matches_union_find(spark):
     assert got == want
 
 
+def test_connected_components_max_iter_zero_returns_initial_labels(spark):
+    """max_iter=0 runs no propagation round: every node keeps its own
+    label, with no non-convergence warning (ADVICE: it raised
+    NameError on the unbound change count)."""
+    import warnings
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["a", "b"])
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = dedup.connected_components(pairs, "a", "b", max_iter=0)
+    assert {r["node"]: r["component"] for r in out.collect()} == {1: 1, 2: 2, 3: 3}
+    assert not [w for w in caught if "converge" in str(w.message)]
+
+
 def test_connected_components_chain_needs_transitivity(spark):
     """A diameter-7 path collapses to one component — the case pairwise
     LSH output alone cannot express."""

@@ -121,9 +121,9 @@ def test_histogram_shuffle_carries_no_content(spark, corpus_pair):
         ), f
     # and the merged table is O(keys), not O(files)
     n_keys = partials.select("repo_bucket", "lang").distinct().count()
-    from sparkval.histograms import merge_histograms
+    from sparkval.histograms import merge_histograms_with_lang
 
-    assert merge_histograms(partials).count() == n_keys
+    assert merge_histograms_with_lang(partials).count() == n_keys
 
 
 def test_bucketed_table_uniqueness_is_shuffle_free(spark, corpus_pair, tmp_path):

@@ -11,14 +11,16 @@ import pytest
 
 from sparkval import fixtures as fx, tdigest
 from sparkval.config import BYTE_BINS, LEN_BINS, ValidationConfig
-from sparkval.histograms import add_lang_hist, corpus_histograms, repo_bucket_py
+from sparkval.drift import partition_histograms
+from sparkval.histograms import repo_bucket_py
 from sparkval.stats import column_stats, length_tdigests
 
 CFG = ValidationConfig()
 
 
 def oracle_hists(pdf: pd.DataFrame):
-    """Single-machine reference implementation of corpus_histograms."""
+    """Single-machine reference implementation of partition_histograms
+    (without the lang-mix channel)."""
     from sparkval.config import LANG_VOCAB
 
     bucket = pdf["repo"].map(lambda r: repo_bucket_py(r, CFG.n_repo_buckets))
@@ -51,7 +53,7 @@ def corpus_pdf():
 
 def test_corpus_histograms_match_numpy_oracle(spark, corpus_pdf):
     df = spark.createDataFrame(corpus_pdf)
-    got = corpus_histograms(df, CFG).toPandas()
+    got = partition_histograms(df, CFG).toPandas()
     want = oracle_hists(corpus_pdf)
     assert len(got) == len(want)
     for _, row in got.iterrows():
@@ -67,8 +69,8 @@ def test_histograms_partition_parity(spark, corpus_pdf):
     (strip.rs:38-45) — counts must be exactly equal."""
     df1 = spark.createDataFrame(corpus_pdf).repartition(1)
     df8 = spark.createDataFrame(corpus_pdf).repartition(8)
-    a = corpus_histograms(df1, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
-    b = corpus_histograms(df8, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
+    a = partition_histograms(df1, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
+    b = partition_histograms(df8, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
     assert list(a.index) == list(b.index)
     for k in a.index:
         assert np.array_equal(np.array(a.loc[k, "byte_hist"]), np.array(b.loc[k, "byte_hist"]))
@@ -77,11 +79,26 @@ def test_histograms_partition_parity(spark, corpus_pdf):
 
 def test_lang_hist_normalized(spark, corpus_pdf):
     df = spark.createDataFrame(corpus_pdf)
-    out = add_lang_hist(corpus_histograms(df, CFG)).toPandas()
+    out = partition_histograms(df, CFG).toPandas()
     for _, row in out.iterrows():
         lh = np.array(row["lang_hist"])
         assert lh.shape == (9,)
         assert abs(lh.sum() - 1.0) < 1e-9
+
+
+def test_null_repo_does_not_abort_histogram_scan(spark):
+    """NULL repo must not abort the mapInArrow scan (crc32(NULL)
+    previously NULLed the group key -> ArrowInvalid)."""
+    pdf = fx.make_corpus("random_mid", 200)
+    pdf.loc[0, "repo"] = None
+    pdf.loc[1, "repo"] = None
+    df = spark.createDataFrame(pdf)
+    cfg = ValidationConfig(n_repo_buckets=8)
+    hists = partition_histograms(df, cfg).toPandas()  # previously: ArrowInvalid
+    # every row (including the NULL-repo ones) lands in some bucket
+    assert int(hists["n_files"].sum()) == 200
+    # the sentinel bucket matches the python-side mirror
+    assert repo_bucket_py(None, 8) in set(hists["repo_bucket"])
 
 
 def test_column_stats_vs_pandas(spark, corpus_pdf):

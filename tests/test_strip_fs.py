@@ -95,6 +95,38 @@ def test_strip_walker_ignores_stale_strips_from_other_layout(spark, tmp_path):
     assert a.equals(b)
 
 
+def test_strip_config_change_invalidates_checkpoint(spark, tmp_path):
+    """Strip ids hash the config as well as the file paths: rerunning
+    into a checkpoint dir under another n_repo_buckets must recompute
+    every strip, never merge partials bucketed under the old config
+    (the strip twin of test_incremental_config_change_invalidates_cache)."""
+    corpus = _corpus(spark, n=1200)
+    snap = corpus.union(corpus.limit(5))  # 5 duplicate keys
+    path = str(tmp_path / "snap.parquet")
+    snap.repartition(4).write.parquet(path)
+    ckpt = str(tmp_path / "ck_cfg")
+
+    eng = ValidationEngine()
+    eng.validate_strips(
+        path, eng.build_baseline(corpus), ckpt, n_strips=4, include_violations=True
+    )["verdicts"].count()
+
+    other = ValidationEngine(ValidationConfig(n_repo_buckets=32))
+    base32 = other.build_baseline(corpus)
+    seen = []
+    out = other.validate_strips(
+        path, base32, ckpt, n_strips=4, include_violations=True,
+        on_strip=lambda i, n, sk: seen.append(sk),
+    )
+    assert seen == [False] * 4  # no stale reuse
+    full = other.validate(spark.read.parquet(path), base32)
+    for k in ("verdicts", "violations"):
+        assert sorted(map(tuple, out[k].collect())) == sorted(
+            map(tuple, full[k].collect())
+        ), k
+    assert full["violations"].count() == 10
+
+
 def test_baseline_sidecar_records_build_config_and_warns(spark, tmp_path):
     from sparkval.baseline import load_baseline, save_baseline
 
