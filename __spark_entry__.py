@@ -1597,8 +1597,8 @@ def q_merge_baselines_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-baseline invariant (baseline.merge_baselines):
     baselines built over a disjoint 2-way hash split of the corpus,
     merged, must equal the one-shot full-corpus baseline in EVERY
-    column — accumulator sums, XOR'd fingerprints, renormalized
-    lang_hist, re-derived warm bands. The full-outer join reduces the
+    column — accumulator sums, XOR'd fingerprints and renormalized
+    lang_hist. The full-outer join reduces the
     bit-equality to n_mismatched_rows == 0 (a key on one side only
     also counts as a mismatch), with n_files_total globally oracled
     (the crc32 partition key itself is pytest-covered; DuckDB cannot

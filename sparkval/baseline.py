@@ -1,12 +1,17 @@
 """Baseline snapshot persistence — the ButteraugliReference analog.
 
-The reference precomputes the expensive per-image state once and
-reuses it across N comparisons for a ~40-50% speedup
+The reference precomputes the decomposed bands of a whole reference
+image once and reuses them across N comparisons
 (precompute.rs:3-4, 127-152). The engine's equivalent: build the
 per-partition histogram table from a trusted corpus snapshot ONCE,
-persist it as Parquet, and broadcast-join it against every future
-snapshot. At 10^12 files the baseline table is still only
-(#buckets x #langs) rows — kilobytes.
+persist it as Parquet, and join it against every future snapshot.
+What is expensive here is the corpus scan, which the baseline saves;
+the band decomposition runs on the histograms, and at 10^12 files
+the table is still only (#buckets x #langs) rows. So the baseline
+stores no precomputed bands: they would grow every row ~6x through
+the join and the Arrow hop to save a few milliseconds of numpy per
+validate. Every compare decomposes both sides from their histograms;
+``pre_*`` band columns of older persisted baselines are ignored.
 
 Alongside the histograms we persist a per-partition content
 fingerprint enabling the identical-input short-circuit
@@ -35,81 +40,18 @@ def _bucket_col(n_buckets: int) -> F.Column:
     return F.pmod(F.crc32(repo_nn.cast("binary")), F.lit(n_buckets)).cast("int")
 
 
-def build_baseline(
-    corpus: DataFrame, config: ValidationConfig, precompute_bands: bool = True
-) -> DataFrame:
+def build_baseline(corpus: DataFrame, config: ValidationConfig) -> DataFrame:
     """Per-partition histograms for a trusted snapshot.
 
     The content fingerprint (xor of per-row xxhash64 over (lang,
     content) — see histograms.prepared_scan) rides along inside the
     histogram pass, so the baseline build is exactly ONE corpus scan.
-
-    ``precompute_bands`` additionally stores the decomposed DoG bands
-    per channel (the ButteraugliReference warm path,
-    precompute.rs:127-152): validate-time comparisons then skip the
-    baseline-side decomposition entirely. Bit-identical results either
-    way (tested); the flag only trades baseline size for compare cost.
     """
     hists = partition_histograms(corpus, config)
-    if precompute_bands:
-        hists = with_precomputed_bands(hists, config)
-    # driver-side breadcrumb for save_baseline's sidecar: records which
-    # band-affecting config the bands were baked under
+    # driver-side breadcrumb for save_baseline's sidecar: records the
+    # config the histograms were bucketed under
     hists._sparkval_build_config = config
     return hists
-
-
-_PRE_COLS = ("pre_byte", "pre_len", "pre_lang")
-
-
-def with_precomputed_bands(hists: DataFrame, config: ValidationConfig) -> DataFrame:
-    """Add packed precomputed band columns to a hist table (tiny:
-    O(buckets x langs) rows — one vectorized pass, no corpus access)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from sparkval import kernels
-
-    single_res = config.single_resolution
-    blur_impl = "iir" if config.iir_blur else "fir"
-    intensity_factor = config.intensity_factor
-    intensity_target = config.intensity_target
-    schema = T.StructType(
-        list(hists.schema.fields)
-        + [T.StructField(c, T.ArrayType(T.DoubleType()), True) for c in _PRE_COLS]
-        # bands bake the intensity scale in; record it so validate can
-        # refuse to reuse bands built under a different target
-        + [T.StructField("pre_intensity", T.DoubleType(), True)]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernels.DEFAULT_BLUR_IMPL = blur_impl  # applied worker-side
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = pdf.copy()
-            # batched decomposition: one (rows, bins) matrix per
-            # channel through the axis-polymorphic kernel (bit-equal
-            # per row to the scalar path — same contract as
-            # drift_score_batch), instead of iterrows x 3 kernel calls
-            for col, src in (("pre_byte", "byte_hist"), ("pre_len", "len_hist"),
-                             ("pre_lang", "lang_hist")):
-                ch = col[4:]
-                mat = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[src]]
-                )
-                pre = kernels.precompute_channel_bands(
-                    mat, ch, single_resolution=single_res,
-                    intensity_factor=intensity_factor,
-                )
-                out[col] = list(kernels.pack_bands(pre))
-            out["pre_intensity"] = intensity_target
-            yield out
-
-    return hists.mapInPandas(gen, schema)
 
 
 def merge_baselines(*baselines: DataFrame, config: ValidationConfig | None = None) -> DataFrame:
@@ -125,17 +67,15 @@ def merge_baselines(*baselines: DataFrame, config: ValidationConfig | None = Non
     n_null_content / total_bytes sums, byte_hist / len_hist vector
     sums, fingerprint XOR) form a commutative monoid, so re-merging
     per-(bucket, lang) rows from any split equals the one-shot build
-    exactly. The DERIVED columns are recomputed after the merge:
-    lang_hist (a bucket-wide mix normalized over totals — averaging
-    two mixes would be wrong) and, when every input carried them,
-    the precomputed warm-path bands (re-derived from merged hists via
-    with_precomputed_bands under ``config`` or the build breadcrumb).
+    exactly. The DERIVED column lang_hist (a bucket-wide mix
+    normalized over totals — averaging two mixes would be wrong) is
+    recomputed after the merge. ``config`` (or the first input's build
+    breadcrumb) is carried to the merged table for save_baseline.
 
     Inputs must be disjoint: overlapping slices double-count (and
     XOR-cancel shared fingerprints) exactly as appending a duplicate
     corpus would. Cost: a union of O(buckets x langs) tables and ONE
     tiny shuffle — no corpus access."""
-    import warnings
     from functools import reduce
 
     from sparkval.histograms import PARTIAL_SCHEMA, merge_histograms_with_lang
@@ -156,62 +96,22 @@ def merge_baselines(*baselines: DataFrame, config: ValidationConfig | None = Non
             cfg = getattr(b, "_sparkval_build_config", None)
             if cfg is not None:
                 break
-    had_bands = all("pre_byte" in b.columns for b in baselines)
-    if had_bands:
-        if cfg is not None:
-            merged = with_precomputed_bands(merged, cfg)
-        else:
-            warnings.warn(
-                "merge_baselines: inputs carry precomputed bands but no "
-                "config was passed and no build breadcrumb survived — "
-                "the merged baseline is returned WITHOUT bands (cold "
-                "path). Pass config= to re-derive them.",
-                stacklevel=2,
-            )
     if cfg is not None:
         merged._sparkval_build_config = cfg
     return merged
 
 
-def estimated_baseline_bytes(
-    config: ValidationConfig, n_langs: int = 9, precompute_bands: bool = True
-) -> int:
+def estimated_baseline_bytes(config: ValidationConfig, n_langs: int = 9) -> int:
     """Upper-bound memory/disk estimate for a baseline table — the
     analog of ButteraugliReference::estimated_reference_bytes
     (precompute.rs:733-824). Lets callers size broadcast thresholds
     before building: rows = buckets x langs; per row = histograms
-    (256+64 longs) + lang_hist (9 doubles) + packed bands
-    (4x(n + n/2) doubles per channel) + scalars.
+    (256+64 longs) + lang_hist (9 doubles) + scalars.
     """
     from sparkval.config import BYTE_BINS, LEN_BINS
 
     per_row = 8 * (BYTE_BINS + LEN_BINS + n_langs + 8)  # hists + scalars
-    if precompute_bands:
-        for n in (BYTE_BINS, LEN_BINS, n_langs):
-            full = 4 * n
-            half = 4 * (n // 2) if n >= 16 else 0
-            per_row += 8 * (full + half)
     return config.n_repo_buckets * n_langs * per_row
-
-
-def compact_baseline(baseline: DataFrame, keep_fingerprints: bool = True) -> DataFrame:
-    """Shrink a baseline to its minimal compare-able form — the
-    shrink_to_fit / drop_strip_source analog (precompute.rs:733-824):
-    drops the precomputed band columns (the warm-path cache, ~3x the
-    row size) and optionally the fingerprints (disabling the
-    identical-input short-circuit). Validation against a compacted
-    baseline recomputes the baseline-side decomposition per run —
-    bit-identical scores, just slower (the cold path)."""
-    drop = [c for c in (*_PRE_COLS, "pre_intensity") if c in baseline.columns]
-    if not keep_fingerprints and "fingerprint" in baseline.columns:
-        drop.append("fingerprint")
-    out = baseline.drop(*drop)
-    # carry the build-config breadcrumb across the transformation so
-    # save_baseline(compact_baseline(...)) still records it
-    cfg = getattr(baseline, "_sparkval_build_config", None)
-    if cfg is not None:
-        out._sparkval_build_config = cfg
-    return out
 
 
 def baseline_bytes(spark_or_path, path: str | None = None) -> int:
@@ -236,14 +136,10 @@ def baseline_bytes(spark_or_path, path: str | None = None) -> int:
     return fs_tree_bytes(spark_or_path, path)
 
 
-#: config fields baked into precomputed bands — a mismatch between the
-#: build-time and load-time values makes warm bands unusable (the
-#: engine falls back to the cold path at runtime; the sidecar makes the
-#: mismatch VISIBLE to the operator instead of just slower)
-_BAND_CONFIG_FIELDS = (
-    "intensity_target", "intensity_factor", "single_resolution", "iir_blur",
-    "n_repo_buckets",
-)
+#: config fields that shape a baseline's histograms — a mismatch
+#: between the build-time and load-time values means the two sides
+#: were bucketed differently, so the load warns
+_HIST_CONFIG_FIELDS = ("n_repo_buckets",)
 
 
 def save_baseline(
@@ -252,18 +148,16 @@ def save_baseline(
     """Persist the baseline plus a metadata sidecar recording the
     fingerprint algorithm version (ADVICE round 2: a baseline persisted
     under an older fingerprint function must not silently never-match)
-    and the band-affecting build config (round-3 verdict #8: a
-    fingerprint-less baseline had no record of its intensity_target, so
-    a mismatched-config load fell back to the cold path without ever
-    telling the operator why). Sidecar write goes through the Hadoop
-    FileSystem API — works on file://, hdfs://, s3a://.
+    and the histogram-shaping build config (_HIST_CONFIG_FIELDS), so a
+    mismatched-config load is visible to the operator. Sidecar write
+    goes through the Hadoop FileSystem API — works on file://, hdfs://,
+    s3a://.
 
     Pass ``config`` EXPLICITLY when you have it: the fallback is a
     breadcrumb attribute build_baseline sticks on its return value,
-    which any intervening transformation (compact_baseline, select,
-    re-read) silently drops (review round 4) — with neither, the
-    sidecar records build_config null and load-time diffing degrades
-    to a predates-sidecars warning."""
+    which any intervening transformation (select, re-read) silently
+    drops (review round 4) — with neither, the sidecar records
+    build_config null, save warns, and load-time diffing is skipped."""
     import json
     import warnings
 
@@ -276,17 +170,15 @@ def save_baseline(
     build_config = None
     cfg = config or getattr(baseline, "_sparkval_build_config", None)
     if cfg is not None:
-        build_config = {f: getattr(cfg, f) for f in _BAND_CONFIG_FIELDS}
-    elif any(c in baseline.columns for c in _PRE_COLS):
+        build_config = {f: getattr(cfg, f) for f in _HIST_CONFIG_FIELDS}
+    else:
         # ADVICE round 4: the breadcrumb attribute is dropped by any
         # transformation build_baseline didn't anticipate — surface the
-        # degradation at SAVE time, when the caller can still fix it,
-        # not at load time when only a weaker warning remains
+        # degradation at SAVE time, when the caller can still fix it
         warnings.warn(
-            f"save_baseline({path!r}): baseline carries precomputed "
-            "bands but no build config was passed and no breadcrumb "
-            "survived — the sidecar records build_config null, so "
-            "load_baseline cannot verify band provenance. Pass "
+            f"save_baseline({path!r}): no build config was passed and no "
+            "breadcrumb survived — the sidecar records build_config "
+            "null, so load_baseline cannot verify n_repo_buckets. Pass "
             "config= explicitly.",
             stacklevel=2,
         )
@@ -307,10 +199,9 @@ def load_baseline(
 
     With ``config`` (the engine config the caller will validate under),
     also diff it against the sidecar's recorded build config and warn
-    on any band-affecting mismatch — the warm precomputed bands will be
-    rejected at runtime (pre_intensity provenance check) and every
-    compare pays the cold path; that cost should be visible at LOAD
-    time, not discovered in a profiler."""
+    when a histogram-shaping field (n_repo_buckets) differs. Other
+    recorded keys, such as the band-only fields older sidecars carry,
+    are ignored."""
     import json
     import warnings
 
@@ -328,12 +219,10 @@ def load_baseline(
         # (fingerprints dropped, provenance unverifiable) — never crash
         # the load (round-4 verdict #3; fs_write_text is rename-backed
         # so this should only happen to externally damaged files)
-        import warnings
-
         warnings.warn(
             f"baseline sidecar at {path} is unreadable ({e}); treating "
-            "the baseline as unversioned — fingerprints dropped, band "
-            "provenance unverifiable. Re-save the baseline.",
+            "the baseline as unversioned — fingerprints dropped, build "
+            "config unverifiable. Re-save the baseline.",
             stacklevel=2,
         )
         meta = {}
@@ -347,29 +236,18 @@ def load_baseline(
             stacklevel=2,
         )
         df = df.drop("fingerprint")
-    if config is not None:
-        saved_cfg = meta.get("build_config")
-        if saved_cfg is None:
-            if any(c in df.columns for c in _PRE_COLS):
-                warnings.warn(
-                    f"baseline at {path} predates build-config sidecars; "
-                    "cannot verify its precomputed bands match this engine "
-                    "config — mismatches fall back to the cold path at "
-                    "runtime. Re-save the baseline to record its config.",
-                    stacklevel=2,
-                )
-        else:
-            diffs = {
-                f: (saved_cfg.get(f), getattr(config, f))
-                for f in _BAND_CONFIG_FIELDS
-                if saved_cfg.get(f) != getattr(config, f)
-            }
-            if diffs:
-                warnings.warn(
-                    f"baseline at {path} was built under a different config "
-                    f"({diffs}); its precomputed bands will be rejected and "
-                    "every compare runs the cold path. Rebuild the baseline "
-                    "under the current config to restore the warm path.",
-                    stacklevel=2,
-                )
+    saved_cfg = meta.get("build_config")
+    if config is not None and saved_cfg is not None:
+        diffs = {
+            f: (saved_cfg.get(f), getattr(config, f))
+            for f in _HIST_CONFIG_FIELDS
+            if saved_cfg.get(f) != getattr(config, f)
+        }
+        if diffs:
+            warnings.warn(
+                f"baseline at {path} was built under a different config "
+                f"({diffs}); its partitions do not line up with this "
+                "engine's. Rebuild the baseline under the current config.",
+                stacklevel=2,
+            )
     return df

@@ -109,7 +109,7 @@ def main(argv: list[str] | None = None) -> int:
         baseline = read_corpus(spark, args.baseline)
     else:
         # config=: the build-config sidecar diff warns at LOAD time
-        # when the warm bands were baked under a different config
+        # when the baseline was bucketed under a different config
         baseline = load_baseline(spark, args.baseline, config=engine.config)
     commits = read_corpus(spark, args.commits) if args.commits else None
     manifest = read_corpus(spark, args.manifest) if args.manifest else None

@@ -43,10 +43,12 @@ class ValidationConfig:
     # factor = intensity_target / 80.0. 80.0 (the SDR default) is the
     # calibrated identity scale the golden corpus pins; raising it
     # makes the compressive gamma treat the same mass as brighter
-    # (HDR-display analog), shifting band sensitivities.
+    # (HDR-display analog), shifting band sensitivities. Applied at
+    # compare time only: a baseline is the same under any target.
     intensity_target: float = 80.0
     # Skip the half-resolution (bin-halved) pass — ~25% cheaper,
     # loses the ~15%-weight coarse component (lib.rs:466-481).
+    # Compare-time only, like intensity_target.
     single_resolution: bool = False
     # Emit the per-bin drift map alongside the scalar score
     # (compute_diffmap, lib.rs:374-381).
@@ -62,12 +64,6 @@ class ValidationConfig:
     # sha256-equality short-circuit (diff.rs:766-772): skip the drift
     # kernel for partitions whose content fingerprint set is unchanged.
     short_circuit_identical: bool = True
-    salt_buckets: int = 8  # salting fan-out for hot-repo skew
-    # O(len) recursive-Gaussian band blurs (the reference's iir-blur
-    # cargo feature, blur.rs:870-879): ~0.1-5% score deviation vs the
-    # exact FIR path. Build the baseline and validate with the SAME
-    # setting — precomputed bands bake the blur in.
-    iir_blur: bool = False
 
     @property
     def intensity_factor(self) -> float:
@@ -91,8 +87,6 @@ class ValidationConfig:
             raise ValueError(f"n_repo_buckets out of range: {self.n_repo_buckets}")
         if self.min_partition_rows < 1:
             raise ValueError("min_partition_rows must be >= 1")
-        if self.salt_buckets < 1:
-            raise ValueError("salt_buckets must be >= 1")
         for f in fields(self):
             v = getattr(self, f.name)
             if isinstance(v, float) and (v != v or v in (float("inf"), float("-inf"))):

@@ -6,19 +6,20 @@ Plan shape (designed for 10^12 files / 1000 executors):
         │ shuffle: (repo_bucket, lang, bin) rows only
         ▼
   per-partition hist table (~#buckets x #langs rows, ~3 KB each)
-        │ broadcast join with the baseline hist table
+        │ full-outer join with the baseline hist table (joined_hists)
         ▼
-  one grouped numpy kernel call per partition row  (mapInPandas)
+  one batched numpy kernel call per Arrow batch  (mapInPandas)
         ▼
   verdict table (score, pnorm_3, verdict, driftmap)
 
 The expensive thing — the corpus scan — happens exactly once; the
 drift kernel itself runs on O(partitions) rows, never on file rows.
 The baseline side is the reference's ButteraugliReference
-(precompute.rs:127-152): computed once, persisted, broadcast to every
-comparison. Full-outer join semantics cover partitions that appear or
-vanish between snapshots (all mass appearing/disappearing = max
-drift, naturally).
+(precompute.rs:127-152) recast as a persisted hist table: the kernel
+decomposes both sides from their histograms on every compare, since
+the table is only O(buckets x langs) rows. Full-outer join semantics
+cover partitions that appear or vanish between snapshots (all mass
+appearing/disappearing = max drift, naturally).
 """
 
 from __future__ import annotations
@@ -70,21 +71,6 @@ def _vec(x, n: int) -> np.ndarray:
     return np.asarray(x, dtype=np.float64)
 
 
-from functools import lru_cache
-
-
-@lru_cache(maxsize=None)
-def _expected_packed_len(channel: str, n_bins: int, single_resolution: bool) -> int:
-    """Packed-band vector length the CURRENT config produces for a
-    channel — probed through the real precompute so padding rules
-    (reflect_pad_min) and the >=16-bin half-resolution gate are never
-    duplicated here."""
-    probe = kernels.precompute_channel_bands(
-        np.zeros(n_bins), channel, single_resolution=single_resolution
-    )
-    return int(kernels.pack_bands(probe).shape[-1])
-
-
 def joined_hists(base_hists: DataFrame, snap_hists: DataFrame) -> DataFrame:
     """Full-outer join of baseline x snapshot hist tables on the
     partition key — appearing/vanishing partitions still get rows.
@@ -93,22 +79,6 @@ def joined_hists(base_hists: DataFrame, snap_hists: DataFrame) -> DataFrame:
     hints are unsupported for full-outer joins). Fingerprint columns
     ride along when present (the short-circuit predicate reads them)."""
     keys = ["repo_bucket", "lang"]
-    has_pre = "pre_byte" in base_hists.columns
-    pre_cols = (
-        [F.col(f"pre_{ch}").alias(f"b_pre_{ch}") for ch in ("byte", "len", "lang")]
-        if has_pre
-        else []
-    )
-    if has_pre:
-        # bands are only reusable at the intensity_target they were
-        # built with; pre-versioning baselines (no pre_intensity
-        # column) read as NULL -> the scorer falls back to the cold
-        # path rather than trusting bands of unknown provenance
-        pre_cols.append(
-            F.col("pre_intensity").alias("b_pre_intensity")
-            if "pre_intensity" in base_hists.columns
-            else F.lit(None).cast("double").alias("b_pre_intensity")
-        )
     fp_b = (
         [F.col("fingerprint").alias("b_fingerprint")]
         if "fingerprint" in base_hists.columns
@@ -122,7 +92,6 @@ def joined_hists(base_hists: DataFrame, snap_hists: DataFrame) -> DataFrame:
         F.col("len_hist").alias("b_len"),
         F.col("lang_hist").alias("b_lang"),
         *fp_b,
-        *pre_cols,
     )
     s = snap_hists.select(
         *keys,
@@ -144,14 +113,11 @@ def drift_verdicts_joined(
     exactly 0.0, PASS, no kernel call — no extra joins or union
     branches in the plan."""
     config.validate()
-    has_pre = "b_pre_byte" in joined.columns
 
     hf_asym = config.hf_asymmetry
     xmul = config.xmul
     intensity = config.intensity_factor
-    intensity_target = config.intensity_target
     single_res = config.single_resolution
-    blur_impl = "iir" if config.iir_blur else "fir"
     keep_map = config.compute_driftmap
     good, bad = config.good_score, config.bad_score
     min_rows = config.min_partition_rows
@@ -159,9 +125,6 @@ def drift_verdicts_joined(
     chan_bins = (("byte", BYTE_BINS), ("len", LEN_BINS), ("lang", len(LANG_VOCAB)))
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # feature flag travels in the closure and is applied inside the
-        # WORKER process (a driver-side module global would not ship)
-        kernels.DEFAULT_BLUR_IMPL = blur_impl
         for pdf in batches:
             n_rows = len(pdf)
             if n_rows == 0:
@@ -172,76 +135,27 @@ def drift_verdicts_joined(
             n_b = pdf["b_n_files"].fillna(0).astype(np.int64).to_numpy()
             n_s = pdf["s_n_files"].fillna(0).astype(np.int64).to_numpy()
 
-            # row classes: short-circuit / warm (reusable precomputed
-            # bands) / cold — each class scores as ONE batched kernel
-            # call over stacked (rows, bins) matrices (round-4 verdict
-            # #7: the per-row itertuples loop was the last per-row
-            # Python in the hot path; batching removes the ~4k-bucket
-            # practical ceiling)
+            # every non-shortcut row scores in ONE batched kernel call
+            # over stacked (rows, bins) matrices (round-4 verdict #7:
+            # the per-row itertuples loop was the last per-row Python
+            # in the hot path)
             if same_col is not None:
                 shortcut = pdf[same_col].fillna(False).to_numpy(dtype=bool)
             else:
                 shortcut = np.zeros(n_rows, dtype=bool)
-            # precomputed bands bake in the intensity_target they were
-            # built with (self-describing b_pre_intensity column) — a
-            # mismatched run falls back to the cold path for
-            # correctness instead of reusing stale bands
-            if has_pre:
-                pre_int = pd.to_numeric(pdf["b_pre_intensity"], errors="coerce")
-                warm = (
-                    pdf["b_pre_byte"].notna()
-                    & pre_int.notna()
-                    & ((pre_int - intensity_target).abs() < 1e-9)
-                ).to_numpy(dtype=bool) & ~shortcut
-                if warm.any():
-                    # baselines with mixed-provenance rows (appended
-                    # under a different single_resolution / bin config)
-                    # carry different packed lengths: stacking them
-                    # would raise and unpacking them under this config
-                    # would mis-slice — demote mismatched rows to the
-                    # cold path instead (ADVICE round 4)
-                    for ch, n in chan_bins:
-                        exp = _expected_packed_len(ch, n, single_res)
-                        lens = pdf[f"b_pre_{ch}"].map(
-                            lambda v: -1 if v is None else len(v)
-                        ).to_numpy()
-                        warm &= lens == exp
-            else:
-                warm = np.zeros(n_rows, dtype=bool)
-            cold = ~shortcut & ~warm
 
             scores = np.zeros(n_rows)
             pnorms = np.zeros(n_rows)
             driftmaps: list = [None] * n_rows
-
-            def stack(col: pd.Series, idx: np.ndarray, bins: int) -> np.ndarray:
-                vals = col.iloc[idx]
-                return np.stack([_vec(v, bins) for v in vals]) if len(idx) else (
-                    np.zeros((0, bins))
-                )
-
-            for mask, use_pre in ((cold, False), (warm, True)):
-                idx = np.flatnonzero(mask)
-                if not len(idx):
-                    continue
-                base = {ch: stack(pdf[f"b_{ch}"], idx, n) for ch, n in chan_bins}
-                snap = {ch: stack(pdf[f"s_{ch}"], idx, n) for ch, n in chan_bins}
-                pre = None
-                if use_pre:
-                    pre = {
-                        ch: kernels.unpack_bands(
-                            np.stack(
-                                [np.asarray(v, dtype=np.float64)
-                                 for v in pdf[f"b_pre_{ch}"].iloc[idx]]
-                            ),
-                            n,
-                        )
-                        for ch, n in chan_bins
-                    }
+            idx = np.flatnonzero(~shortcut)
+            if len(idx):
+                base = {ch: np.stack([_vec(v, n) for v in pdf[f"b_{ch}"].iloc[idx]])
+                        for ch, n in chan_bins}
+                snap = {ch: np.stack([_vec(v, n) for v in pdf[f"s_{ch}"].iloc[idx]])
+                        for ch, n in chan_bins}
                 sc, pn, dm = kernels.drift_score_batch(
                     base, snap, hf_asymmetry=hf_asym, xmul=xmul,
-                    single_resolution=single_res, precomputed=pre,
-                    intensity_factor=intensity,
+                    single_resolution=single_res, intensity_factor=intensity,
                 )
                 scores[idx] = sc
                 pnorms[idx] = pn

@@ -113,9 +113,9 @@ class ValidationEngine:
         self.config.validate()
 
     # -- baseline ----------------------------------------------------------
-    def build_baseline(self, corpus: DataFrame, precompute_bands: bool = True) -> DataFrame:
+    def build_baseline(self, corpus: DataFrame) -> DataFrame:
         check_corpus_schema(corpus)
-        return build_baseline(corpus, self.config, precompute_bands=precompute_bands)
+        return build_baseline(corpus, self.config)
 
     # -- one-shot validation ------------------------------------------------
     def validate(

@@ -178,88 +178,6 @@ def blur1d(v: np.ndarray, sigma: float) -> np.ndarray:
     return out / den
 
 
-def iir_coeffs(sigma: float) -> tuple[int, np.ndarray, np.ndarray]:
-    """Recursive-Gaussian section weights (Charalampidis, "Recursive
-    Implementation of the Gaussian Filter Using Truncated Cosine
-    Functions", IEEE TSP 2016) — the derivation the reference's
-    iir-blur feature uses (blur_iir.rs:42-117). All math in f64.
-
-    Returns (radius N, mul_in[3], mul_prev[3]) for the three parallel
-    2-pole sections k = 1, 3, 5.
-    """
-    s = float(sigma)
-    radius = round(3.2795 * s + 0.2546)                      # eq. (57)
-    w = np.array([1.0, 3.0, 5.0]) * (np.pi / (2.0 * radius))  # Table I
-    p = np.array([1.0, -1.0, 1.0]) / np.tan(0.5 * w)          # eq. (37)
-    r = np.array([1.0, -1.0, 1.0]) * p * p / np.sin(w)        # eq. (44)
-    rho = np.exp(-0.5 * s * s * w * w) / radius               # eq. (50)
-    d_13 = p[0] * r[1] - r[0] * p[1]
-    d_35 = p[1] * r[2] - r[1] * p[2]
-    d_51 = p[2] * r[0] - r[2] * p[0]
-    zeta_15 = d_35 / d_13                                     # eq. (52)
-    zeta_35 = d_51 / d_13
-    a = np.array([p, r, [zeta_15, zeta_35, 1.0]])
-    g = np.array([1.0, radius * radius - s * s,
-                  zeta_15 * rho[0] + zeta_35 * rho[1] + rho[2]])
-    beta = np.linalg.solve(a, g)                              # eq. (56)
-    mul_in = -beta * np.cos(w * (radius + 1.0))
-    mul_prev = -2.0 * np.cos(w)
-    return int(radius), mul_in, mul_prev
-
-
-def blur1d_iir(v: np.ndarray, sigma: float) -> np.ndarray:
-    """O(len) recursive Gaussian — the iir-blur feature path
-    (blur_iir.rs:175-227): three 2-pole sections driven by the
-    zero-padded symmetric tap x[n-N-1] + x[n+N-1]; output = section
-    sum. Zero-padding is mathematically required (the DC pole sits at
-    the edge of stability), so edges attenuate — NOT bit-equal to the
-    FIR path, same as the reference (interior parity tested).
-
-    Accepts a vector or a (rows, bins) matrix: the recurrence is
-    sequential over bins but vectorized across rows, which is the
-    shape the drift kernel calls it in (O(buckets x langs) rows).
-    """
-    big_n, mi, mp = iir_coeffs(sigma)
-    x = np.asarray(v, dtype=np.float64)
-    squeeze = x.ndim == 1
-    if squeeze:
-        x = x[None, :]
-    rows, width = x.shape
-    out = np.zeros_like(x)
-    prev = np.zeros((3, rows))
-    prev2 = np.zeros((3, rows))
-    zero = np.zeros(rows)
-    for n in range(-big_n + 1, width):
-        left = n - big_n - 1
-        right = n + big_n - 1
-        lv = x[:, left] if 0 <= left < width else zero
-        rv = x[:, right] if 0 <= right < width else zero
-        s = lv + rv
-        cur = s[None, :] * mi[:, None] - (mp[:, None] * prev + prev2)
-        prev2, prev = prev, cur
-        if n >= 0:
-            out[:, n] = cur.sum(axis=0)
-    return out[0] if squeeze else out
-
-
-#: Blur implementation switch — the reference's `iir-blur` cargo
-#: feature (blur.rs:870-879) as a module flag: "fir" (default, exact
-#: FIR with clamp-to-edge renorm) or "iir" (O(len) recursive path,
-#: ~0.1-5% score deviation, engages only when the IIR warm-up fits,
-#: i.e. len > 2*radius+1 — tiny histograms stay FIR like the
-#: reference's small-image fallback).
-DEFAULT_BLUR_IMPL = "fir"
-
-
-def blur1d_dispatch(v: np.ndarray, sigma: float) -> np.ndarray:
-    """gaussian_blur's feature dispatch (blur.rs:870-879)."""
-    if DEFAULT_BLUR_IMPL == "iir":
-        big_n = round(3.2795 * float(sigma) + 0.2546)
-        if np.asarray(v).shape[-1] > 2 * big_n + 1:
-            return blur1d_iir(v, sigma)
-    return blur1d(v, sigma)
-
-
 def blur1d_mirror(v: np.ndarray, sigma: float) -> np.ndarray:
     """Mirrored-boundary blur with normalized taps — the opsin
     pre-blur (blur_mirrored_5x5, blur.rs:1240-1258: x<0 -> -x-1, i.e.
@@ -403,17 +321,17 @@ def separate_frequencies(v: np.ndarray, full_bands: bool = True) -> dict[str, np
     Gates and clamps per band mirror psycho.rs:351-514. When
     ``full_bands`` is False the channel stops at MF (the B-channel
     rule, psycho.rs:25-27)."""
-    lf = blur1d_dispatch(v, SIGMA_LF)
+    lf = blur1d(v, SIGMA_LF)
     mf = v - lf
     if not full_bands:
         mf = remove_range_around_zero(mf, REMOVE_MF_RANGE)
         z = np.zeros_like(v)
         return {"lf": lf, "mf": mf, "hf": z, "uhf": z}
-    hf = mf - blur1d_dispatch(mf, SIGMA_HF)
+    hf = mf - blur1d(mf, SIGMA_HF)
     mf = amplify_range_around_zero(
         remove_range_around_zero(mf, REMOVE_MF_RANGE), ADD_MF_RANGE
     )
-    uhf = hf - blur1d_dispatch(hf, SIGMA_UHF)
+    uhf = hf - blur1d(hf, SIGMA_UHF)
     hf = maximum_clamp(
         amplify_range_around_zero(
             remove_range_around_zero(hf, REMOVE_HF_RANGE), ADD_HF_RANGE
@@ -527,7 +445,7 @@ def compute_mask(bands0: dict[str, np.ndarray], bands1: dict[str, np.ndarray]) -
         mu * (np.abs(bands0["uhf"]) + np.abs(bands1["uhf"]))
         + mh * (np.abs(bands0["hf"]) + np.abs(bands1["hf"]))
     )
-    smooth = blur1d_dispatch(act * MASK_MUL + MASK_BIAS, SIGMA_MASK)
+    smooth = blur1d(act * MASK_MUL + MASK_BIAS, SIGMA_MASK)
     eroded = np.maximum(fuzzy_erosion_1d(smooth) - MASK_BIAS, 0.0) / MASK_MUL
     mask_ac = _mask_curve(eroded, MASK_Y_OFFSET, MASK_Y_SCALER, MASK_Y_MUL)
     mask_dc = _mask_curve(eroded, MASK_DC_Y_OFFSET, MASK_DC_Y_SCALER, MASK_DC_Y_MUL)
@@ -584,69 +502,13 @@ def normalize_hist(counts: np.ndarray) -> np.ndarray:
     return np.where(total > 0, c / safe * c.shape[-1] * INTENSITY_MID, 0.0)
 
 
-def precompute_channel_bands(c0: np.ndarray, channel: str,
-                             single_resolution: bool = False,
-                             intensity_factor: float = 1.0) -> dict:
-    """Reference-side precompute (ButteraugliReference,
-    precompute.rs:127-152): decompose the baseline once, reuse across
-    every snapshot comparison. Returns {'full': bands, 'half': bands?}
-    with bands exactly as separate_frequencies produces them, so the
-    warm path is bit-identical to the cold path."""
-    spec = CHANNELS[channel]
-    c0 = reflect_pad_min(np.asarray(c0, dtype=np.float64))
-    out = {"full": separate_frequencies(
-        opsin_dynamics(normalize_hist(c0) * intensity_factor),
-        full_bands=spec["full"])}
-    if not single_resolution and c0.shape[-1] >= 16:
-        ch = downsample_2x(c0)
-        out["half"] = separate_frequencies(
-            opsin_dynamics(normalize_hist(ch) * intensity_factor),
-            full_bands=spec["full"])
-    return out
-
-
-_BAND_ORDER = ("lf", "mf", "hf", "uhf")
-
-
-def pack_bands(pre: dict) -> np.ndarray:
-    """Flatten precomputed bands to one vector for an ArrayType column:
-    [4 x n full bands | 4 x n/2 half bands (if present)]. Band entries
-    may be (rows, n) matrices (batched precompute) — packing then
-    yields (rows, packed_len), one packed vector per row."""
-    parts = [pre["full"][b] for b in _BAND_ORDER]
-    if "half" in pre:
-        parts += [pre["half"][b] for b in _BAND_ORDER]
-    return np.concatenate(parts, axis=-1)
-
-
-def unpack_bands(flat: np.ndarray, n_bins: int) -> dict:
-    """Inverse of pack_bands. Accepts a packed vector or a (rows,
-    packed_len) matrix — band entries come back with a matching
-    leading shape, so a whole warm batch unpacks in six slices."""
-    flat = np.asarray(flat, dtype=np.float64)
-    full = {
-        b: flat[..., i * n_bins:(i + 1) * n_bins] for i, b in enumerate(_BAND_ORDER)
-    }
-    out = {"full": full}
-    rest = flat[..., 4 * n_bins:]
-    if rest.shape[-1]:
-        nh = rest.shape[-1] // 4
-        out["half"] = {
-            b: rest[..., i * nh:(i + 1) * nh] for i, b in enumerate(_BAND_ORDER)
-        }
-    return out
-
-
 def channel_driftmap(c0: np.ndarray, c1: np.ndarray, channel: str,
                      hf_asymmetry: float = 1.0,
                      xmul: float = 1.0,
-                     pre_b0: dict[str, np.ndarray] | None = None,
                      intensity_factor: float = 1.0) -> np.ndarray:
     """Single-resolution drift map for one distribution family
     (the recast of compute_diffmap_single_resolution_linear,
-    diff.rs:627-658). ``pre_b0`` supplies precomputed baseline bands
-    (the warm path, compute_diffmap_with_precomputed,
-    precompute.rs:1235+) — results are bit-identical either way.
+    diff.rs:627-658).
 
     ``intensity_factor`` scales the normalized intensity BEFORE the
     opsin sensitivity pass — the ButteraugliParams.intensity_target
@@ -669,12 +531,9 @@ def channel_driftmap(c0: np.ndarray, c1: np.ndarray, channel: str,
         spec = dict(spec)
         for wk in ("w_malta_uhf", "w_malta_hf", "w_ac", "w_dc"):
             spec[wk] = spec[wk] * xmul
+    v0 = opsin_dynamics(normalize_hist(c0) * intensity_factor)
     v1 = opsin_dynamics(normalize_hist(c1) * intensity_factor)
-    if pre_b0 is None:
-        v0 = opsin_dynamics(normalize_hist(c0) * intensity_factor)
-        b0 = separate_frequencies(v0, full_bands=spec["full"])
-    else:
-        b0 = pre_b0
+    b0 = separate_frequencies(v0, full_bands=spec["full"])
     b1 = separate_frequencies(v1, full_bands=spec["full"])
 
     mask_ac, mask_dc = compute_mask(b0, b1)
@@ -717,20 +576,16 @@ def channel_driftmap_multires(c0: np.ndarray, c1: np.ndarray, channel: str,
                               hf_asymmetry: float = 1.0,
                               xmul: float = 1.0,
                               single_resolution: bool = False,
-                              pre: dict | None = None,
                               intensity_factor: float = 1.0) -> np.ndarray:
     """Full + half-resolution pass (diff.rs:666-695). The half-res
     pass is skipped for vectors under 16 bins (the >=15px gate,
-    diff.rs:673) or when single_resolution is set (lib.rs:466-481).
-    ``pre`` is the precompute_channel_bands output for the warm path."""
+    diff.rs:673) or when single_resolution is set (lib.rs:466-481)."""
     full = channel_driftmap(c0, c1, channel, hf_asymmetry, xmul,
-                            pre_b0=pre["full"] if pre else None,
                             intensity_factor=intensity_factor)
     if single_resolution or np.asarray(c0).shape[-1] < 16:
         return full
     coarse = channel_driftmap(
         downsample_2x(c0), downsample_2x(c1), channel, hf_asymmetry, xmul,
-        pre_b0=pre.get("half") if pre else None,
         intensity_factor=intensity_factor,
     )
     return add_supersampled_2x(full, coarse)
@@ -763,7 +618,6 @@ def drift_score_batch(
     hf_asymmetry: float = 1.0,
     xmul: float = 1.0,
     single_resolution: bool = False,
-    precomputed: dict[str, dict] | None = None,
     intensity_factor: float = 1.0,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized drift query over a BATCH of partitions (round-4
@@ -778,10 +632,6 @@ def drift_score_batch(
     inside any batch (element-independent tap loops; per-row
     reductions use keepdims) — drift_score IS this function at
     rows=1, so the golden corpus pins both paths.
-
-    ``precomputed`` (warm path) must cover ALL rows of the batch when
-    given: callers partition mixed warm/cold batches first
-    (sparkval.drift does).
     """
     maps = {}
     for ch in ("byte", "len", "lang"):
@@ -792,7 +642,6 @@ def drift_score_batch(
             hf_asymmetry=hf_asymmetry,
             xmul=xmul,
             single_resolution=single_resolution,
-            pre=(precomputed or {}).get(ch),
             intensity_factor=intensity_factor,
         )
     # cross-channel suppression (psycho.rs:192-207): the secondary
@@ -820,7 +669,6 @@ def drift_score(
     hf_asymmetry: float = 1.0,
     xmul: float = 1.0,
     single_resolution: bool = False,
-    precomputed: dict[str, dict] | None = None,
     intensity_factor: float = 1.0,
 ) -> tuple[float, float, np.ndarray]:
     """Top-level drift query for one partition: three distribution
@@ -835,19 +683,9 @@ def drift_score(
     """
     b1 = {ch: np.asarray(base[ch], dtype=np.float64)[None, :] for ch in base}
     s1 = {ch: np.asarray(snap[ch], dtype=np.float64)[None, :] for ch in snap}
-    pre = None
-    if precomputed is not None:
-        pre = {
-            ch: {
-                res: {b: np.asarray(v, dtype=np.float64)[None, :]
-                      for b, v in bands.items()}
-                for res, bands in chpre.items()
-            }
-            for ch, chpre in precomputed.items()
-        }
     scores, pn, dm = drift_score_batch(
         b1, s1, hf_asymmetry=hf_asymmetry, xmul=xmul,
-        single_resolution=single_resolution, precomputed=pre,
+        single_resolution=single_resolution,
         intensity_factor=intensity_factor,
     )
     return float(scores[0]), float(pn[0]), dm[0]

@@ -136,42 +136,33 @@ def test_spark_scores_match_numpy_kernel(spark, engine, baseline_df):
 
 
 def test_warm_precompute_bit_identical(spark, baseline_df):
-    """Warm path (precomputed baseline bands, precompute.rs:1235+) must
-    produce bit-identical scores to the cold path — the reference's
-    warm-vs-cold compare contract."""
+    """Baselines persisted when the engine stored precomputed bands
+    carry pre_byte/pre_len/pre_lang (packed lengths 1536/384/36 under
+    the default config) and pre_intensity. Validation scores every
+    partition from the histograms, so junk band columns change
+    nothing: verdicts equal those against the plain baseline."""
     df, pdf = baseline_df
     snap = spark.createDataFrame(fx.distort(pdf, "noise_7_0.3"))
     eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
-    cold_base = eng.build_baseline(df, precompute_bands=False)
-    warm_base = eng.build_baseline(df, precompute_bands=True)
-    assert "pre_byte" in warm_base.columns and "pre_byte" not in cold_base.columns
-    cold = eng.validate(snap, cold_base)["verdicts"].toPandas()
-    warm = eng.validate(snap, warm_base)["verdicts"].toPandas()
-    a = cold.set_index(["repo_bucket", "lang"])["score"].sort_index()
-    b = warm.set_index(["repo_bucket", "lang"])["score"].sort_index()
-    assert list(a.index) == list(b.index)
-    assert np.array_equal(a.to_numpy(), b.to_numpy())
+    plain = eng.build_baseline(df)
 
+    def zeros(n):
+        return F.array_repeat(F.lit(0.0), n)
 
-def test_kernel_warm_path_bit_identical():
-    """Pure-kernel warm parity (no Spark): pack/unpack roundtrip too."""
-    from sparkval import kernels as K
-
-    rng = np.random.default_rng(11)
-    base = {"byte": rng.integers(0, 500, 256).astype(float),
-            "len": rng.integers(0, 200, 64).astype(float),
-            "lang": rng.integers(0, 50, 9).astype(float)}
-    snap = {k: v + rng.integers(0, 30, len(v)) for k, v in base.items()}
-    cold = K.drift_score(base, snap)
-    pre = {
-        ch: K.unpack_bands(
-            K.pack_bands(K.precompute_channel_bands(base[ch], ch)), len(base[ch])
-        )
-        for ch in base
-    }
-    warm = K.drift_score(base, snap, precomputed=pre)
-    assert cold[0] == warm[0] and cold[1] == warm[1]
-    assert np.array_equal(cold[2], warm[2])
+    stale = plain.withColumns({
+        "pre_byte": zeros(1536),
+        "pre_len": zeros(384),
+        "pre_lang": zeros(36),
+        "pre_intensity": F.lit(80.0),
+    })
+    cols = ["repo_bucket", "lang", "score", "pnorm_3", "verdict"]
+    key = ["repo_bucket", "lang"]
+    a = eng.validate(snap, plain)["verdicts"].toPandas()[cols]
+    b = eng.validate(snap, stale)["verdicts"].toPandas()[cols]
+    assert (a["score"] > 0).any()
+    assert a.sort_values(key).reset_index(drop=True).equals(
+        b.sort_values(key).reset_index(drop=True)
+    )
 
 
 def test_partition_parity(spark, engine, baseline_df):
@@ -226,29 +217,6 @@ def test_resume_parity(spark, engine, baseline_df, tmp_path):
             assert merged.loc[idx, "score"] == want.loc[idx, "score"], idx
 
 
-def test_iir_blur_flag_scores_close_and_identity_zero(spark, baseline_df):
-    """config.iir_blur must reach the WORKER kernels (a driver-side
-    module global would not ship with the pickled closure): scores stay
-    within the documented 0.1-5% envelope of the FIR path and identity
-    is still exactly 0."""
-    df, pdf = baseline_df
-    snap = spark.createDataFrame(fx.distort(pdf, "shift_3"))
-
-    def scores(cfg):
-        eng = ValidationEngine(cfg)
-        out = eng.validate(snap, eng.build_baseline(df))["verdicts"].toPandas()
-        return out.set_index(["repo_bucket", "lang"])["score"].sort_index()
-
-    fir = scores(ValidationConfig(short_circuit_identical=False))
-    iir = scores(ValidationConfig(short_circuit_identical=False, iir_blur=True))
-    assert (fir > 0).any()
-    assert np.allclose(iir.to_numpy(), fir.to_numpy(), rtol=0.05)
-
-    eng = ValidationEngine(ValidationConfig(iir_blur=True))
-    ident = eng.validate(df, eng.build_baseline(df))["verdicts"].toPandas()
-    assert (ident["score"] == 0.0).all()
-
-
 def test_bucket_headroom_4096(spark):
     """n_repo_buckets headroom (round-2 verdict ask): the two
     O(buckets x langs) assumptions — the kernel stage's batched
@@ -301,52 +269,15 @@ def test_bucket_headroom_4096(spark):
     assert keys == sorted(keys)
 
 
-def test_compact_baseline_bit_identical_scores(spark, tmp_path):
-    """compact_baseline (shrink_to_fit/drop_strip_source analog) drops
-    the warm-path cache columns; validating against the compacted
-    baseline must produce bit-identical verdicts via the cold path,
-    and the persisted compacted form must actually be smaller."""
-    from sparkval import fixtures as fx
-    from sparkval.baseline import baseline_bytes, compact_baseline, save_baseline
-    from sparkval.config import ValidationConfig
-    from sparkval.engine import ValidationEngine
-
-    eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
-    base_pdf = fx.make_corpus("random_mid", 500)
-    snap = spark.createDataFrame(fx.distort(base_pdf, "quantize_3"))
-    full = eng.build_baseline(spark.createDataFrame(base_pdf))
-    compacted = compact_baseline(full)
-    assert not any(c.startswith("pre_") for c in compacted.columns)
-    assert "fingerprint" in compacted.columns
-
-    a = eng.validate(snap, full)["verdicts"].toPandas()
-    b = eng.validate(snap, compacted)["verdicts"].toPandas()
-    cols = ["repo_bucket", "lang", "score", "pnorm_3", "verdict"]
-    key = ["repo_bucket", "lang"]
-    assert a[cols].sort_values(key).reset_index(drop=True).equals(
-        b[cols].sort_values(key).reset_index(drop=True)
-    )
-
-    p_full, p_small = str(tmp_path / "bf"), str(tmp_path / "bc")
-    save_baseline(full, p_full)
-    save_baseline(compacted, p_small)
-    assert baseline_bytes(p_small) < baseline_bytes(p_full)
-
-
-def test_intensity_target_semantics(spark):
+def test_intensity_target_semantics():
     """ButteraugliParams.intensity_target analog (lib.rs:43-57):
     identity stays exactly zero at any target; a distorted snapshot's
     score MOVES when the target moves (the gamma operates at a
     different point of its curve); the default 80.0 is the calibrated
     identity scale (bit-equal to pre-param behavior, which the golden
-    corpus pins); warm precomputed bands built at a non-default target
-    reproduce the cold path bit-identically."""
-    import numpy as np
-
+    corpus pins)."""
     from sparkval import fixtures as fx
     from sparkval import kernels as K
-    from sparkval.config import ValidationConfig
-    from sparkval.engine import ValidationEngine
 
     b, s, _ = fx.make_case("random_mid__quantize_3", n_rows=600)
     hb, hs = fx.corpus_hists(b), fx.corpus_hists(s)
@@ -355,28 +286,11 @@ def test_intensity_target_semantics(spark):
     assert s250 > 0 and abs(s250 - s80) / s80 > 0.01
     assert K.drift_score(hb, hb, intensity_factor=250.0 / 80.0)[0] == 0.0
 
-    # Spark warm-path parity at target 250: precomputed bands (which
-    # bake the factor in) == cold path, exactly
-    cfg = ValidationConfig(intensity_target=250.0, short_circuit_identical=False)
-    eng = ValidationEngine(cfg)
-    base_df = spark.createDataFrame(b)
-    snap_df = spark.createDataFrame(s)
-    warm = eng.validate(snap_df, eng.build_baseline(base_df))["verdicts"].toPandas()
-    cold = eng.validate(
-        snap_df, eng.build_baseline(base_df, precompute_bands=False)
-    )["verdicts"].toPandas()
-    key = ["repo_bucket", "lang"]
-    a = warm.sort_values(key)["score"].to_numpy()
-    c = cold.sort_values(key)["score"].to_numpy()
-    assert np.array_equal(a, c)
-
 
 def test_intensity_mismatched_bands_fall_back_to_cold_path(spark):
-    """A baseline whose precomputed bands were built at target 80 must
-    NOT be reused by a target-250 run: the scorer detects the
-    self-describing pre_intensity mismatch and recomputes baseline
-    bands cold — scores equal a pure target-250 run, not the stale
-    target-80 warm ones."""
+    """A baseline built under target 80 validates under target 250
+    exactly like one built under 250: intensity applies at compare
+    time, so the baseline does not depend on it."""
     import numpy as np
 
     from sparkval import fixtures as fx
@@ -396,7 +310,7 @@ def test_intensity_mismatched_bands_fall_back_to_cold_path(spark):
     )
     got = eng250.validate(snap_df, base80)["verdicts"].toPandas()
     want = eng250.validate(
-        snap_df, eng250.build_baseline(base_df, precompute_bands=False)
+        snap_df, eng250.build_baseline(base_df)
     )["verdicts"].toPandas()
     key = ["repo_bucket", "lang"]
     assert np.array_equal(
@@ -461,8 +375,8 @@ def test_drill_down_bucket_attributes_to_repo(spark):
 def test_merge_baselines_bit_equal_to_full_build(spark, engine):
     """merge(build(A), build(B), build(C)) over a disjoint 3-way split
     must be BIT-identical to build(A+B+C) in every column — the
-    accumulator monoid, the renormalized lang_hist, the XOR'd
-    fingerprint, and the re-derived warm bands — and the merged
+    accumulator monoid, the renormalized lang_hist and the XOR'd
+    fingerprint — and the merged
     baseline must identity-short-circuit the full corpus (score 0)."""
     from sparkval.baseline import merge_baselines
 

@@ -104,7 +104,7 @@ def test_stream_cumulative_drift_matches_numpy(spark, tmp_path):
     spark.createDataFrame(snap_pdf).write.parquet(src)
 
     eng = ValidationEngine(CFG)
-    base = eng.build_baseline(spark.createDataFrame(base_pdf), precompute_bands=False)
+    base = eng.build_baseline(spark.createDataFrame(base_pdf))
     base.persist().count()
 
     stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)

@@ -130,7 +130,7 @@ def test_strip_config_change_invalidates_checkpoint(spark, tmp_path):
 def test_baseline_sidecar_records_build_config_and_warns(spark, tmp_path):
     from sparkval.baseline import load_baseline, save_baseline
 
-    cfg = ValidationConfig(intensity_target=120.0)
+    cfg = ValidationConfig(n_repo_buckets=8)
     eng = ValidationEngine(cfg)
     base = eng.build_baseline(_corpus(spark, n=400))
     p = str(tmp_path / "base.parquet")
@@ -141,9 +141,9 @@ def test_baseline_sidecar_records_build_config_and_warns(spark, tmp_path):
         warnings.simplefilter("error")
         load_baseline(spark, p, config=cfg)
 
-    # band-affecting mismatch: warned at load time, naming the field
-    with pytest.warns(UserWarning, match="intensity_target"):
-        load_baseline(spark, p, config=ValidationConfig(intensity_target=80.0))
+    # histogram-shaping mismatch: warned at load time, naming the field
+    with pytest.warns(UserWarning, match="n_repo_buckets"):
+        load_baseline(spark, p, config=ValidationConfig(n_repo_buckets=16))
 
     # no config passed: legacy behavior, silent
     with warnings.catch_warnings():
@@ -265,30 +265,31 @@ def test_strip_half_committed_strip_reruns_both_writes(spark, tmp_path):
     assert av.equals(bv)
 
 
-def test_sidecar_config_survives_compact_and_explicit_param(spark, tmp_path):
-    """Review round 4: the build-config breadcrumb must survive
-    compact_baseline, and save_baseline(config=...) records it even
-    for DataFrames that lost the attribute (e.g. re-read baselines)."""
+def test_sidecar_config_from_breadcrumb_and_explicit_param(spark, tmp_path):
+    """Review round 4: save_baseline records the build config from
+    build_baseline's breadcrumb, and save_baseline(config=...) records
+    it even for DataFrames that lost the attribute (e.g. re-read
+    baselines)."""
     import json
 
-    from sparkval.baseline import compact_baseline, save_baseline
+    from sparkval.baseline import save_baseline
     from sparkval.io import fs_read_text
 
-    cfg = ValidationConfig(intensity_target=160.0)
+    cfg = ValidationConfig(n_repo_buckets=8)
     eng = ValidationEngine(cfg)
     base = eng.build_baseline(_corpus(spark, n=300))
 
-    p1 = str(tmp_path / "compacted.parquet")
-    save_baseline(compact_baseline(base), p1)
+    p1 = str(tmp_path / "built.parquet")
+    save_baseline(base, p1)
     meta1 = json.loads(fs_read_text(spark, f"{p1}/_sparkval_meta.json"))
-    assert meta1["build_config"]["intensity_target"] == 160.0
+    assert meta1["build_config"] == {"n_repo_buckets": 8}
 
     # attribute-less frame (round-tripped) + explicit config param
     rt = spark.read.parquet(p1)
     p2 = str(tmp_path / "rt.parquet")
     save_baseline(rt, p2, config=cfg)
     meta2 = json.loads(fs_read_text(spark, f"{p2}/_sparkval_meta.json"))
-    assert meta2["build_config"]["intensity_target"] == 160.0
+    assert meta2["build_config"] == {"n_repo_buckets": 8}
 
 
 def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
