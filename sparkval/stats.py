@@ -6,14 +6,20 @@ percentile_approx, approx_count_distinct (Spark's native HLL++).
 Shannon entropy over the byte-frequency vector is computed with
 built-in higher-order array functions — JVM-side, no UDF.
 
-The t-digest length sketch is the only Python: map-side partial
-digests (mapInPandas, numpy) merged per key in applyInPandas —
-the StripReducer shape (strip.rs:126-209) with a custom monoid.
+Mergeable sketches: HLL distinct counts stay on Spark's native
+hll_sketch_agg. The four Python sketches — t-digest lengths,
+count-min frequencies, Bloom membership, KMV set overlap — are each a
+``_Monoid`` on ONE path, the StripReducer shape (strip.rs:126-209):
+``_sketch_build`` collapses each Arrow batch to per-group partials
+(mapInPandas, numpy) and merges them per key (applyInPandas), and
+``_sketch_rollup`` merges built sketches up to coarser groups.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import re
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -54,7 +60,7 @@ def column_stats(corpus: DataFrame, group_cols: list[str] | None = None) -> Data
     """
     group_cols = group_cols if group_cols is not None else ["lang"]
     length = F.length("content")
-    agg = corpus.groupBy(*group_cols).agg(
+    return corpus.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("content").isNull().cast("long")).alias("n_null_content"),
         F.min(length).alias("len_min"),
@@ -64,7 +70,6 @@ def column_stats(corpus: DataFrame, group_cols: list[str] | None = None) -> Data
         F.approx_count_distinct("path").alias("approx_distinct_paths"),
         F.approx_count_distinct("commit").alias("approx_distinct_commits"),
     )
-    return agg
 
 
 def per_repo_stats(corpus: DataFrame, salt_buckets: int = 8) -> DataFrame:
@@ -102,26 +107,95 @@ def per_repo_stats(corpus: DataFrame, salt_buckets: int = 8) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# t-digest length sketch: mapInPandas partials -> applyInPandas merge
+# mergeable sketch monoids: mapInPandas partials -> applyInPandas merge
 # --------------------------------------------------------------------------
 
-_PARTIAL_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo_bucket", T.IntegerType(), False),
-        T.StructField("lang", T.StringType(), False),
-        T.StructField("digest", T.ArrayType(T.DoubleType()), False),
-    ]
-)
+_LONGS = T.ArrayType(T.LongType())
 
-_DIGEST_SCHEMA = T.StructType(
-    [
-        T.StructField("repo_bucket", T.IntegerType(), False),
-        T.StructField("lang", T.StringType(), False),
-        T.StructField("len_tdigest", T.ArrayType(T.DoubleType()), False),
-        T.StructField("len_p50", T.DoubleType(), False),
-        T.StructField("len_p90", T.DoubleType(), False),
-        T.StructField("len_p99", T.DoubleType(), False),
-    ]
+
+class _Monoid(NamedTuple):
+    """One mergeable sketch family on the shared build/rollup path.
+
+    ``fields``: the merged sketch columns, after the group keys.
+    ``partial(values)``: one group's non-NULL values from one Arrow
+    batch (a pandas Series) -> {column: value} of its partial row.
+    ``merge(rows)``: one group's partial (or merged) rows as a pandas
+    frame -> {column: value} of the merged row. ``partial_fields``:
+    the partial row's columns when they differ from ``fields``.
+    ``null_keys``: whether the output declares group keys nullable."""
+
+    fields: list[T.StructField]
+    partial: Callable[[pd.Series], dict]
+    merge: Callable[[pd.DataFrame], dict]
+    partial_fields: list[T.StructField] | None = None
+    null_keys: bool = True
+
+
+def _sketch_value(col) -> F.Column:
+    """The sketched value (column name or Column) as ``_v``, cast to
+    STRING (no-op for string inputs): the Python hashers encode utf-8
+    and the codegen probe expressions hash the string bytes, so a
+    non-string column would either crash the executor (AttributeError
+    in term_hash) or disagree with the expression side — the cast
+    aligns both by construction (ADVICE r5)."""
+    return (F.col(col) if isinstance(col, str) else col).cast("string").alias("_v")
+
+
+def _sketch_build(part: DataFrame, group_cols: list[str], monoid: _Monoid) -> DataFrame:
+    """Per-group sketches of ``part`` (``group_cols`` + the value
+    ``_v``): one mapInPandas pass collapses each Arrow batch to one
+    partial row per group, which ``_sketch_rollup`` merges per key —
+    the shuffle carries one partial sketch per (task, group), never a
+    row per value."""
+    if not group_cols:
+        raise ValueError("group_cols must be non-empty; roll up to "
+                         "global with the family's merge_*(sketches, [])")
+
+    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            out = []
+            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
+                key = key if isinstance(key, tuple) else (key,)
+                out.append(dict(zip(group_cols, key)) | monoid.partial(grp["_v"].dropna()))
+            yield pd.DataFrame(out)
+
+    keys = [T.StructField(c, part.schema[c].dataType, monoid.null_keys) for c in group_cols]
+    schema = T.StructType(keys + (monoid.partial_fields or monoid.fields))
+    return _sketch_rollup(part.mapInPandas(partials, schema), group_cols, monoid)
+
+
+def _sketch_rollup(sketches: DataFrame, group_cols: list[str], monoid: _Monoid) -> DataFrame:
+    """Merge sketch rows per ``group_cols`` key (one applyInPandas), or
+    to one global row with ``group_cols=[]`` via a constant ``_g``
+    key that is dropped again."""
+    tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
+    keys = group_cols or ["_g"]
+
+    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame([dict(zip(keys, key)) | monoid.merge(pdf)])
+
+    fields = [T.StructField(c, tmp.schema[c].dataType, monoid.null_keys) for c in keys]
+    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(fields + monoid.fields))
+    return out if group_cols else out.drop("_g")
+
+
+def _tdigest_merge(rows: pd.DataFrame) -> dict:
+    d = tdigest.merge_digests([np.asarray(x) for x in rows["digest"]])
+    # an all-NULL group's empty digest has NaN quantiles, which Arrow
+    # ships as NULL — F.percentile's answer over all-NULL input
+    p50, p90, p99 = tdigest.quantile(d, np.array([0.5, 0.9, 0.99]))
+    return {"len_tdigest": d, "len_p50": p50, "len_p90": p90, "len_p99": p99}
+
+
+_TDIGEST = _Monoid(
+    [T.StructField("len_tdigest", T.ArrayType(T.DoubleType()), False)]
+    + [T.StructField(f"len_p{p}", T.DoubleType(), True) for p in (50, 90, 99)],
+    lambda v: {"digest": tdigest.digest_from_values(v.to_numpy(dtype=np.float64))},
+    _tdigest_merge,
+    [T.StructField("digest", T.ArrayType(T.DoubleType()), False)],
+    null_keys=False,  # prepared_scan's (repo_bucket, lang) are never NULL
 )
 
 
@@ -131,42 +205,14 @@ def length_tdigests(corpus: DataFrame, config: ValidationConfig) -> DataFrame:
     Partial digests collapse each Arrow batch to ~100 centroids per
     key, so the shuffle carries ~1.6 KB per (task, key) instead of
     raw lengths — mergeable sketch, same scale story as histograms.
+    A group whose content is all NULL gets an empty digest and NULL
+    quantiles.
     """
-    n_buckets = config.n_repo_buckets
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for (b, lg), grp in pdf.groupby(["_b", "_l"], sort=False):
-                d = tdigest.digest_from_values(grp["_len"].dropna().to_numpy(dtype=np.float64))
-                out.append({"repo_bucket": int(b), "lang": lg, "digest": d})
-            yield pd.DataFrame(out)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        d = tdigest.merge_digests([np.asarray(x) for x in pdf["digest"]])
-        p50, p90, p99 = tdigest.quantile(d, np.array([0.5, 0.9, 0.99]))
-        return pd.DataFrame(
-            [
-                {
-                    "repo_bucket": int(key[0]),
-                    "lang": key[1],
-                    "len_tdigest": d,
-                    "len_p50": p50,
-                    "len_p90": p90,
-                    "len_p99": p99,
-                }
-            ]
-        )
-
     # per-row prep (bucket, lang-norm, length) is JVM-side codegen
-    part = (
-        prepared_scan(corpus, n_buckets)
-        .select("_b", "_l", "_len")
-        .mapInPandas(partials, _PARTIAL_DIGEST_SCHEMA)
+    part = prepared_scan(corpus, config.n_repo_buckets).select(
+        F.col("_b").alias("repo_bucket"), F.col("_l").alias("lang"), F.col("_len").alias("_v")
     )
-    return part.groupBy("repo_bucket", "lang").applyInPandas(merge, _DIGEST_SCHEMA)
+    return _sketch_build(part, ["repo_bucket", "lang"], _TDIGEST)
 
 
 def distinct_sketches(
@@ -192,13 +238,7 @@ def distinct_sketches(
 def merge_distinct_sketches(sketches: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
     """Roll sketches up to coarser groups (or global with group_cols=[])
     via hll_union_agg; estimate = hll_sketch_estimate."""
-    group_cols = group_cols or []
-    agg = (
-        sketches.groupBy(*group_cols)
-        if group_cols
-        else sketches.groupBy()
-    )
-    return agg.agg(
+    return sketches.groupBy(*(group_cols or [])).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("distinct_estimate"),
         F.sum("n_rows").alias("n_rows"),
     )
@@ -378,8 +418,50 @@ def psi_report(
 
 
 # --------------------------------------------------------------------------
-# count-min heavy-hitter sketches: the 4th mergeable monoid
+# hashing sketches: count-min frequency, Bloom membership, KMV overlap
 # --------------------------------------------------------------------------
+
+def _counted(name: str, sketch: Callable[[pd.Series], np.ndarray], merge) -> _Monoid:
+    """A fixed-size int64 sketch column ``name`` plus ``n_values``, the
+    non-NULL values it absorbed (count-min, Bloom)."""
+    return _Monoid(
+        [T.StructField(name, _LONGS, False), T.StructField("n_values", T.LongType(), False)],
+        lambda values: {name: sketch(values), "n_values": len(values)},
+        lambda rows: {name: merge(rows[name]), "n_values": int(rows["n_values"].sum())},
+    )
+
+
+def _countmin_monoid(depth: int = 4, width: int = 2048) -> _Monoid:
+    from sparkval import countmin
+
+    def sketch(values: pd.Series) -> np.ndarray:
+        # hash each distinct value once, weighted by its batch count
+        vc = values.value_counts()
+        return countmin.update(
+            countmin.empty_sketch(depth, width), vc.index.to_numpy(), vc.to_numpy(), depth, width
+        )
+
+    return _counted("sketch", sketch, countmin.merge)
+
+
+def _bloom_monoid(k: int = 4, m_bits: int = 1 << 20) -> _Monoid:
+    from sparkval import bloom
+
+    def sketch(values: pd.Series) -> np.ndarray:
+        return bloom.add(bloom.empty_filter(m_bits), values.unique(), k, m_bits)
+
+    return _counted("filter", sketch, bloom.merge)
+
+
+def _kmv_monoid(k: int = 256) -> _Monoid:
+    from sparkval import kmv
+
+    return _Monoid(
+        [T.StructField("sketch", _LONGS, False)],
+        lambda values: {"sketch": kmv.sketch_of(values.unique(), k)},
+        lambda rows: {"sketch": kmv.merge(rows["sketch"], k)},
+    )
+
 
 def countmin_sketches(
     df: DataFrame,
@@ -390,70 +472,17 @@ def countmin_sketches(
 ) -> DataFrame:
     """Per-group count-min sketches over a categorical column — the
     heavy-hitter companion to the histogram/t-digest/HLL monoids:
-    per-task partial sketches (mapInPandas, numpy) sum elementwise in
-    an applyInPandas merge, so persisted sketches answer frequency
-    queries over ANY group rollup without rescanning. Shuffle volume
-    is depth*width longs (~64 KB at the 4x2048 default) per (task,
-    group) — never a row per occurrence. Hashing is per distinct
-    value per batch (pre-aggregated with value_counts), and the hash
-    chain (md5 prefix + mod-prime mixing, sparkval.countmin) is
-    engine-replayable, so estimates carry a FULL value oracle."""
-    from sparkval import countmin
-
+    partial sketches sum elementwise, so persisted sketches answer
+    frequency queries over ANY group rollup without rescanning. A
+    partial is depth*width longs (~64 KB at the 4x2048 default) per
+    (task, group). The hash chain (md5 prefix + mod-prime mixing,
+    sparkval.countmin) is engine-replayable, so estimates carry a
+    FULL value oracle."""
     group_cols = group_cols if group_cols is not None else ["lang"]
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty; roll up to "
-                         "global with merge_countmin(sketches, [])")
-    fields = [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
-    schema = T.StructType(
-        fields
-        + [
-            T.StructField("sketch", T.ArrayType(T.LongType()), False),
-            T.StructField("n_values", T.LongType(), False),
-        ]
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                vc = grp[col].dropna().value_counts()
-                sk = countmin.empty_sketch(depth, width)
-                countmin.update(
-                    sk, vc.index.to_numpy(), vc.to_numpy(), depth, width
-                )
-                out.append(
-                    dict(zip(group_cols, key))
-                    | {"sketch": sk, "n_values": int(vc.sum())}
-                )
-            yield pd.DataFrame(out)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import countmin as cm
-
-        merged = cm.merge(pdf["sketch"])
-        return pd.DataFrame(
-            [
-                dict(zip(group_cols, key))
-                | {"sketch": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
-
     # spread a few-partition input before the Python sketch kernel
-    # (no-op whenever partitions >= slots — see _spread_small_input).
-    # The value column is cast to STRING (no-op for string inputs):
-    # the Python hasher encodes utf-8 and the codegen estimate expr
-    # hashes the string bytes, so a non-string column would either
-    # crash the executor (AttributeError in term_hash) or disagree
-    # with the expression side — the cast aligns both by
-    # construction (ADVICE r5)
-    part = _spread_small_input(
-        df.select(*group_cols, F.col(col).cast("string").alias(col))
-    ).mapInPandas(partials, schema)
-    return part.groupBy(*group_cols).applyInPandas(merge, schema)
+    # (no-op whenever partitions >= slots — see _spread_small_input)
+    part = _spread_small_input(df.select(*group_cols, _sketch_value(col)))
+    return _sketch_build(part, group_cols, _countmin_monoid(depth, width))
 
 
 def merge_countmin(
@@ -462,29 +491,15 @@ def merge_countmin(
     """Roll count-min sketches up to coarser groups (global with
     ``group_cols=[]``) — elementwise sum over kilobyte blobs, the
     monoid op. Same shape as merge_distinct_sketches."""
-    group_cols = group_cols or []
-    tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
-    keys = group_cols or ["_g"]
-    out_fields = [
-        T.StructField(c, tmp.schema[c].dataType, True) for c in keys
-    ] + [
-        T.StructField("sketch", T.ArrayType(T.LongType()), False),
-        T.StructField("n_values", T.LongType(), False),
-    ]
+    return _sketch_rollup(sketches, group_cols or [], _countmin_monoid())
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import countmin as cm
 
-        merged = cm.merge(pdf["sketch"])
-        return pd.DataFrame(
-            [
-                dict(zip(keys, key))
-                | {"sketch": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
+def _chain_positions(h0: F.Column, n: int, m: int) -> list[F.Column]:
+    """The n positions in [0, m) of base hash ``h0`` under the shared
+    mod-prime chain (countmin.buckets, bloom.positions) as codegen."""
+    from sparkval.countmin import P, row_coeffs
 
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(out_fields))
-    return out.drop("_g") if not group_cols else out
+    return [((F.lit(a) * h0 + F.lit(b)) % F.lit(P)) % F.lit(m) for a, b in row_coeffs(n)]
 
 
 def countmin_estimate_expr(
@@ -498,21 +513,11 @@ def countmin_estimate_expr(
     bucket_j from the same mod-prime mixing as the numpy kernel, and
     the estimate is least() over depth element_at lookups — so
     querying a broadcast sketch costs no Python at all."""
-    from sparkval.countmin import P, row_coeffs
-
-    # hash the string form, as countmin_sketches' build side does:
-    # int -> binary is no cast under ANSI
-    term = F.col(term_col).cast("string").cast("binary")
-    h0 = F.conv(F.substring(F.md5(term), 1, 8), 16, 10).cast("long")
-    ests = []
-    for j, (a, b) in enumerate(row_coeffs(depth)):
-        bucket = ((F.lit(a) * h0 + F.lit(b)) % F.lit(P)) % F.lit(width)
-        ests.append(
-            F.element_at(
-                F.col(sketch_col), (F.lit(j * width) + bucket + 1).cast("int")
-            )
-        )
-    return F.least(*ests)
+    buckets = _chain_positions(bloom_h0_expr(term_col), depth, width)
+    return F.least(*[
+        F.element_at(F.col(sketch_col), (F.lit(j * width) + bucket + 1).cast("int"))
+        for j, bucket in enumerate(buckets)
+    ])
 
 
 def bloom_filters(
@@ -523,70 +528,18 @@ def bloom_filters(
     m_bits: int = 1 << 20,
 ) -> DataFrame:
     """Per-group Bloom filters over a value column — the MEMBERSHIP
-    monoid (sparkval.bloom) beside the frequency one: per-task
-    partial bit arrays (mapInPandas, numpy) OR together in an
-    applyInPandas merge, so persisted filters answer "seen in ANY
-    group union" without rescanning. Shuffle volume is m_bits/64
-    longs (~128 KB at the 2^20 default) per (task, group) — never a
-    row per value — and the merged filter broadcasts as ONE ROW no
-    matter how many values went in, unlike a distinct-hash-set
-    broadcast that grows with the input. Hashing is per distinct
-    value per batch, engine-replayable (md5 prefix + mod-prime
-    chain), so membership answers carry a FULL value oracle."""
-    from sparkval import bloom
-
+    monoid (sparkval.bloom) beside the frequency one: partial bit
+    arrays OR together, so persisted filters answer "seen in ANY
+    group union" without rescanning. A partial is m_bits/64 longs
+    (~128 KB at the 2^20 default) per (task, group), and the merged
+    filter broadcasts as ONE ROW no matter how many values went in,
+    unlike a distinct-hash-set broadcast that grows with the input.
+    Hashing is engine-replayable (md5 prefix + mod-prime chain), so
+    membership answers carry a FULL value oracle."""
     group_cols = group_cols if group_cols is not None else ["lang"]
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty; roll up to "
-                         "global with merge_bloom(filters, [])")
-    fields = [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
-    schema = T.StructType(
-        fields
-        + [
-            T.StructField("filter", T.ArrayType(T.LongType()), False),
-            T.StructField("n_values", T.LongType(), False),
-        ]
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                vals = grp[col].dropna()
-                f = bloom.empty_filter(m_bits)
-                bloom.add(f, vals.unique(), k, m_bits)
-                out.append(
-                    dict(zip(group_cols, key))
-                    | {"filter": f, "n_values": int(len(vals))}
-                )
-            yield pd.DataFrame(out)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import bloom as bl
-
-        merged = bl.merge(pdf["filter"])
-        return pd.DataFrame(
-            [
-                dict(zip(group_cols, key))
-                | {"filter": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
-
-    # spread a few-partition input before the Python sketch kernel
-    # (no-op whenever partitions >= slots — see _spread_small_input).
-    # The value column is cast to STRING (no-op for string inputs):
-    # the Python hasher encodes utf-8 and the codegen estimate expr
-    # hashes the string bytes, so a non-string column would either
-    # crash the executor (AttributeError in term_hash) or disagree
-    # with the expression side — the cast aligns both by
-    # construction (ADVICE r5)
-    part = _spread_small_input(
-        df.select(*group_cols, F.col(col).cast("string").alias(col))
-    ).mapInPandas(partials, schema)
-    return part.groupBy(*group_cols).applyInPandas(merge, schema)
+    # spread the narrow projection, as countmin_sketches does
+    part = _spread_small_input(df.select(*group_cols, _sketch_value(col)))
+    return _sketch_build(part, group_cols, _bloom_monoid(k, m_bits))
 
 
 def merge_bloom(
@@ -594,29 +547,7 @@ def merge_bloom(
 ) -> DataFrame:
     """Roll Bloom filters up to coarser groups (global with
     ``group_cols=[]``) — elementwise bitwise OR, the monoid op."""
-    group_cols = group_cols or []
-    tmp = filters if group_cols else filters.withColumn("_g", F.lit(0))
-    keys = group_cols or ["_g"]
-    out_fields = [
-        T.StructField(c, tmp.schema[c].dataType, True) for c in keys
-    ] + [
-        T.StructField("filter", T.ArrayType(T.LongType()), False),
-        T.StructField("n_values", T.LongType(), False),
-    ]
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import bloom as bl
-
-        merged = bl.merge(pdf["filter"])
-        return pd.DataFrame(
-            [
-                dict(zip(keys, key))
-                | {"filter": merged, "n_values": int(pdf["n_values"].sum())}
-            ]
-        )
-
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(out_fields))
-    return out.drop("_g") if not group_cols else out
+    return _sketch_rollup(filters, group_cols or [], _bloom_monoid())
 
 
 def bloom_contains_expr(
@@ -633,20 +564,19 @@ def bloom_contains_expr(
     dies map-side inside WholeStageCodegen. ``term_col`` may be a
     column name or an arbitrary string-typed Column (e.g. an n-gram
     expression that never materializes outside the projection)."""
-    term = F.col(term_col) if isinstance(term_col, str) else term_col
-    return bloom_h0_contains_expr(bloom_h0_expr(term), filter_col, k, m_bits)
+    return bloom_h0_contains_expr(bloom_h0_expr(term_col), filter_col, k, m_bits)
 
 
 def bloom_h0_expr(term) -> F.Column:
-    """The base hash of the Bloom chain (first 8 md5 hex chars as a
-    long) as its own expression — split out so hot probe paths can
-    evaluate the md5 ONCE per term (via transform) instead of once
-    per bit test: inside a higher-order lambda Spark does not
-    common-subexpression-eliminate, so the composed form pays k
-    md5+conv per term."""
+    """The base hash of the Bloom and count-min chain (first 8 md5
+    hex chars as a long) as its own expression — split out so hot
+    probe paths can evaluate the md5 ONCE per term (via transform)
+    instead of once per bit test: inside a higher-order lambda Spark
+    does not common-subexpression-eliminate, so the composed form
+    pays k md5+conv per term."""
     term = F.col(term) if isinstance(term, str) else term
-    # hash the string form, as bloom_filters' build side does: int ->
-    # binary is no cast under ANSI
+    # hash the string form, as the build side does (_sketch_value);
+    # int -> binary is no cast under ANSI
     return F.conv(
         F.substring(F.md5(term.cast("string").cast("binary")), 1, 8), 16, 10
     ).cast("long")
@@ -657,12 +587,9 @@ def bloom_h0_contains_expr(
 ) -> F.Column:
     """Membership test given a precomputed base hash (bloom_h0_expr):
     the k mod-prime bit positions and getbit() probes, pure codegen."""
-    from sparkval.bloom import P, row_coeffs
-
     h0 = F.col(h0) if isinstance(h0, str) else h0
     bits = []
-    for a, b in row_coeffs(k):
-        pos = ((F.lit(a) * h0 + F.lit(b)) % F.lit(P)) % F.lit(m_bits)
+    for pos in _chain_positions(h0, k, m_bits):
         word = F.element_at(
             F.col(filter_col), F.shiftright(pos, 6).cast("int") + F.lit(1)
         )
@@ -680,62 +607,23 @@ def kmv_sketches(
     k: int = 256,
 ) -> DataFrame:
     """Per-group KMV (k-minimum-values) sketches over a value column
-    or expression — the SET-OVERLAP monoid (sparkval.kmv): per-task
-    partials keep the k smallest distinct md5-prefix hashes and merge
-    by union-then-k-smallest, so persisted sketches answer BOTH
+    or expression — the SET-OVERLAP monoid (sparkval.kmv): partials
+    keep the k smallest distinct md5-prefix hashes and merge by
+    union-then-k-smallest, so persisted sketches answer BOTH
     distinct-count and cross-group Jaccard questions without
     rescanning — the estimate group_overlap_matrix's exact
-    shingle-join cannot give at fleet scale. Shuffle volume is <= k
-    longs (~2 KB at the default) per (task, group). ``col`` may be a
+    shingle-join cannot give at fleet scale. A partial is <= k longs
+    (~2 KB at the default) per (task, group). ``col`` may be a
     column name or a string-typed Column (e.g. a shingle expression
     evaluated inside the scan). Hashing and estimators are
     engine-replayable, so sketches AND estimates carry a FULL value
     oracle."""
-    from sparkval import kmv
-
     group_cols = group_cols if group_cols is not None else ["lang"]
-    if not group_cols:
-        raise ValueError("group_cols must be non-empty; roll up to "
-                         "global with merge_kmv(sketches, [])")
-    value = F.col(col) if isinstance(col, str) else col
-    fields = [T.StructField(c, df.schema[c].dataType, True) for c in group_cols]
-    schema = T.StructType(
-        fields + [T.StructField("sketch", T.ArrayType(T.LongType()), False)]
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                vals = grp["_v"].dropna().unique()
-                out.append(
-                    dict(zip(group_cols, key))
-                    | {"sketch": kmv.sketch_of(vals, k)}
-                )
-            yield pd.DataFrame(out)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import kmv as km
-
-        return pd.DataFrame(
-            [
-                dict(zip(group_cols, key))
-                | {"sketch": km.merge(pdf["sketch"], k)}
-            ]
-        )
-
     # the value may be an expensive expression (e.g. shingles over
     # text): spread the RAW input first so it evaluates on every
     # core, not on 1-2 scan partitions (no-op at scale)
-    # string cast: same hashing-alignment contract as
-    # countmin_sketches (no-op for string values)
-    part = _spread_small_input(df).select(
-        *group_cols, value.cast("string").alias("_v")
-    ).mapInPandas(partials, schema)
-    return part.groupBy(*group_cols).applyInPandas(merge, schema)
+    part = _spread_small_input(df).select(*group_cols, _sketch_value(col))
+    return _sketch_build(part, group_cols, _kmv_monoid(k))
 
 
 def merge_kmv(
@@ -743,22 +631,7 @@ def merge_kmv(
 ) -> DataFrame:
     """Roll KMV sketches up to coarser groups (global with
     ``group_cols=[]``) — union then k smallest, the monoid op."""
-    group_cols = group_cols or []
-    tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
-    keys = group_cols or ["_g"]
-    out_fields = [
-        T.StructField(c, tmp.schema[c].dataType, True) for c in keys
-    ] + [T.StructField("sketch", T.ArrayType(T.LongType()), False)]
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from sparkval import kmv as km
-
-        return pd.DataFrame(
-            [dict(zip(keys, key)) | {"sketch": km.merge(pdf["sketch"], k)}]
-        )
-
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(out_fields))
-    return out.drop("_g") if not group_cols else out
+    return _sketch_rollup(sketches, group_cols or [], _kmv_monoid(k))
 
 
 def kmv_distinct_expr(sketch_col: str = "sketch", k: int = 256) -> F.Column:
@@ -840,8 +713,6 @@ def skew_report(
     (deterministic ties: count desc, then key), and one broadcast
     totals row; the rank window runs over the n_top-row result only —
     explicitly bounded, never corpus-sized."""
-    from pyspark.sql import Window
-
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
     counts = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_n"))
@@ -892,14 +763,11 @@ def zipf_fit(
     count desc then term), a rank window over those n_ranks rows
     only, and closed-form regression sums over that bounded table —
     no corpus-sized sort, no Python."""
-    from pyspark.sql import Window
+    from sparkval.pipeline.text import _ws_tokens
 
-    toks = F.split(
-        F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"
-    )
     counts = (
         df.filter(F.trim(F.col(text_col)) != "")
-        .select(F.explode(toks).alias("term"))
+        .select(F.explode(_ws_tokens(text_col)).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -972,6 +840,53 @@ def winsorize(
 # distribution-distance assertions, per SURVEY §2.7)
 # --------------------------------------------------------------------------
 
+def _tagged_counts(
+    current: DataFrame,
+    reference: DataFrame,
+    value_col: str,
+    group_col: str | None,
+    value: F.Column,
+) -> tuple[DataFrame, str]:
+    """Both sides' non-NULL ``value_col`` (as ``value``) collapsed to
+    per-(group, v) counts ``n_cur`` / ``n_ref`` — a tagged union with
+    map-side partial agg, one shuffle on (group, v) — and the group
+    column's name (a constant ``group`` = "all" without ``group_col``).
+    The ks_drift / wasserstein_drift scan."""
+    groups = [F.col(group_col)] if group_col else [F.lit("all").alias("group")]
+    gname = group_col if group_col else "group"
+
+    def side(df: DataFrame, cur: int) -> DataFrame:
+        return df.filter(F.col(value_col).isNotNull()).select(
+            *groups, value.alias("v"), F.lit(cur).alias("c"), F.lit(1 - cur).alias("r")
+        )
+
+    u = side(current, 1).unionByName(side(reference, 0)).groupBy(gname, "v").agg(
+        F.sum("c").alias("n_cur"), F.sum("r").alias("n_ref")
+    )
+    return u, gname
+
+
+def _ecdf_sums(gname: str) -> list[F.Column]:
+    """Per-group running (``cum_*``) and total (``tot_*``) sums of the
+    tagged counts ordered by v — the two ECDFs' steps."""
+    run = (
+        Window.partitionBy(gname)
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    tot = Window.partitionBy(gname)
+    return [
+        F.sum("n_cur").over(run).alias("cum_cur"),
+        F.sum("n_ref").over(run).alias("cum_ref"),
+        F.sum("n_cur").over(tot).alias("tot_cur"),
+        F.sum("n_ref").over(tot).alias("tot_ref"),
+    ]
+
+
+def _cdf(cum: str, tot: str) -> F.Column:
+    return F.when(F.col(tot) > 0, F.col(cum) / F.col(tot))
+
+
 def ks_drift(
     current: DataFrame,
     reference: DataFrame,
@@ -997,46 +912,13 @@ def ks_drift(
 
     Output: ``group, ks_d (1e-6), n_current, n_reference``.
     """
-    groups = [F.col(group_col)] if group_col else [F.lit("all").alias("group")]
-    gname = group_col if group_col else "group"
-    a = current.filter(F.col(value_col).isNotNull()).select(
-        *groups,
-        F.col(value_col).alias("v"),
-        F.lit(1).alias("c"),
-        F.lit(0).alias("r"),
-    )
-    b = reference.filter(F.col(value_col).isNotNull()).select(
-        *groups,
-        F.col(value_col).alias("v"),
-        F.lit(0).alias("c"),
-        F.lit(1).alias("r"),
-    )
-    u = (
-        a.unionByName(b)
-        .groupBy(gname, "v")
-        .agg(F.sum("c").alias("n_cur"), F.sum("r").alias("n_ref"))
-    )
-    run = (
-        Window.partitionBy(gname)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tot = Window.partitionBy(gname)
-    w = u.select(
-        gname,
-        F.sum("n_cur").over(run).alias("cum_cur"),
-        F.sum("n_ref").over(run).alias("cum_ref"),
-        F.sum("n_cur").over(tot).alias("tot_cur"),
-        F.sum("n_ref").over(tot).alias("tot_ref"),
-    )
+    u, gname = _tagged_counts(current, reference, value_col, group_col, F.col(value_col))
+    w = u.select(gname, *_ecdf_sums(gname))
     # a group present on only ONE side has no two-sample statistic:
     # its cdf guard nulls the gap, ks_d comes out NULL, and the
     # report still shows the zero count — a validation gate should
     # surface one-sided groups, not crash on the 0-denominator
-    def cdf(cum: str, tot: str) -> F.Column:
-        return F.when(F.col(tot) > 0, F.col(cum) / F.col(tot))
-
-    gap = F.abs(cdf("cum_cur", "tot_cur") - cdf("cum_ref", "tot_ref"))
+    gap = F.abs(_cdf("cum_cur", "tot_cur") - _cdf("cum_ref", "tot_ref"))
     return w.groupBy(gname).agg(
         F.round(F.max(gap), 6).alias("ks_d"),
         F.max("tot_cur").alias("n_current"),
@@ -1248,6 +1130,14 @@ def rollup_stats(
     )
 
 
+def _check_names(cols) -> None:
+    """Column names are interpolated into selectExpr: enforce the safe
+    class instead of producing a ParseException downstream."""
+    for c in cols:
+        if not re.fullmatch(r"[A-Za-z0-9_]+", c):
+            raise ValueError(f"column name must be [A-Za-z0-9_]+: {c!r}")
+
+
 def correlation_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """Pairwise Pearson correlation profile over numeric columns —
     the data-profiler's redundancy/linkage matrix (|r| ~ 1 between
@@ -1260,13 +1150,7 @@ def correlation_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """
     if len(cols) < 2:
         raise ValueError("correlation_profile needs >= 2 columns")
-    import re
-
-    for c in cols:
-        # names are interpolated into selectExpr — enforce the safe
-        # class instead of producing a ParseException downstream
-        if not re.fullmatch(r"[A-Za-z0-9_]+", c):
-            raise ValueError(f"column name must be [A-Za-z0-9_]+: {c!r}")
+    _check_names(cols)
     pairs = [
         (i, j) for i in range(len(cols)) for j in range(i + 1, len(cols))
     ]
@@ -1305,12 +1189,7 @@ def key_candidates(
     nullable columns under-count; profile null rates first
     (null_violations) when that matters.
     """
-    import re
-
-    for cand in candidates:
-        for c in cand:
-            if not re.fullmatch(r"[A-Za-z0-9_]+", c):
-                raise ValueError(f"column name must be [A-Za-z0-9_]+: {c!r}")
+    _check_names(c for cand in candidates for c in cand)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, cand in enumerate(candidates):
         aggs.append(F.countDistinct(*cand).alias(f"__d_{i}"))
@@ -1352,29 +1231,8 @@ def wasserstein_drift(
     divides by the merged value range (scale-free, in [0, 1], NULL
     for a single-point support).
     """
-    groups = [F.col(group_col)] if group_col else [F.lit("all").alias("group")]
-    gname = group_col if group_col else "group"
-    a = current.filter(F.col(value_col).isNotNull()).select(
-        *groups,
-        F.col(value_col).cast("double").alias("v"),
-        F.lit(1).alias("c"),
-        F.lit(0).alias("r"),
-    )
-    b = reference.filter(F.col(value_col).isNotNull()).select(
-        *groups,
-        F.col(value_col).cast("double").alias("v"),
-        F.lit(0).alias("c"),
-        F.lit(1).alias("r"),
-    )
-    u = (
-        a.unionByName(b)
-        .groupBy(gname, "v")
-        .agg(F.sum("c").alias("n_cur"), F.sum("r").alias("n_ref"))
-    )
-    run = (
-        Window.partitionBy(gname)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    u, gname = _tagged_counts(
+        current, reference, value_col, group_col, F.col(value_col).cast("double")
     )
     seq = Window.partitionBy(gname).orderBy("v")
     tot = Window.partitionBy(gname)
@@ -1382,17 +1240,10 @@ def wasserstein_drift(
         gname,
         F.col("v"),
         (F.lead("v").over(seq) - F.col("v")).alias("dv"),
-        F.sum("n_cur").over(run).alias("cum_cur"),
-        F.sum("n_ref").over(run).alias("cum_ref"),
-        F.sum("n_cur").over(tot).alias("tot_cur"),
-        F.sum("n_ref").over(tot).alias("tot_ref"),
+        *_ecdf_sums(gname),
         (F.max("v").over(tot) - F.min("v").over(tot)).alias("rng"),
     )
-
-    def cdf(cum: str, tot_c: str) -> F.Column:
-        return F.when(F.col(tot_c) > 0, F.col(cum) / F.col(tot_c))
-
-    contrib = F.abs(cdf("cum_cur", "tot_cur") - cdf("cum_ref", "tot_ref")) * F.col("dv")
+    contrib = F.abs(_cdf("cum_cur", "tot_cur") - _cdf("cum_ref", "tot_ref")) * F.col("dv")
     # two-sided groups always have a distance: a single-point support
     # (every contrib NULL because lead(v) is NULL on the only row) is
     # W1 = 0, not NULL — only genuinely one-sided groups emit NULL
@@ -1577,11 +1428,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     cols = list(cols) if cols is not None else list(df.columns)
     if not cols:
         raise ValueError("profile_table needs at least one column")
-    import re
-
-    for c in cols:
-        if not re.fullmatch(r"[A-Za-z0-9_]+", c):
-            raise ValueError(f"column name must be [A-Za-z0-9_]+: {c!r}")
+    _check_names(cols)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, c in enumerate(cols):
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{i}"))

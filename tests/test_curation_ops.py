@@ -623,22 +623,6 @@ def test_countmin_expr_matches_python_kernel(spark):
         assert got[t] == cm.estimate(sk, t), t
 
 
-def test_countmin_sketches_group_merge_matches_direct(spark):
-    from sparkval import countmin as cm
-    from sparkval.stats import countmin_sketches, merge_countmin
-
-    rows = [("g1", "a")] * 5 + [("g1", "b")] * 2 + [("g2", "a")] * 3
-    df = spark.createDataFrame(rows, "grp string, term string")
-    sk = countmin_sketches(df, "term", ["grp"])
-    assert sk.count() == 2
-    [merged] = merge_countmin(sk, []).collect()
-    assert merged["n_values"] == 10
-    direct = cm.update(cm.empty_sketch(), ["a", "b"], [8, 2])
-    assert list(merged["sketch"]) == [int(v) for v in direct]
-    with pytest.raises(ValueError):
-        countmin_sketches(df, "term", [])
-
-
 def test_stream_heavy_hitters_monoid_equals_batch(spark, tmp_path):
     from sparkval import countmin as cm
     from sparkval.stats import merge_countmin
@@ -710,28 +694,6 @@ def test_bloom_kernel_membership_merge_and_fp_accounting():
 
     with pytest.raises(ValueError):
         bloom.empty_filter(100)
-
-
-def test_bloom_filters_group_merge_matches_direct(spark):
-    from sparkval import bloom
-    from sparkval.stats import bloom_filters, merge_bloom
-
-    rows = [("a", "x"), ("a", "y"), ("a", "x"), ("b", "z"), ("b", None)]
-    df = spark.createDataFrame(rows, "lang string, term string")
-    sk = {r["lang"]: r for r in bloom_filters(df, "term", ["lang"]).collect()}
-    fa = bloom.add(bloom.empty_filter(), ["x", "y"])
-    fb = bloom.add(bloom.empty_filter(), ["z"])
-    assert list(sk["a"]["filter"]) == [int(v) for v in fa]
-    assert list(sk["b"]["filter"]) == [int(v) for v in fb]
-    assert sk["a"]["n_values"] == 3 and sk["b"]["n_values"] == 1  # nulls dropped
-
-    [merged] = merge_bloom(
-        bloom_filters(df, "term", ["lang"]), []
-    ).collect()
-    assert list(merged["filter"]) == [int(v) for v in bloom.merge([fa, fb])]
-    assert merged["n_values"] == 4
-    with pytest.raises(ValueError):
-        bloom_filters(df, "term", [])
 
 
 def test_bloom_contains_expr_matches_kernel(spark):
@@ -1053,30 +1015,16 @@ def test_kmv_kernel_monoid_and_estimates():
     assert abs(kmv.jaccard_estimate(a, c, k=256) - 1 / 3) < 0.15
 
 
-def test_kmv_spark_matches_kernel(spark):
-    import numpy as np
-
+def test_kmv_overlap_matches_kernel(spark):
     from sparkval import kmv
-    from sparkval.stats import (
-        kmv_distinct_expr,
-        kmv_jaccard_expr,
-        kmv_overlap,
-        kmv_sketches,
-        merge_kmv,
-    )
+    from sparkval.stats import kmv_overlap, kmv_sketches
 
     rows = [("a", f"v{i}") for i in range(300)] + [
         ("b", f"v{i}") for i in range(150, 450)
     ]
     df = spark.createDataFrame(rows, "src string, val string")
-    sk = {r["src"]: r["sketch"] for r in kmv_sketches(df, "val", ["src"]).collect()}
     ka = kmv.sketch_of([f"v{i}" for i in range(300)])
     kb = kmv.sketch_of([f"v{i}" for i in range(150, 450)])
-    assert list(sk["a"]) == [int(v) for v in ka]
-    assert list(sk["b"]) == [int(v) for v in kb]
-
-    [g] = merge_kmv(kmv_sketches(df, "val", ["src"]), []).collect()
-    assert list(g["sketch"]) == [int(v) for v in kmv.merge([ka, kb])]
 
     [pair] = kmv_overlap(kmv_sketches(df, "val", ["src"]), "src").collect()
     assert pair["group_a"] == "a" and pair["group_b"] == "b"
@@ -1087,6 +1035,81 @@ def test_kmv_spark_matches_kernel(spark):
     assert abs(pair["est_jaccard"] - 1 / 3) < 0.15
     assert abs(pair["est_distinct_a"] - 300) / 300 < 0.25
 
+
+def _sketch_family(name):
+    """(build, rollup, sketch column, kernel over a value list, has
+    n_values) for one hashing sketch family."""
+    from collections import Counter
+
+    from sparkval import bloom, countmin as cm, kmv
+    from sparkval import stats
+
+    def countmin_of(vals):
+        c = Counter(vals)
+        return cm.update(cm.empty_sketch(), list(c), list(c.values()))
+
+    return {
+        "countmin": (stats.countmin_sketches, stats.merge_countmin, "sketch",
+                     countmin_of, True),
+        "bloom": (stats.bloom_filters, stats.merge_bloom, "filter",
+                  lambda vals: bloom.add(bloom.empty_filter(), sorted(set(vals))),
+                  True),
+        "kmv": (stats.kmv_sketches, stats.merge_kmv, "sketch",
+                lambda vals: kmv.sketch_of(sorted(set(vals))), False),
+    }[name]
+
+
+@pytest.mark.parametrize("family", ["countmin", "bloom", "kmv"])
+def test_sketch_family_build_and_rollup(spark, family):
+    """A (lang, source) build rolled up to lang and to global equals a
+    direct build at each level, every sketch equals the kernel over
+    its group's non-NULL values, and NULL group keys survive build and
+    rollup as groups of their own."""
+    build, rollup, col, kernel, counted = _sketch_family(family)
+    rows = (
+        [("en", "web", "a")] * 5 + [("en", "web", "b")] * 2
+        + [("en", "wiki", "a")] * 3 + [("en", "wiki", None)]
+        + [("de", "web", "c"), ("de", "web", "a"), ("de", None, "d")]
+        + [(None, "web", "n1"), (None, "wiki", "n2"), (None, None, "n3")]
+        + [("fr", "web", None)]  # all-NULL values: the empty sketch
+        # 300 distinct values saturate KMV's k=256
+        + [("en", "web", f"v{i}") for i in range(300)]
+    )
+    df = spark.createDataFrame(rows, "lang string, source string, term string")
+
+    def truth(keys):
+        groups = {}
+        for lang, source, term in rows:
+            vals = groups.setdefault(
+                tuple({"lang": lang, "source": source}[c] for c in keys), []
+            )
+            if term is not None:
+                vals.append(term)
+        return groups
+
+    def by_key(sk, keys):
+        return {tuple(r[c] for c in keys): r for r in sk.collect()}
+
+    fine = build(df, "term", ["lang", "source"])
+    levels = {
+        ("lang", "source"): fine,
+        ("lang",): rollup(fine, ["lang"]),
+        (): rollup(fine, []),
+    }
+    for keys, sk in levels.items():
+        got, want = by_key(sk, keys), truth(keys)
+        assert set(got) == set(want), keys  # NULL-key groups included
+        for k, vals in want.items():
+            assert list(got[k][col]) == [int(v) for v in kernel(vals)], (keys, k)
+            if counted:
+                assert got[k]["n_values"] == len(vals), (keys, k)  # nulls dropped
+    direct = by_key(build(df, "term", ["lang"]), ["lang"])
+    rolled = by_key(levels[("lang",)], ["lang"])
+    assert {k: list(r[col]) for k, r in direct.items()} == {
+        k: list(r[col]) for k, r in rolled.items()
+    }
+    with pytest.raises(ValueError):
+        build(df, "term", [])
 
 def test_bloom_decontaminate_empty_benchmark_reports_all_clean(spark):
     from sparkval.pipeline.dedup import bloom_decontaminate

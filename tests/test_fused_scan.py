@@ -102,3 +102,21 @@ def test_auto_default_routes_on_manifest(spark, tables):
     eng.validate(snap, base, expected_manifest=content_manifest(base_df))
     assert len(_SCAN_CACHES) == 1
     release_scan_caches()
+
+
+def test_validate_self_releases_previous_fused_cache(spark, corpus_pair):
+    corpus, snap, _commits = corpus_pair
+    eng = ValidationEngine(ValidationConfig())
+    base = eng.build_baseline(corpus)
+    release_scan_caches()
+
+    out1 = eng.validate(snap, base, single_scan=True)
+    out1["verdicts"].count()
+    assert len(_SCAN_CACHES) == 1
+    # second direct call: the first call's cache is drained, not
+    # accreted — at most the new call's own table remains
+    out2 = eng.validate(snap, base, single_scan=True)
+    out2["verdicts"].count()
+    assert len(_SCAN_CACHES) == 1
+    release_scan_caches()
+    assert not _SCAN_CACHES

@@ -1,6 +1,8 @@
 """Training-data pipeline operator tests over the driver's documents /
 embeddings tables plus synthetic near-dup fixtures."""
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -1064,3 +1066,27 @@ def test_duplicated_spans_planted_passages(spark):
     assert (out["n_words"] == out["span_end"] - out["span_start"]).all()
     with pytest.raises(ValueError):
         dedup.duplicated_spans(df, min_count=1)
+
+
+def test_connected_components_warns_when_unconverged(spark):
+    from sparkval.pipeline.dedup import connected_components
+
+    # a path graph 0-1-2-...-9: diameter 9 needs ~9 rounds
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], ["a", "b"]
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        labels = connected_components(pairs, max_iter=2, check_every=1)
+        labels.count()
+    assert any(
+        "did not converge" in str(w.message) for w in caught
+    ), [str(w.message) for w in caught]
+
+    # enough rounds: converges silently to ONE component
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        labels = connected_components(pairs, max_iter=25, check_every=1)
+        comps = {r["component"] for r in labels.collect()}
+    assert comps == {0}
+    assert not any("did not converge" in str(w.message) for w in caught)

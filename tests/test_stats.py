@@ -155,6 +155,59 @@ def test_length_tdigests_spark(spark, corpus_pdf):
         assert abs(est - truth) <= max(5, 0.15 * truth), (b, lg, est, truth)
 
 
+def test_length_tdigests_all_null_group(spark):
+    """A (repo_bucket, lang) group whose content is all NULL yields an
+    empty digest and NULL quantiles — F.percentile's answer over
+    all-NULL input — instead of aborting the job."""
+    from pyspark.sql import functions as F
+
+    from sparkval.histograms import prepared_scan
+
+    df = spark.createDataFrame(
+        [("r", "p", "c", "python", None), ("r", "q", "c", "rust", "fn main() {}")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    got = {r["lang"]: r for r in length_tdigests(df, CFG).collect()}
+    assert set(got) == {"python", "rust"}
+    assert list(got["python"]["len_tdigest"]) == []
+    assert [got["python"][f"len_p{p}"] for p in (50, 90, 99)] == [None] * 3
+    assert len(got["rust"]["len_tdigest"]) > 0
+    assert got["rust"]["len_p50"] == 12.0
+    exact = {
+        r["_l"]: r["p50"]
+        for r in prepared_scan(df, CFG.n_repo_buckets)
+        .groupBy("_l").agg(F.percentile("_len", 0.5).alias("p50")).collect()
+    }
+    assert exact == {"python": None, "rust": 12.0}
+
+
+@pytest.mark.parametrize("family", ["countmin", "bloom", "kmv"])
+def test_sketches_accept_non_string_values(spark, family):
+    """A numeric value column must hash (as its string form), not
+    crash the executor with AttributeError in term_hash."""
+    from pyspark.sql import functions as F
+
+    from sparkval import stats
+
+    build, merge, col = {
+        "countmin": (stats.countmin_sketches, stats.merge_countmin, "sketch"),
+        "bloom": (stats.bloom_filters, stats.merge_bloom, "filter"),
+        "kmv": (stats.kmv_sketches, stats.merge_kmv, "sketch"),
+    }[family]
+    df = spark.createDataFrame(
+        [(i % 3, i * 11) for i in range(60)], ["g", "v"]
+    ).select(F.col("g").cast("string").alias("g"), "v")
+    sk = build(df, "v", ["g"])
+    assert sk.count() == 3
+    # and the string form is what was hashed: identical to pre-cast
+    sk2 = build(
+        df.select("g", F.col("v").cast("string").alias("v")), "v", ["g"]
+    )
+    a = merge(sk, []).first()[col]
+    b = merge(sk2, []).first()[col]
+    assert list(a) == list(b)
+
+
 def test_distinct_sketches_mergeable_monoid(spark):
     """HLL sketches are a reusable monoid: per-group sketches roll up
     to coarser groups and global without rescanning; estimates stay

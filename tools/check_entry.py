@@ -1,18 +1,30 @@
 """Local replica of the driver's correctness harness.
 
-Runs every __spark_entry__.queries() entry at sf0.01 and compares
-row-count, column names, and order-insensitive values against the
-DuckDB oracle_sql(). Usage: python tools/check_entry.py [names...]
+Runs every __spark_entry__.queries() entry (or the named ones) over one
+scale-factor directory and compares row-count, column names, and
+order-insensitive values against the DuckDB oracle_sql(). The checked
+tree is the one this script lives in, on the Spark driver and in the
+Python workers alike, so a copy of another revision attests that
+revision.
+
+    python tools/check_entry.py [--sf-dir DIR] [names...]
 """
 
 from __future__ import annotations
 
+import argparse
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers import sparkval from the same tree as the Spark driver
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import __spark_entry__ as E  # noqa: E402
 from sparkval.session import get_spark  # noqa: E402
@@ -45,16 +57,20 @@ def canon(rows, cols):
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--sf-dir", default=SF_DIR)
+    args = ap.parse_args()
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'")
     spark = get_spark("check-entry", parallelism=8, shuffle_partitions=8)
 
-    names = sys.argv[1:] or list(E.queries())
+    names = args.names or list(E.queries())
     qs, oracles = E.queries(), E.oracle_sql()
     failures = 0
     for name in names:
-        sdf = qs[name](spark, SF_DIR)
+        sdf = qs[name](spark, args.sf_dir)
         srows = sdf.collect()
         scols = sdf.columns
         if name not in oracles:
