@@ -5,8 +5,13 @@ plain python locally):
 
   python -m sparkval.cli build-baseline --corpus C.parquet --out B.parquet
   python -m sparkval.cli validate --corpus SNAP.parquet --baseline B.parquet \
-      [--commits COMMITS.parquet] [--out-dir OUT] [--checkpoint CKPT] \
+      [--commits COMMITS.parquet] [--out-dir OUT] \
+      [--checkpoint CKPT [--strips N]] \
       [--max-score 2.0] [--hf-asymmetry 1.0] [--single-resolution] [--json]
+
+--checkpoint selects strip mode (ValidationEngine.validate_strips):
+per-strip commits under CKPT, and a rerun skips every committed strip;
+--corpus must then be a parquet path, not iceberg:.
 
 Exit codes mirror the reference's --max-score contract
 (main.rs:232-259): 0 = all partitions below threshold, 2 = drift above
@@ -52,16 +57,23 @@ def main(argv: list[str] | None = None) -> int:
                    help="reference-engine (repo,path,commit,content_sha256) "
                         "manifest parquet for the per-row invariant check")
     v.add_argument("--out-dir", default=None)
-    v.add_argument("--checkpoint", default=None)
+    v.add_argument("--checkpoint", default=None,
+                   help="strip mode (bounded scan, per-strip atomic commits "
+                        "under this dir, scan-skipping resume); --corpus "
+                        "must be a parquet path (not iceberg:)")
     v.add_argument("--strips", type=int, default=None,
-                   help="strip-walker mode (bounded scan, per-strip atomic "
-                        "commits, scan-skipping resume): split the corpus "
-                        "parquet files into N strips; requires --checkpoint; "
-                        "--corpus must be a parquet path (not iceberg:)")
+                   help="strip mode: split the corpus parquet files into N "
+                        "strips (default 16); requires --checkpoint")
     v.add_argument("--max-score", type=float, default=None)
     _add_common(v)
 
     args = ap.parse_args(argv)
+    if args.cmd == "validate":
+        if args.strips is not None and not args.checkpoint:
+            ap.error("--strips requires --checkpoint (per-strip commit dir)")
+        if args.checkpoint and args.corpus.startswith("iceberg:"):
+            ap.error("--checkpoint walks parquet files; --corpus must be a path")
+
     config = ValidationConfig(
         hf_asymmetry=args.hf_asymmetry,
         intensity_target=args.intensity_target,
@@ -92,14 +104,6 @@ def main(argv: list[str] | None = None) -> int:
                               "elapsed_sec": time.time() - t0}))
         return 0
 
-    if args.strips is not None:
-        if not args.checkpoint:
-            ap.error("--strips requires --checkpoint (per-strip commit dir)")
-        if args.corpus.startswith("iceberg:"):
-            ap.error("--strips walks parquet files; --corpus must be a path")
-    # every table arg accepts iceberg:<catalog.table> or a parquet path
-    # (strip mode reads the files itself — skip the eager table read)
-    corpus = None if args.strips is not None else read_corpus(spark, args.corpus)
     # parquet baselines go through load_baseline: the FP_ALGO sidecar
     # check runs (and drops stale fingerprints with a warning) instead
     # of being bypassed by a raw read. iceberg: sources have no sidecar
@@ -114,21 +118,19 @@ def main(argv: list[str] | None = None) -> int:
     commits = read_corpus(spark, args.commits) if args.commits else None
     manifest = read_corpus(spark, args.manifest) if args.manifest else None
 
-    if args.strips is not None:
+    if args.checkpoint:
         # strip-walker full validate: bounded scan per strip, atomic
         # per-strip commits under --checkpoint, violations finalized
         # from narrow per-row partials; a rerun after a kill resumes
         # from the committed strips (scan skipped)
+        strips = {} if args.strips is None else {"n_strips": args.strips}
         result = engine.validate_strips(
-            args.corpus, baseline, args.checkpoint, n_strips=args.strips,
-            commits=commits, expected_manifest=manifest,
-            include_violations=True,
-        )
-    elif args.checkpoint:
-        result = engine.validate_resumable(
-            corpus, baseline, args.checkpoint, commits, manifest
+            args.corpus, baseline, args.checkpoint, commits=commits,
+            expected_manifest=manifest, include_violations=True, **strips,
         )
     else:
+        # every table arg accepts iceberg:<catalog.table> or a parquet path
+        corpus = read_corpus(spark, args.corpus)
         result = engine.validate(corpus, baseline, commits, manifest)
 
     if args.out_dir:

@@ -3,9 +3,11 @@
 The engine's run shape mirrors the reference's top entry
 (lib.rs:699-759): validate config -> schema checks -> short-circuit ->
 kernel -> finalize, with the strip walker's bounded-memory /
-cancellable execution (strip.rs:491-581) recast as per-partition
-checkpointing: every finished partition writes a completion marker,
-and a resumed run anti-joins the marker table to skip done work.
+cancellable execution (strip.rs:491-581) recast as committed partials:
+``validate_strips`` commits each strip's partials atomically, and a
+resumed run skips every committed strip, scan included. One job-group
+fence (``_fenced``) carries the cancellation policy of every
+cancellable entry point.
 
 Outputs per run:
   verdicts   — per-(repo_bucket, lang) drift scores + PASS/WARN/FAIL
@@ -15,6 +17,7 @@ Outputs per run:
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import hashlib
 import itertools
@@ -64,8 +67,8 @@ def _read_units(spark: SparkSession, root: str, part_col: str, ids: list[str]) -
 
 
 class ValidationCancelled(RuntimeError):
-    """Raised by validate_with_stop when its token was cancelled — the
-    Cancelled(StopReason) analog (lib.rs:699-706)."""
+    """Raised by validate_with_stop / validate_strips when their token
+    was cancelled — the Cancelled(StopReason) analog (lib.rs:699-706)."""
 
     def __init__(self, reason: str | None):
         super().__init__(reason or "cancelled")
@@ -105,6 +108,33 @@ class CancellationToken:
     @property
     def cancelled(self) -> bool:
         return self._cancelled.is_set()
+
+
+@contextlib.contextmanager
+def _fenced(spark: SparkSession, stop: CancellationToken | None, description: str):
+    """Run the block's Spark jobs inside ``stop``'s job group (a no-op
+    without a token). The entry poll refuses a pre-cancelled token:
+    cancelJobGroup only reaches live jobs (lib.rs:707). A failure while
+    the token is cancelled surfaces as ValidationCancelled, and the
+    thread's job-group properties are cleared on the way out."""
+    if stop is None:
+        yield
+        return
+    if stop.cancelled:
+        raise ValidationCancelled(stop.reason)
+    sc = spark.sparkContext
+    sc.setJobGroup(stop.group, description, interruptOnCancel=True)
+    try:
+        yield
+    except ValidationCancelled:
+        raise
+    except Exception as e:
+        if stop.cancelled:
+            raise ValidationCancelled(stop.reason) from e
+        raise
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
 class ValidationEngine:
@@ -382,33 +412,25 @@ class ValidationEngine:
         optional per-strip progress hook.
         """
         spark = baseline.sparkSession
-        if stop is not None and stop.cancelled:
-            raise ValidationCancelled(stop.reason)
-        sc = spark.sparkContext
-
-        probe = spark.read.parquet(snapshot_path)
-        check_corpus_schema(probe)
-        files = sorted(probe.inputFiles())
-        if not files:
-            raise ValueError(f"no parquet files under {snapshot_path}")
-        n_strips = max(1, min(n_strips, len(files)))
-        strips = [
-            files[len(files) * i // n_strips : len(files) * (i + 1) // n_strips]
-            for i in range(n_strips)
-        ]
-        units = list(zip(self._unit_ids(["\n".join(s) for s in strips]), strips))
-        fused_root = io.uri_join(checkpoint_dir, "fused_partials")
-        # verdict-only runs also resume from fused commits; the reverse
-        # recomputes (a full validate needs row partials the classic
-        # tree never wrote)
-        roots = [fused_root] if include_violations else [
-            io.uri_join(checkpoint_dir, "partials"), fused_root
-        ]
-
-        if stop is not None:
-            sc.setJobGroup(stop.group, "sparkval strip validation",
-                           interruptOnCancel=True)
-        try:
+        with _fenced(spark, stop, "sparkval strip validation"):
+            probe = spark.read.parquet(snapshot_path)
+            check_corpus_schema(probe)
+            files = sorted(probe.inputFiles())
+            if not files:
+                raise ValueError(f"no parquet files under {snapshot_path}")
+            n_strips = max(1, min(n_strips, len(files)))
+            strips = [
+                files[len(files) * i // n_strips : len(files) * (i + 1) // n_strips]
+                for i in range(n_strips)
+            ]
+            units = list(zip(self._unit_ids(["\n".join(s) for s in strips]), strips))
+            fused_root = io.uri_join(checkpoint_dir, "fused_partials")
+            # verdict-only runs also resume from fused commits; the
+            # reverse recomputes (a full validate needs row partials the
+            # classic tree never wrote)
+            roots = [fused_root] if include_violations else [
+                io.uri_join(checkpoint_dir, "partials"), fused_root
+            ]
             committed, _ = self._commit_units(
                 spark, units, roots, "strip",
                 self._write_fused if include_violations else self._write_hists,
@@ -437,16 +459,6 @@ class ValidationEngine:
             if stop is not None:
                 out = {k: v.localCheckpoint(eager=True) for k, v in out.items()}
             return out
-        except ValidationCancelled:
-            raise
-        except Exception as e:
-            if stop is not None and stop.cancelled:
-                raise ValidationCancelled(stop.reason) from e
-            raise
-        finally:
-            if stop is not None:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
     def validate_incremental(
         self,
@@ -511,120 +523,28 @@ class ValidationEngine:
         stop: CancellationToken,
         commits: DataFrame | None = None,
         expected_manifest: DataFrame | None = None,
-        checkpoint_dir: str | None = None,
     ) -> dict[str, DataFrame]:
-        """Cancellable twin of validate()/validate_resumable() — the
-        *_with_stop API family (lib.rs:699-759). Every Spark job is
-        forced INSIDE ``stop``'s job group on the calling thread, so
-        ``stop.cancel()`` from another thread aborts the run (running
-        tasks interrupted) and this method raises ValidationCancelled.
-
-        With ``checkpoint_dir`` the run is also resumable: partitions
-        completed before the cancel persist their markers, and a rerun
-        (with or without a stop) recomputes only the remainder — the
-        reference's cancel-at-strip-boundary + resume shape.
+        """Cancellable twin of validate() — the *_with_stop API family
+        (lib.rs:699-759). Every Spark job is forced INSIDE ``stop``'s
+        job group on the calling thread, so ``stop.cancel()`` from
+        another thread aborts the run (running tasks interrupted) and
+        this method raises ValidationCancelled.
 
         Returned DataFrames are materialized (localCheckpoint), so
-        consuming them later cannot outrun the job group.
+        consuming them later cannot outrun the job group. A cancelled
+        run keeps no work; cancel + resume is
+        ``validate_strips(..., stop=stop)``, whose committed strips a
+        rerun skips.
         """
-        if stop.cancelled:  # entry poll (lib.rs:707): cancelJobGroup
-            raise ValidationCancelled(stop.reason)  # only reaches live jobs
-        sc = snapshot.sparkSession.sparkContext
-        sc.setJobGroup(stop.group, "sparkval cancellable validation",
-                       interruptOnCancel=True)
-        try:
-            if checkpoint_dir is not None:
-                out = self.validate_resumable(
-                    snapshot, baseline, checkpoint_dir, commits, expected_manifest
-                )
-                return {
-                    "verdicts": out["verdicts"].localCheckpoint(eager=True),
-                    "violations": out["violations"].localCheckpoint(eager=True),
-                }
+        with _fenced(snapshot.sparkSession, stop, "sparkval cancellable validation"):
             out = self.validate(snapshot, baseline, commits, expected_manifest)
-            result = {
-                "verdicts": out["verdicts"].localCheckpoint(eager=True),
-                "violations": out["violations"].localCheckpoint(eager=True),
-            }
+            result = {k: v.localCheckpoint(eager=True) for k, v in out.items()}
             # both outputs are materialized above, so any fused scan
             # table still cached (this call's, or a stale one validate()
             # did not yet self-release) is done — drain the registry
             # (review round 5 / ADVICE r5)
             release_scan_caches()
             return result
-        except ValidationCancelled:
-            raise
-        except Exception as e:
-            if stop.cancelled:
-                raise ValidationCancelled(stop.reason) from e
-            raise
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.interruptOnCancel", None)
-
-    # -- resumable validation ------------------------------------------------
-    def validate_resumable(
-        self,
-        snapshot: DataFrame,
-        baseline: DataFrame,
-        checkpoint_dir: str,
-        commits: DataFrame | None = None,
-        expected_manifest: DataFrame | None = None,
-    ) -> dict[str, DataFrame]:
-        """Checkpointed run: per-partition verdicts land in
-        ``checkpoint_dir/verdicts`` keyed by (repo_bucket, lang); a
-        resumed run recomputes only partitions with no marker
-        (*_with_stop + strip-granularity cancellation analog,
-        strip.rs:510-513).
-
-        SCOPE (round-4 verdict #2): the marker table resumes VERDICTS
-        only — ``result["violations"]`` is re-derived from the corpus
-        on every call, so a resume after a near-complete run still
-        pays the violations scan. The RESUMABLE FULL VALIDATE is
-        ``validate_strips(include_violations=True)``: it commits
-        narrow per-row check partials per strip alongside the
-        histogram partials, and a resumed run derives all row-level
-        violations from the committed partials without rescanning any
-        committed strip's content (tested: a resume over a corpus
-        whose bytes changed after commit still returns the original
-        violations). Prefer it whenever checkpoint/resume is the
-        point; this method stays for verdict-only monitoring loops
-        where violations are recomputed-per-run by design.
-        """
-        spark = snapshot.sparkSession
-        done_path = io.uri_join(checkpoint_dir, "verdicts")
-        # explicit classic shape: this wrapper is called per monitoring
-        # cycle and returns a lazy violations plan with no place to
-        # release a fused persist afterwards — AUTO would leak one
-        # cached table per cycle (review round 5). Callers wanting the
-        # single-scan full validate use validate_strips(
-        # include_violations=True), the documented resumable form.
-        result = self.validate(
-            snapshot, baseline, commits, expected_manifest, single_scan=False
-        )
-        verdicts = result["verdicts"]
-
-        try:
-            done = spark.read.parquet(done_path)
-            have_done = True
-        except Exception:
-            have_done = False
-
-        if have_done:
-            todo = verdicts.join(
-                done.select("repo_bucket", "lang"), ["repo_bucket", "lang"], "left_anti"
-            )
-        else:
-            todo = verdicts
-
-        # append only the newly computed partitions, then read back the
-        # union — the marker table IS the output table
-        todo.write.mode("append").partitionBy("repo_bucket").parquet(done_path)
-        full = spark.read.parquet(done_path)
-        return {
-            "verdicts": constraints.deterministic_order(full, ["repo_bucket", "lang"]),
-            "violations": result["violations"],
-        }
 
     # -- lineage / metrics ----------------------------------------------------
     def run_metrics(

@@ -96,6 +96,30 @@ def test_fs_write_text_rename_swap_no_residue(spark, tmp_path):
     assert not [f for f in left if "__tmp__" in f], left
 
 
+def test_fs_write_text_dance_no_residue_and_old_fallback(spark, tmp_path):
+    from sparkval.io import fs_read_text, fs_write_text, hadoop_fs
+
+    import os
+
+    p = f"file://{tmp_path}/meta.json"
+    fs_write_text(spark, p, "v1")
+    fs_write_text(spark, p, "v2")
+    assert fs_read_text(spark, p) == "v2"
+    residue = [f for f in os.listdir(tmp_path) if "__tmp__" in f or "__old__" in f]
+    assert not residue, residue
+
+    # simulate the crash window between the parking rename and the
+    # final rename: destination missing, .__old__ holds previous
+    fs, jpath = hadoop_fs(spark, p)
+    old = hadoop_fs(spark, p + ".__old__")[1]
+    assert fs.rename(jpath, old)
+    assert fs_read_text(spark, p) == "v2"  # served from the parked copy
+    # the next write recovers cleanly and drops the stale parked copy
+    fs_write_text(spark, p, "v3")
+    assert fs_read_text(spark, p) == "v3"
+    assert not [f for f in os.listdir(tmp_path) if "__old__" in f]
+
+
 def test_garbage_sidecar_warns_not_crashes(spark, corpus, tmp_path):
     from sparkval.baseline import load_baseline, save_baseline
     from sparkval.io import fs_write_text, uri_join

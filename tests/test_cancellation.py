@@ -1,7 +1,9 @@
 """Cancellation semantics (tests/cancellation.rs analog): a cancelled
 token aborts the run's Spark jobs and raises ValidationCancelled; a
-pre-cancelled token refuses to start; cancel + checkpoint resume
-recomputes only the unfinished remainder (strip.rs:510-513 shape).
+pre-cancelled token refuses to start (validate_with_stop and
+validate_strips share one job-group fence); cancel + resume is the
+strip walker's: a rerun skips the strips committed before the cancel
+(strip.rs:510-513 shape).
 """
 
 import threading
@@ -30,7 +32,8 @@ def _slow_corpus(spark, n=400_000, repeat=60):
     )
 
 
-def test_precancelled_token_refuses_to_start(spark):
+@pytest.mark.parametrize("entry", ["validate_with_stop", "validate_strips"])
+def test_precancelled_token_refuses_to_start(spark, tmp_path, entry):
     eng = ValidationEngine(ValidationConfig())
     tiny = _slow_corpus(spark, n=50, repeat=1)
     base = eng.build_baseline(tiny)
@@ -38,7 +41,11 @@ def test_precancelled_token_refuses_to_start(spark):
     stop.cancel("before start")
     t0 = time.perf_counter()
     with pytest.raises(ValidationCancelled) as ei:
-        eng.validate_with_stop(tiny, base, stop)
+        if entry == "validate_with_stop":
+            eng.validate_with_stop(tiny, base, stop)
+        else:
+            eng.validate_strips(str(tmp_path / "snap.parquet"), base,
+                                str(tmp_path / "ck"), stop=stop)
     assert ei.value.reason == "before start"
     assert time.perf_counter() - t0 < 2.0
 
@@ -74,33 +81,6 @@ def test_cancel_mid_run_aborts(spark):
         assert elapsed < 20.0, elapsed
     finally:
         done.set()
-
-
-def test_cancel_then_resume_completes(spark, tmp_path):
-    """Cancelled checkpointed run -> rerun completes; verdicts match a
-    never-cancelled run exactly (resume skips only finished work)."""
-    eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
-    corpus = _slow_corpus(spark, n=30_000, repeat=4)
-    base = eng.build_baseline(corpus)
-    ckpt = str(tmp_path / "ck")
-
-    stop = CancellationToken(spark)
-    timer = threading.Timer(0.6, stop.cancel)
-    timer.start()
-    try:
-        eng.validate_with_stop(corpus, base, stop, checkpoint_dir=ckpt)
-    except ValidationCancelled:
-        pass
-    finally:
-        timer.cancel()
-
-    # resume (no stop) must complete and agree with a fresh full run
-    resumed = eng.validate_resumable(corpus, base, ckpt)["verdicts"].toPandas()
-    full = eng.validate(corpus, base)["verdicts"].toPandas()
-    cols = ["repo_bucket", "lang", "score", "verdict"]
-    a = resumed[cols].sort_values(["repo_bucket", "lang"]).reset_index(drop=True)
-    b = full[cols].sort_values(["repo_bucket", "lang"]).reset_index(drop=True)
-    assert a.equals(b)
 
 
 def _strip_corpus_path(spark, tmp_path, n_files=12, n=6000):

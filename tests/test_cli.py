@@ -3,8 +3,11 @@ semantics (butteraugli-cli main.rs:232-259)."""
 
 import json
 
+import pytest
+
 from sparkval import fixtures as fx
 from sparkval.cli import main as cli_main
+from sparkval.engine import ValidationEngine
 
 
 def test_cli_roundtrip_exit_codes(spark, tmp_path, capsys):
@@ -73,6 +76,86 @@ def test_cli_strip_mode_full_validate(spark, tmp_path, capsys):
     out2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rc2 == 2
     assert out2["violations_by_check"].get("uniqueness") == 10  # 5 keys x 2 rows
+
+
+def test_cli_checkpoint_rerun_matches_plain_validate_after_append(
+    spark, tmp_path, capsys
+):
+    """--checkpoint (no --strips) is strip mode: rerun with the same
+    checkpoint after a data file is appended, it reports exactly what a
+    plain validate of the grown table reports — no verdict or file
+    count carries over from the first run."""
+    pdf = fx.make_corpus("random_mid", 600)
+    corpus_path = str(tmp_path / "c.parquet")
+    base_path = str(tmp_path / "b.parquet")
+    ckpt = str(tmp_path / "ck")
+    spark.createDataFrame(pdf).repartition(4).write.parquet(corpus_path)
+    assert cli_main(["build-baseline", "--corpus", corpus_path,
+                     "--out", base_path]) == 0
+
+    def run(*extra):
+        rc = cli_main(["validate", "--corpus", corpus_path,
+                       "--baseline", base_path, "--json", *extra])
+        return rc, json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    rc1, first = run("--checkpoint", ckpt)
+    assert rc1 == 0 and first["files_validated"] == 600
+
+    # one more data file: 60 existing keys again (duplicates), with
+    # some langs relabelled (drift)
+    spark.createDataFrame(fx.distort(pdf.iloc[:60], "langswap_10")).coalesce(
+        1
+    ).write.mode("append").parquet(corpus_path)
+
+    rc2, resumed = run("--checkpoint", ckpt)
+    rc3, plain = run()
+    keys = ["files_validated", "verdict_counts", "violations_by_check"]
+    assert {k: resumed[k] for k in keys} == {k: plain[k] for k in keys}
+    assert resumed["score"]["max"] == plain["score"]["max"]
+    assert resumed["files_validated"] == 660
+    assert plain["verdict_counts"]["FAIL"] > 0
+    assert plain["violations_by_check"]["uniqueness"] == 120
+    assert rc2 == rc3 == 2
+
+
+@pytest.mark.parametrize(
+    "argv, message",
+    [
+        (["--corpus", "c.parquet", "--strips", "3"],
+         "--strips requires --checkpoint"),
+        (["--corpus", "iceberg:cat.db.corpus", "--checkpoint", "ck"],
+         "--corpus must be a path"),
+    ],
+    ids=["strips-without-checkpoint", "checkpoint-with-iceberg-corpus"],
+)
+def test_cli_rejects_strip_args_before_any_spark_job(spark, argv, message, capsys):
+    """Bad strip-mode arguments exit through argparse (code 2) before
+    the CLI reads a table or runs a Spark job."""
+    sc = spark.sparkContext
+    group = "cli-argument-check"
+    sc.setJobGroup(group, "no job may run")
+    try:
+        with pytest.raises(SystemExit) as ei:
+            cli_main(["validate", "--baseline", "missing.parquet", *argv])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert ei.value.code == 2
+    assert message in capsys.readouterr().err
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_write_metrics_fs_form(spark, tmp_path):
+    """Metrics sidecar lands through the FS API when spark is passed
+    (URI paths work); legacy local form unchanged."""
+    from sparkval.io import fs_read_text
+
+    uri = f"file://{tmp_path}/m.json"
+    ValidationEngine.write_metrics({"a": 1, "b": [2, 3]}, uri, spark=spark)
+    assert json.loads(fs_read_text(spark, uri)) == {"a": 1, "b": [2, 3]}
+    local = str(tmp_path / "m2.json")
+    ValidationEngine.write_metrics({"c": 4}, local)
+    with open(local) as f:
+        assert json.load(f) == {"c": 4}
 
 
 def test_read_corpus_csv_json_explicit_schema(spark, tmp_path):

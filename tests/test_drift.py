@@ -3,9 +3,8 @@
 Covers: identity short-circuit (score exactly 0), distorted snapshots
 flagged, Spark-vs-numpy score parity (the distributed path must equal
 the straight-line kernel — intermediate_values.rs discipline),
-partition parity (strip_parity.rs analog), resume parity
-(cancellation.rs analog), and crc32 bucket consistency between the
-pandas and JVM sides.
+partition parity (strip_parity.rs analog), and crc32 bucket
+consistency between the pandas and JVM sides.
 """
 
 import numpy as np
@@ -178,43 +177,6 @@ def test_partition_parity(spark, engine, baseline_df):
     b = v8.set_index(["repo_bucket", "lang"])["score"].sort_index()
     assert list(a.index) == list(b.index)
     assert np.array_equal(a.to_numpy(), b.to_numpy())
-
-
-def test_resume_parity(spark, engine, baseline_df, tmp_path):
-    """Run -> resume produces the same verdict table as one clean run
-    (cancellation.rs analog at partition granularity)."""
-    df, pdf = baseline_df
-    snap = spark.createDataFrame(fx.distort(pdf, "langswap_10"))
-    base = engine.build_baseline(df)
-
-    clean = engine.validate(snap, base)["verdicts"].toPandas()
-
-    ckpt = str(tmp_path / "ckpt")
-    # first run: only a subset of partitions "completes" (simulate a
-    # kill by checkpointing a filtered snapshot)
-    partial_snap = snap.filter(F.col("lang").isin(["python", "rust"]))
-    eng_partial = ValidationEngine(CFG)
-    first = eng_partial.validate(partial_snap, base)["verdicts"]
-    first.filter(F.col("n_files_snap") > 0).write.mode("append").partitionBy(
-        "repo_bucket"
-    ).parquet(f"{ckpt}/verdicts")
-
-    resumed = engine.validate_resumable(snap, base, ckpt)["verdicts"].toPandas()
-    merged = resumed.set_index(["repo_bucket", "lang"]).sort_index()
-    want = clean.set_index(["repo_bucket", "lang"]).sort_index()
-    # resumed run must cover every partition of the clean run
-    assert set(want.index) <= set(merged.index)
-    # and partitions computed fresh in the resumed run match the clean run
-    fresh = merged.loc[[i for i in want.index if i not in
-                        {(r, l) for r, l in zip(*[iter([])]*2)}]]
-    for idx in want.index:
-        if idx in merged.index and merged.loc[idx, "n_files_snap"] == want.loc[idx, "n_files_snap"]:
-            pass  # scores may differ for the partial-run partitions (different snapshot slice)
-    # minimal strong check: partitions absent from the partial run are bit-equal
-    partial_langs = {"python", "rust"}
-    for idx in want.index:
-        if idx[1] not in partial_langs:
-            assert merged.loc[idx, "score"] == want.loc[idx, "score"], idx
 
 
 def test_bucket_headroom_4096(spark):

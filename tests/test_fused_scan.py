@@ -9,7 +9,12 @@ sha256 anyway) is requested.
 import numpy as np
 import pytest
 
-from sparkval import ValidationConfig, ValidationEngine, fixtures as fx
+from sparkval import (
+    CancellationToken,
+    ValidationConfig,
+    ValidationEngine,
+    fixtures as fx,
+)
 from sparkval.engine import _SCAN_CACHES, release_scan_caches
 
 
@@ -120,3 +125,20 @@ def test_validate_self_releases_previous_fused_cache(spark, corpus_pair):
     assert len(_SCAN_CACHES) == 1
     release_scan_caches()
     assert not _SCAN_CACHES
+
+
+def test_with_stop_releases_fused_cache(spark):
+    from sparkval.constraints import content_manifest
+
+    base_pd = fx.make_case("random_mid__identity", n_rows=500)[0]
+    snap = spark.createDataFrame(fx.distort(base_pd, "dup_6"))
+    base_df = spark.createDataFrame(base_pd)
+    eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
+    base = eng.build_baseline(base_df)
+    manifest = content_manifest(base_df)
+
+    release_scan_caches()
+    stop = CancellationToken(spark)
+    out = eng.validate_with_stop(snap, base, stop, expected_manifest=manifest)
+    assert out["verdicts"].count() > 0
+    assert not _SCAN_CACHES  # the fused persist was released in-call

@@ -207,6 +207,24 @@ def test_multimodal_decode_stub_raises_without_fake(spark):
         multimodal.decode_stub(b"xx", "image", deterministic_fake=False)
 
 
+def test_decode_stub_fake_flag_is_a_contract():
+    """deterministic_fake=True must return the seeded hash vector even
+    when the payload is genuinely decodable: flipping behavior on
+    payload magic would silently change fixture features."""
+    import hashlib
+
+    px = np.zeros((4, 4, 3), dtype=np.uint8)
+    payload = multimodal.encode_bmp(px)
+    fake = multimodal.decode_stub(payload, "image", deterministic_fake=True)
+    real = multimodal.decode_stub(payload, "image", deterministic_fake=False)
+    # real path decodes dims; fake path is the digest-derived vector
+    assert (real[0], real[1]) == (4, 4)
+    digest = hashlib.sha256(payload).digest()
+    want0 = np.frombuffer(digest[:4], dtype=np.uint32)[0] / np.iinfo(np.uint32).max
+    assert fake[0] == np.float32(want0)
+    assert not np.array_equal(fake, real)
+
+
 def test_image_decoders_roundtrip_bit_equal():
     """encode->decode round-trips for all four container formats,
     bit-equal to each other and to v/255 (farbfeld's 16-bit

@@ -352,3 +352,33 @@ def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
         include_violations=True,
     )
     assert len(out3["violations"].toPandas()) > len(v1)
+
+
+def test_verdict_only_resume_reads_fused_commits(spark, tmp_path):
+    """A completed full validate's fused strips satisfy a later
+    verdict-only run on the same checkpoint dir: every strip skips,
+    verdicts match a fresh batch run. A probe of the classic partials
+    tree alone would silently rescan everything."""
+    eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
+    corpus = _corpus(spark, n=1500)
+    path = str(tmp_path / "snap.parquet")
+    corpus.repartition(4).write.parquet(path)
+    base = eng.build_baseline(corpus)
+    ckpt = str(tmp_path / "ck_cross")
+
+    eng.validate_strips(
+        path, base, ckpt, n_strips=4, include_violations=True
+    )["verdicts"].count()
+
+    seen = []
+    out = eng.validate_strips(
+        path, base, ckpt, n_strips=4, include_violations=False,
+        on_strip=lambda i, n, sk: seen.append(sk),
+    )
+    assert seen == [True] * 4  # all strips resumed from fused commits
+    got = out["verdicts"].toPandas()
+    full = eng.validate(spark.read.parquet(path), base)["verdicts"].toPandas()
+    cols = ["repo_bucket", "lang", "score", "verdict"]
+    a = got[cols].sort_values(cols[:2]).reset_index(drop=True)
+    b = full[cols].sort_values(cols[:2]).reset_index(drop=True)
+    assert a.equals(b)
