@@ -1,16 +1,18 @@
 """Row-level constraint checks -> violation rows.
 
-Pure DataFrame built-ins (no Python UDFs): every check here compiles to
+Pure DataFrame built-ins (no Python UDFs): every check compiles to
 whole-stage-codegen'd hash aggregates and joins that Catalyst/AQE can
-optimize and that scale to the 10^12-file corpus:
+optimize at the 10^12-file scale. ``uniqueness_violations``,
+``referential_violations`` and ``null_violations`` are the
+one-check-per-scan reference forms. Production finalizes go through ONE
+body, ``_violations``, entered by ``all_violations`` (raw corpus) and
+``violations_from_row_partials`` (narrow fused-scan partials):
 
-- uniqueness: one shuffle on the natural key with map-side partial
-  aggregation; duplicate keys are rare, so the post-filter output is
-  tiny and the semi-join back is AQE-broadcastable.
-- referential integrity: LEFT ANTI join; the parent (commits) side is
-  broadcast when small, else a shuffled anti-join with skew handled by
-  AQE (hot repos are exactly the skew case the north rule calls out).
-- null/length constraints: a single scan with cheap column expressions.
+- one probe: a single scan of the rows left-joins the broadcast
+  duplicate-key set (a narrow 3-column aggregation; duplicates are
+  rare) and the broadcast commits parents (~10^6 rows at any scale);
+- filter first: only rows where some check fires reach the explode;
+- hash last: sha256 runs after the explode, on violating rows only.
 
 Reference mapping (SURVEY.md §2.4): the reference's "join" is the
 dimension-checked positional pairing of two images (lib.rs:707-743)
@@ -20,6 +22,9 @@ relational equi-joins keyed by (repo, path, commit).
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
@@ -119,36 +124,11 @@ def content_manifest(corpus: DataFrame) -> DataFrame:
     return corpus.select(*NATURAL_KEY, content_sha256().alias("content_sha256"))
 
 
-def row_check_partials(corpus: DataFrame) -> DataFrame:
-    """Per-row check partials for strip-mode validation: the NARROW
-    (~100 B/row) projection from which every row-level violation can
-    be finalized WITHOUT rescanning content — (key, content_sha256,
-    null_detail). All codegen expressions; the content column is read
-    once here and never again.
-
-    This is the row-level analog of the histogram partial monoid (the
-    StripReducer partial-state shape, reference strip.rs:126-209 —
-    commit mergeable per-strip state, finalize once): each strip
-    commits its slice, and the finalize in
-    ``violations_from_row_partials`` runs only narrow joins/aggs over
-    the union — uniqueness counts become global exactly because the
-    committed slices partition the corpus. (The reference's strip API
-    returns only score/pnorm, strip.rs:601-905; row-level checks in
-    strip mode are an engine extension.)
-    """
-    sha, null_detail = row_check_exprs()
-    return corpus.select(
-        *NATURAL_KEY,
-        sha.alias("content_sha256"),
-        null_detail.alias("null_detail"),
-    )
-
-
 def row_check_exprs() -> tuple[F.Column, F.Column]:
     """The (content_sha256, null_detail) per-row check expressions —
-    ONE definition shared by row_check_partials and the fused
-    single-scan kernel (histograms.fused_scan_partials), so the strip
-    and batch full-validate paths can never drift (review round 5)."""
+    ONE definition shared by ``all_violations`` and the fused
+    single-scan kernel (histograms.fused_scan_partials), so the batch
+    and strip full-validate paths can never drift."""
     required = ("repo", "path", "commit", "content")
     any_null = F.greatest(*[F.col(c).isNull().cast("int") for c in required]) == 1
     null_detail = F.when(
@@ -169,63 +149,13 @@ def violations_from_row_partials(
     expected: DataFrame | None = None,
 ) -> DataFrame:
     """Finalize row-level violations from committed per-row partials
-    (strip mode). Produces EXACTLY the all_violations row set (parity
-    tested) plus, when ``expected`` is given, the manifest check —
-    using only the narrow partial columns:
-
-    - uniqueness: global key counts over the merged partials (the
-      strips partition the corpus, so the counts are exact), join-back
-      for per-duplicate-row violation rows;
-    - null_required: the precomputed per-row null_detail, key columns
-      blanked as in null_violations;
-    - referential: broadcast anti-join against the commits dimension;
-    - row_invariant_sha256: full-outer key join against the expected
-      manifest (shas already computed at strip time).
-
-    Content never appears here: at 100 TB the finalize shuffles
-    ~100 B/row worst-case, and AQE broadcasts the (rare) duplicate-key
-    set."""
-    dup_keys = (
-        partials.groupBy(*NATURAL_KEY)
-        .agg(F.count(F.lit(1)).alias("_dup_count"))
-        .filter(F.col("_dup_count") > 1)
-    )
-    dups = partials.join(F.broadcast(dup_keys), on=NATURAL_KEY, how="inner")
-    uniq = dups.select(
-        F.lit("uniqueness").alias("check"),
-        *NATURAL_KEY,
-        "content_sha256",
-        F.concat(F.lit("key_count="), F.col("_dup_count")).cast("string").alias("detail"),
-    )
-
-    nulls = partials.filter(F.col("null_detail").isNotNull()).select(
-        F.lit("null_required").alias("check"),
-        *[F.coalesce(F.col(k), F.lit("")).alias(k) for k in NATURAL_KEY],
-        "content_sha256",
-        F.col("null_detail").cast("string").alias("detail"),
-    )
-    out = uniq.unionByName(nulls)
-
-    if commits is not None:
-        parents = commits.select("repo", "commit").dropDuplicates(["repo", "commit"])
-        orphans = partials.join(
-            F.broadcast(parents), on=["repo", "commit"], how="left_anti"
-        )
-        out = out.unionByName(
-            orphans.select(
-                F.lit("referential_commit_repo").alias("check"),
-                *NATURAL_KEY,
-                "content_sha256",
-                F.lit("dangling commit").cast("string").alias("detail"),
-            )
-        )
-
-    if expected is not None:
-        out = out.unionByName(
-            _manifest_join(partials.select(*NATURAL_KEY, "content_sha256"), expected)
-        )
-
-    return deterministic_order(out, ["check", "repo", "path", "commit"])
+    (key, content_sha256, null_detail) — the narrow rows of
+    ``histograms.split_fused``. The StripReducer partial-state shape
+    (reference strip.rs:126-209: commit mergeable per-strip state,
+    finalize once): uniqueness counts are global because the committed
+    slices partition the corpus, and content is never read here. Same
+    rows as ``all_violations`` over the corpus (parity-tested)."""
+    return _violations(partials, F.col("content_sha256"), commits, expected)
 
 
 def manifest_violations(corpus: DataFrame, expected: DataFrame) -> DataFrame:
@@ -242,8 +172,8 @@ def manifest_violations(corpus: DataFrame, expected: DataFrame) -> DataFrame:
 
 def _manifest_join(ours: DataFrame, expected: DataFrame) -> DataFrame:
     """The manifest check over a (repo, path, commit, content_sha256)
-    table — shared by manifest_violations and the strip-mode finalize
-    (violations_from_row_partials, shas computed at strip time)."""
+    table — shared by manifest_violations and the row-violation
+    finalize (_violations)."""
     # explicit presence flags, NOT sha-nullness: content_sha256 is NULL
     # for rows whose content is NULL (a supported state — see
     # null_violations), so a NULL-content row present on both sides
@@ -271,51 +201,53 @@ def _manifest_join(ours: DataFrame, expected: DataFrame) -> DataFrame:
     )
 
 
-def all_violations(corpus: DataFrame, commits: DataFrame | None = None) -> DataFrame:
-    """Every row-level check in ONE full-width corpus scan — the
-    reference's operator-fusion rewrite (SURVEY §4) applied to the
-    violation pass. The naive union of uniqueness + null + referential
-    scans the corpus once per check; here the duplicate-key set and the
-    commits dimension are broadcast onto a single probe scan, per-row
-    violation structs build in codegen, and one explode emits the
-    (possibly multiple) violations per row. At 100 TB that is two
-    fewer full passes over the data; the only extra pass left is the
-    narrow (3 key columns, pruned scan) duplicate-key aggregation.
+def all_violations(
+    corpus: DataFrame,
+    commits: DataFrame | None = None,
+    expected: DataFrame | None = None,
+) -> DataFrame:
+    """Every row-level check over a raw corpus in ONE full-width probe
+    scan (plus the narrow duplicate-key aggregation) — the reference's
+    operator-fusion rewrite (SURVEY §4) applied to the violation pass.
+    Row sets are EXACTLY those of the individual checks (tested); with
+    ``expected`` the manifest check (``manifest_violations``) joins the
+    union. Content rides raw and is hashed only for violating rows."""
+    _, null_detail = row_check_exprs()
+    rows = corpus.select(*NATURAL_KEY, null_detail.alias("null_detail"), "content")
+    return _violations(rows, content_sha256(), commits, expected)
 
-    Row sets are EXACTLY those of the individual checks (tested), and
-    the output is deterministically ordered by (check, repo, path,
-    commit) so it diffs against golden violation tables — the
-    reference's golden-corpus discipline applied to row sets.
-    """
-    required = ("repo", "path", "commit", "content")
+
+def _violations(
+    rows: DataFrame,
+    sha: F.Column,
+    commits: DataFrame | None,
+    expected: DataFrame | None,
+) -> DataFrame:
+    """The one row-violation finalize. ``rows`` holds NATURAL_KEY,
+    ``null_detail`` and whatever ``sha`` reads. One probe of ``rows``
+    left-joins the broadcast duplicate-key set and commits parents;
+    the filter keeps only rows where some check fires BEFORE the
+    violation structs build and explode (one row per firing check);
+    ``sha`` is evaluated AFTER the explode, so only violating rows are
+    hashed (hashing in the probe paid full-corpus sha256, ~2.5 s per
+    bench leg at the 6M-file corpus). With ``expected`` the manifest
+    check joins the union; one deterministic (check, repo, path,
+    commit) order at the end diffs against golden violation tables."""
     dup_keys = (
-        corpus.groupBy(*NATURAL_KEY)
+        rows.groupBy(*NATURAL_KEY)
         .agg(F.count(F.lit(1)).alias("_dup_count"))
         .filter(F.col("_dup_count") > 1)
     )
-    probe = corpus.join(F.broadcast(dup_keys), on=NATURAL_KEY, how="left")
+    probe = rows.join(F.broadcast(dup_keys), on=NATURAL_KEY, how="left")
+    # (fires, check, detail, blank NULL keys as null_violations does)
     checks = [
-        F.when(
+        (
             F.col("_dup_count").isNotNull(),
-            F.struct(
-                F.lit("uniqueness").alias("check"),
-                F.concat(F.lit("key_count="), F.col("_dup_count")).alias("detail"),
-                F.lit(False).alias("blank_null_keys"),
-            ),
+            "uniqueness",
+            F.concat(F.lit("key_count="), F.col("_dup_count")),
+            False,
         ),
-        F.when(
-            F.greatest(*[F.col(c).isNull().cast("int") for c in required]) == 1,
-            F.struct(
-                F.lit("null_required").alias("check"),
-                F.concat_ws(
-                    ",",
-                    F.array_compact(
-                        F.array(*[F.when(F.col(c).isNull(), F.lit(c)) for c in required])
-                    ),
-                ).alias("detail"),
-                F.lit(True).alias("blank_null_keys"),
-            ),
-        ),
+        (F.col("null_detail").isNotNull(), "null_required", F.col("null_detail"), True),
     ]
     if commits is not None:
         parents = (
@@ -325,27 +257,25 @@ def all_violations(corpus: DataFrame, commits: DataFrame | None = None) -> DataF
         )
         probe = probe.join(F.broadcast(parents), on=["repo", "commit"], how="left")
         checks.append(
-            F.when(
-                F.col("_ref_ok").isNull(),
-                F.struct(
-                    F.lit("referential_commit_repo").alias("check"),
-                    F.lit("dangling commit").alias("detail"),
-                    F.lit(False).alias("blank_null_keys"),
-                ),
-            )
+            (F.col("_ref_ok").isNull(), "referential_commit_repo", F.lit("dangling commit"), False)
         )
-    v = F.explode(F.array_compact(F.array(*checks))).alias("v")
-    # content rides RAW through the explode and is hashed AFTER it:
-    # the Generate's child projection evaluates for EVERY corpus row,
-    # so hashing there paid full-corpus sha256 (~2.5 s per bench leg at
-    # the 6M-file corpus) to label the handful of rows that actually
-    # violate; post-explode only violating rows remain (guide §1.2 —
-    # don't compute things you throw away)
-    exploded = probe.select(v, *NATURAL_KEY, F.col("content")).select(
-        "v", *NATURAL_KEY, content_sha256().alias("content_sha256")
-    )
-    # null_violations blanks NULL key columns in its output rows; the
-    # other checks keep them raw — reproduce per emitted row
+    structs = [
+        F.when(
+            fires,
+            F.struct(
+                F.lit(check).alias("check"),
+                detail.alias("detail"),
+                F.lit(blank).alias("blank_null_keys"),
+            ),
+        )
+        for fires, check, detail, blank in checks
+    ]
+    v = F.explode(F.array_compact(F.array(*structs))).alias("v")
+    # a generator's sibling expressions evaluate in the Project ABOVE
+    # the Generate, so ``sha`` runs on exploded (violating) rows only
+    exploded = probe.filter(
+        functools.reduce(operator.or_, [c[0] for c in checks])
+    ).select(v, *NATURAL_KEY, sha.alias("content_sha256"))
     key_cols = [
         F.when(F.col("v.blank_null_keys"), F.coalesce(F.col(k), F.lit("")))
         .otherwise(F.col(k))
@@ -358,6 +288,10 @@ def all_violations(corpus: DataFrame, commits: DataFrame | None = None) -> DataF
         "content_sha256",
         F.col("v.detail").alias("detail"),
     )
+    if expected is not None:
+        out = out.unionByName(
+            _manifest_join(rows.select(*NATURAL_KEY, sha.alias("content_sha256")), expected)
+        )
     return deterministic_order(out, ["check", "repo", "path", "commit"])
 
 

@@ -202,16 +202,10 @@ class ValidationEngine:
                 baseline, *histograms.split_fused(fused), commits, expected_manifest
             )
 
-        violations = constraints.all_violations(snapshot, commits)
-        if expected_manifest is not None:
-            violations = constraints.deterministic_order(
-                violations.unionByName(
-                    constraints.manifest_violations(snapshot, expected_manifest)
-                ),
-                ["check", "repo", "path", "commit"],
-            )
         out = self._finalize(baseline, histograms.partial_histograms(snapshot, cfg))
-        out["violations"] = violations
+        out["violations"] = constraints.all_violations(
+            snapshot, commits, expected_manifest
+        )
         return out
 
     def _finalize(

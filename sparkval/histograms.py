@@ -283,7 +283,7 @@ def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
 
 #: union-schema output of the fused single-scan kernel: kind='h' rows
 #: carry histogram-partial columns (PARTIAL_SCHEMA), kind='r' rows the
-#: narrow per-row check partials (constraints.row_check_partials) —
+#: narrow per-row check partials (constraints.row_check_exprs) —
 #: everything row-level validation needs, from ONE content read.
 FUSED_SCHEMA = T.StructType(
     [T.StructField("kind", T.StringType(), False)]
@@ -321,8 +321,9 @@ def fused_scan_partials(corpus: DataFrame, config: ValidationConfig) -> DataFram
       keys hist rows) fused table; one persist of it replaces a full
       second corpus scan.
 
-    Same monoid contract as partial_histograms/row_check_partials —
-    bit-identical outputs to the two-pass path (parity-tested)."""
+    Same monoid contract as partial_histograms; the kind='r' rows feed
+    constraints.violations_from_row_partials — bit-identical outputs
+    to the two-pass path (parity-tested)."""
     from sparkval.constraints import NATURAL_KEY, row_check_exprs
 
     n_langs = len(LANG_VOCAB)

@@ -2,12 +2,14 @@
 semantics (butteraugli-cli main.rs:232-259)."""
 
 import json
+import os
 
 import pytest
 
 from sparkval import fixtures as fx
 from sparkval.cli import main as cli_main
 from sparkval.engine import ValidationEngine
+from sparkval.histograms import FP_ALGO
 
 
 def test_cli_roundtrip_exit_codes(spark, tmp_path, capsys):
@@ -177,3 +179,45 @@ def test_read_corpus_csv_json_explicit_schema(spark, tmp_path):
     assert got_csv.schema == df.schema == got_json.schema
     assert {(r["repo"], r["path"], r["commit"]) for r in got_csv.collect()} == want
     assert {(r["repo"], r["path"], r["commit"]) for r in got_json.collect()} == want
+
+
+def test_cli_build_baseline_writes_fp_sidecar_and_validate_guards(
+    spark, tmp_path, capsys
+):
+    from sparkval.cli import main as cli_main
+
+    pdf = fx.make_corpus("random_mid", 300)
+    corpus_path = str(tmp_path / "corpus.parquet")
+    baseline_path = str(tmp_path / "baseline.parquet")
+    spark.createDataFrame(pdf).write.parquet(corpus_path)
+
+    assert cli_main(
+        ["build-baseline", "--corpus", corpus_path, "--out", baseline_path]
+    ) == 0
+    meta = os.path.join(baseline_path, "_sparkval_meta.json")
+    assert os.path.exists(meta)
+    with open(meta) as f:
+        assert json.load(f)["fp_algo"] == FP_ALGO
+
+    # identical snapshot validates clean through the load_baseline path
+    rc = cli_main(
+        ["validate", "--corpus", corpus_path, "--baseline", baseline_path, "--json"]
+    )
+    assert rc == 0
+    capsys.readouterr()
+
+    # a stale-algo sidecar must trip the guard (fingerprints dropped
+    # with a warning) — proving the CLI actually routes through
+    # load_baseline rather than a raw parquet read. Overwrite via the
+    # FS API: a bare open() would orphan the local checksum fs's .crc
+    # shadow and poison the next FS read.
+    from sparkval.io import fs_write_text
+
+    fs_write_text(spark, meta, json.dumps({"fp_algo": "ancient-v0"}))
+    with pytest.warns(UserWarning, match="fingerprint algo"):
+        rc2 = cli_main(
+            ["validate", "--corpus", corpus_path, "--baseline", baseline_path,
+             "--json"]
+        )
+    assert rc2 == 0  # still validates correctly, just without short-circuit
+    capsys.readouterr()

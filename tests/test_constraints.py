@@ -5,9 +5,13 @@ row sets, no tolerances, deterministic ordering.
 """
 
 import pandas as pd
+import pytest
+from pyspark.sql import functions as F
 
 from sparkval import constraints as C
 from sparkval import fixtures as fx
+from sparkval import histograms as H
+from sparkval.config import ValidationConfig
 
 
 def test_uniqueness_clean_corpus_has_no_violations(spark, corpus_pair):
@@ -56,37 +60,63 @@ def test_all_violations_union_and_order(spark, corpus_pair):
     assert key == sorted(key)
 
 
-def test_all_violations_fused_equals_union_of_checks(spark, corpus_pair):
-    """The single-scan fused formulation must emit EXACTLY the rows of
-    the three individual checks, and its plan must touch the corpus
-    source only twice (narrow key agg + one full-width probe) instead
-    of once per check."""
+def _from_row_partials(df, commits, expected=None):
+    rows = H.split_fused(H.fused_scan_partials(df, ValidationConfig()))[1]
+    return C.violations_from_row_partials(rows, commits, expected)
+
+
+@pytest.mark.parametrize("with_manifest", [False, True], ids=["checks", "manifest"])
+@pytest.mark.parametrize(
+    "entry",
+    [C.all_violations, _from_row_partials],
+    ids=["all_violations", "violations_from_row_partials"],
+)
+def test_all_violations_fused_equals_union_of_checks(
+    spark, corpus_pair, entry, with_manifest
+):
+    """Both entries into the one-probe finalize — over the raw corpus
+    and over the fused scan's narrow row partials — must emit EXACTLY
+    the rows of the individual reference checks, including a row that
+    fires two checks at once (the filter + explode emits one row per
+    firing check)."""
     _, snap, commits = corpus_pair
-    # add null-violation rows so all three checks fire at once
+    first = snap.orderBy("repo", "path", "commit").first()
+    # null-violation rows so all three checks fire at once; the first
+    # is also a duplicate of an existing key (uniqueness AND null)
     nulls = spark.createDataFrame(
-        [("rX", None, "c9", "py", None), (None, "p9", "c9", "py", "body")],
-        ["repo", "path", "commit", "lang", "content"],
+        [
+            (first["repo"], first["path"], first["commit"], "py", None),
+            ("rX", None, "c9", "py", None),
+            (None, "p9", "c9", "py", "body"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
     )
     df = snap.unionByName(nulls)
-    fused = C.all_violations(df, commits).toPandas()
     want = (
         C.uniqueness_violations(df)
         .unionByName(C.null_violations(df))
         .unionByName(C.referential_violations(df, commits))
-        .toPandas()
     )
+    expected = None
+    if with_manifest:
+        # drop 3 rows, change 2 hashes, add 1 row the snapshot lacks;
+        # the NULL-content rows are unexpected_in_snapshot
+        ref = C.content_manifest(snap).toPandas().sort_values(["repo", "path", "commit"])
+        ref = ref.iloc[3:].reset_index(drop=True)
+        ref.loc[:1, "content_sha256"] = "0" * 64
+        ref.loc[len(ref)] = ["rZ", "pZ", "cZ", "f" * 64]
+        expected = spark.createDataFrame(ref)
+        want = want.unionByName(C.manifest_violations(df, expected))
+    got = entry(df, commits, expected).toPandas()
+    want = want.toPandas()
     cols = ["check", "repo", "path", "commit", "content_sha256", "detail"]
-    a = fused[cols].sort_values(cols).reset_index(drop=True).fillna("~")
+    a = got[cols].sort_values(cols).reset_index(drop=True).fillna("~")
     b = want[cols].sort_values(cols).reset_index(drop=True).fillna("~")
     assert a.equals(b), (len(a), len(b))
-
-    plan = C.all_violations(df, commits)._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    n_scans = len(re.findall(r"Scan ExistingRDD|Scan parquet", plan))
-    # df = snap ∪ nulls -> 2 sources per corpus reference; 2 corpus
-    # references (key agg + probe) -> 4; the unfused union had 8+
-    assert n_scans <= 2 * 2, plan
+    # the dup+NULL row fires uniqueness AND null_required
+    dup_null = got[(got["repo"] == first["repo"]) & (got["path"] == first["path"])
+                   & (got["commit"] == first["commit"])]
+    assert {"uniqueness", "null_required"} <= set(dup_null["check"]), dup_null
 
 
 def test_sha256_invariant_matches_hashlib(spark, corpus_pair):
@@ -429,3 +459,61 @@ def test_coverage_gaps_plan_collapses_before_calendar(spark, sf_dir):
     assert "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
     assert "Generate explode" in plan or "Generate" in plan  # the calendar
+
+
+def test_null_repo_validate_end_to_end_tolerates_and_reports(spark):
+    """The full validate() leg must complete on a NULL-repo corpus and
+    still report the NULL key as a violation (tolerate-and-report)."""
+    from sparkval.baseline import build_baseline
+    from sparkval.engine import ValidationEngine
+
+    pdf = fx.make_corpus("random_mid", 200)
+    snap_pdf = pdf.copy()
+    snap_pdf.loc[0, "repo"] = None
+    cfg = ValidationConfig(n_repo_buckets=8)
+    engine = ValidationEngine(cfg)
+    base = build_baseline(spark.createDataFrame(pdf), cfg)
+    result = engine.validate(spark.createDataFrame(snap_pdf), base)
+    viols = result["violations"].toPandas()
+    assert (viols["check"] == "null_required").any()
+    assert result["verdicts"].count() > 0
+
+
+def test_deterministic_order_cap_is_deterministic_prefix(spark):
+    pdf = pd.DataFrame(
+        {
+            "k": [f"k{i % 7:02d}" for i in range(40)],
+            "v": [f"v{i:02d}" for i in range(40)],
+        }
+    )
+    want = pdf.sort_values(["k", "v"]).head(10).reset_index(drop=True)
+    outs = []
+    for parts in (1, 7):
+        df = spark.createDataFrame(pdf).repartition(parts)
+        out = C.deterministic_order(df, ["k"], max_rows=10).toPandas()
+        outs.append(out.reset_index(drop=True))
+    # same subset regardless of input partitioning, and it is exactly
+    # the first 10 rows of the total order (keys + tiebreakers)
+    pd.testing.assert_frame_equal(outs[0], outs[1])
+    pd.testing.assert_frame_equal(outs[0], want)
+
+
+def test_deterministic_order_cap_ties_broken_by_array_column(spark):
+    """Rows identical on every atomic column, distinct array payloads:
+    the capped prefix must retain the SAME rows run to run."""
+    from sparkval.constraints import deterministic_order
+
+    rows = [("k", i % 3, list(range(i, i + 4))) for i in range(60)]
+    df = spark.createDataFrame(rows, ["key", "group", "payload"]).select(
+        "key", F.col("group").cast("int").alias("group"), "payload"
+    )
+    picks = [
+        tuple(
+            (r["key"], r["group"], tuple(r["payload"]))
+            for r in deterministic_order(df, ["key"], max_rows=10).collect()
+        )
+        for _ in range(3)
+    ]
+    assert picks[0] == picks[1] == picks[2]
+    # and the prefix is genuinely capped
+    assert len(picks[0]) == 10

@@ -4,6 +4,7 @@ for every edge shape (empty, null, shorter-than-k, exactly-k, long).
 """
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 
 from sparkval.pipeline import dedup
@@ -147,3 +148,15 @@ def test_bit_lsh_rejects_zero_bands(spark, sf_dir):
     embs = load(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError):
         bit_lsh_bands(embs, n_bands=0)
+
+
+def test_dedupe_keep_canonical_passes_null_docs_through(spark):
+    from sparkval.pipeline.dedup import dedupe_keep_canonical
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2, 3, 4], "text": ["a", None, None, "a"]})
+    )
+    kept = dedupe_keep_canonical(df).toPandas().sort_values("doc_id")
+    # doc 4 is a dup of doc 1; NULL docs 2 and 3 are each unique
+    assert kept["doc_id"].tolist() == [1, 2, 3]
+    assert kept[kept["doc_id"] == 2]["text"].isna().all()

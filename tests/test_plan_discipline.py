@@ -286,7 +286,9 @@ def test_strip_violation_finalize_plan_narrow_and_vectorized(spark):
     ~100 B/row worst-case at 100 TB."""
     from pyspark.sql import functions as F  # noqa: F811
 
-    from sparkval.constraints import row_check_partials, violations_from_row_partials
+    from sparkval import histograms
+    from sparkval.config import ValidationConfig
+    from sparkval.constraints import violations_from_row_partials
 
     corpus = spark.range(0, 500).select(
         F.concat(F.lit("r"), (F.col("id") % 7).cast("string")).alias("repo"),
@@ -296,12 +298,55 @@ def test_strip_violation_finalize_plan_narrow_and_vectorized(spark):
         F.sha2(F.col("id").cast("string"), 256).alias("content"),
     )
     commits = corpus.select("repo", "commit").distinct()
-    out = violations_from_row_partials(row_check_partials(corpus), commits)
+    rows = histograms.split_fused(
+        histograms.fused_scan_partials(corpus, ValidationConfig())
+    )[1]
+    out = violations_from_row_partials(rows, commits)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan  # dup-key + commits sides
+
+
+def _node(line: str) -> str:
+    """A plan tree line without its tree-drawing prefix."""
+    return line.lstrip(" :+-")
+
+
+def test_violation_finalize_one_probe_filter_first_hash_last(spark, corpus_pair):
+    """Both row-violation entries share one body: ONE probe scan of the
+    rows (plus the narrow duplicate-key aggregation), the fired-check
+    Filter BEFORE the Generate (explode), and sha256 only ABOVE the
+    Generate — so only violating rows are hashed."""
+    from sparkval import histograms
+    from sparkval.config import ValidationConfig
+    from sparkval.constraints import all_violations, violations_from_row_partials
+
+    _, snap, commits = corpus_pair
+    # checkpointed sources scan as "Scan ExistingRDD" (a local relation
+    # would be a LocalTableScan, as commits stays), so the count below
+    # sees exactly the reads of the rows being checked
+    snap = snap.localCheckpoint()
+    plan = all_violations(snap, commits)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    gen = next(i for i, ln in enumerate(lines) if _node(ln).startswith("Generate"))
+    assert all(i < gen for i, ln in enumerate(lines) if "sha2(" in ln), plan
+    join = next(
+        i for i, ln in enumerate(lines)
+        if i > gen and _node(ln).startswith("BroadcastHashJoin")
+    )
+    assert any(_node(ln).startswith("Filter") for ln in lines[gen + 1:join]), plan
+    assert len(re.findall(r"Scan ExistingRDD", plan)) == 2, plan  # key agg + probe
+
+    rows = histograms.split_fused(
+        histograms.fused_scan_partials(snap, ValidationConfig())
+    )[1].localCheckpoint()
+    plan = (
+        violations_from_row_partials(rows, commits)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert len(re.findall(r"Scan ExistingRDD", plan)) == 2, plan  # key agg + probe
 
 
 def test_decontaminate_plan_broadcasts_benchmark_no_corpus_shuffle(spark, sf_dir):
