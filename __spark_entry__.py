@@ -18,14 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # every query starts by loading tables, so draining here bounds
-    # lazily-persisted tables (validate single-scan fused tables) to the
-    # one query in flight — the owner that lazy path otherwise lacks
-    # (ADVICE round 4). Queries must load tables BEFORE building lazy
-    # plans (all do: _t is always the first call).
-    from sparkval.engine import release_scan_caches
-
-    release_scan_caches()
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -1209,11 +1201,11 @@ def q_strip_validate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip==full invariant (strip.rs:38-45 / tests/strip_parity.rs):
     verdicts from a 4-strip walk must EXACTLY equal batch validate()
     — the partial-histogram monoid makes them bit-identical — and the
-    vowel shift must fail every partition. Round 4: strip mode is a
-    FULL validate (include_violations=True commits narrow per-row
-    check partials alongside the histograms); violation parity with
-    batch validate() is asserted in the same row (n_vio_mismatch,
-    planted duplicate keys included)."""
+    vowel shift must fail every partition. Strip mode is a FULL
+    validate (each strip commits narrow per-row check partials
+    alongside the histograms); violation parity with batch validate()
+    is asserted in the same row (n_vio_mismatch, planted duplicate
+    keys included)."""
     import atexit
     import shutil
     import tempfile
@@ -1239,9 +1231,7 @@ def q_strip_validate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         1
     ).write.mode("append").parquet(snap_path)
 
-    out = eng.validate_strips(
-        snap_path, base, f"{tmp}/ck", n_strips=4, include_violations=True
-    )
+    out = eng.validate_strips(snap_path, base, f"{tmp}/ck", n_strips=4)
     strip_v = out["verdicts"]
     batch = eng.validate(spark.read.parquet(snap_path), base)
     batch_v = batch["verdicts"]

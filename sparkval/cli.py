@@ -126,7 +126,7 @@ def main(argv: list[str] | None = None) -> int:
         strips = {} if args.strips is None else {"n_strips": args.strips}
         result = engine.validate_strips(
             args.corpus, baseline, args.checkpoint, commits=commits,
-            expected_manifest=manifest, include_violations=True, **strips,
+            expected_manifest=manifest, **strips,
         )
     else:
         # every table arg accepts iceberg:<catalog.table> or a parquet path

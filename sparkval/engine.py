@@ -18,12 +18,12 @@ Outputs per run:
 from __future__ import annotations
 
 import contextlib
-import functools
 import hashlib
 import itertools
 import json
 import threading
 import time
+import zlib
 from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -33,38 +33,6 @@ from sparkval.baseline import build_baseline
 from sparkval.config import ValidationConfig
 from sparkval.drift import drift_verdicts_joined, joined_hists
 from sparkval.schema import check_corpus_schema
-
-#: fused single-scan tables persisted by validate(single_scan=True) —
-#: both returned DataFrames (verdicts, violations) read them, so the
-#: cache must outlive the call; ownership lives here (the
-#: pipeline.dedup lazy-cache discipline) and release_scan_caches()
-#: drains it.
-_SCAN_CACHES: list[DataFrame] = []
-
-
-def release_scan_caches() -> int:
-    """Unpersist fused scan tables left cached by
-    validate(single_scan=True). Call after consuming a validate
-    result in a long-lived session (the driver entry queries and the
-    bench harness do; clearCache()/session exit also work). Returns
-    the number of tables released."""
-    n = 0
-    while _SCAN_CACHES:
-        df = _SCAN_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped
-            pass
-    return n
-
-
-def _read_units(spark: SparkSession, root: str, part_col: str, ids: list[str]) -> DataFrame:
-    """Committed partials of exactly ``ids``: partition-discover the
-    ``<part_col>=<id>`` dirs under ``root``, then prune to the id set —
-    any other unit committed there is never opened."""
-    return spark.read.parquet(root).filter(F.col(part_col).isin(ids))
-
 
 class ValidationCancelled(RuntimeError):
     """Raised by validate_with_stop / validate_strips when their token
@@ -154,7 +122,6 @@ class ValidationEngine:
         baseline: DataFrame,
         commits: DataFrame | None = None,
         expected_manifest: DataFrame | None = None,
-        single_scan: bool | None = None,
     ) -> dict[str, DataFrame]:
         """Full validation of a snapshot against a baseline table.
 
@@ -162,47 +129,20 @@ class ValidationEngine:
         content_sha256) table from a reference engine run — enables the
         per-row sha256 invariant check (BASELINE.json input_hint).
 
-        ``single_scan=True`` (round 5): reads the content column ONCE
-        — a fused Arrow kernel emits histogram partials and the narrow
-        per-row check partials (sha256 of EVERY row included) from the
-        same scan (histograms.fused_scan_partials); the fused table
-        (tiny: ~100 B/row) is persisted and both outputs derive from
-        it. Outputs are bit-identical to the classic two-plan shape
-        (parity-tested both ways).
-
-        Default is AUTO, from the measured cost model (sf0.1,
-        local[32], BENCH.md round 5): with ``expected_manifest`` the
-        classic shape hashes every row in a second content pass, so
-        fusing saves that pass (~1.2x faster) -> fused. WITHOUT the
-        manifest the classic violations plan never reads content for
-        non-violating rows (uniqueness shuffles 3 key columns;
-        parquet prunes the rest), so the "second scan" it avoids is
-        mostly free while the fusion pays full-corpus sha256 + the
-        Arrow pass-through (~8% slower) -> classic. The persisted
-        fused table is registered with ``release_scan_caches()``;
-        long-lived sessions call it (or clearCache) after consuming
-        the outputs.
+        Two plans over the snapshot, nothing persisted: verdicts from
+        ``histograms.partial_histograms`` through ``_finalize``, and
+        violations from ``constraints.all_violations``, whose one probe
+        carries every row's content up to the fired-check filter and
+        hashes only the rows that reach the explode (every row when a
+        manifest is given). Fusing both into one content read
+        (``histograms.fused_scan_partials``) is what the committed
+        paths (``validate_strips``, ``validate_incremental``) write;
+        for a one-shot run it measured no faster (docs/SCALE.md), since
+        the fused kernel pays the Arrow pass-through and a sha256 of
+        every row.
         """
         check_corpus_schema(snapshot)
-        cfg = self.config
-
-        if single_scan is None:
-            single_scan = expected_manifest is not None
-        if single_scan:
-            # release any fused table a PREVIOUS validate() left cached
-            # before persisting a new one: direct callers in long-lived
-            # sessions otherwise accrete one cached table per call
-            # (ADVICE r5). Unpersist never invalidates an outstanding
-            # result DataFrame — a late consumer just recomputes
-            # uncached.
-            release_scan_caches()
-            fused = histograms.fused_scan_partials(snapshot, cfg).persist()
-            _SCAN_CACHES.append(fused)
-            return self._finalize(
-                baseline, *histograms.split_fused(fused), commits, expected_manifest
-            )
-
-        out = self._finalize(baseline, histograms.partial_histograms(snapshot, cfg))
+        out = self._finalize(baseline, histograms.partial_histograms(snapshot, self.config))
         out["violations"] = constraints.all_violations(
             snapshot, commits, expected_manifest
         )
@@ -298,65 +238,62 @@ class ValidationEngine:
         cfg_fp = hashlib.sha1(cfg.encode()).hexdigest()[:8]
         return [hashlib.sha1(f"{k}|{cfg_fp}".encode()).hexdigest()[:16] for k in keys]
 
-    def _commit_units(
+    def _validate_units(
         self,
-        spark: SparkSession,
+        baseline: DataFrame,
         units: list[tuple[str, list[str]]],
-        roots: list[str],
+        root: str,
         part_col: str,
-        write,
         schema,
+        commits: DataFrame | None,
+        expected_manifest: DataFrame | None,
         on_unit=None,
         stop: CancellationToken | None = None,
-    ) -> tuple[dict[str, list[str]], int]:
-        """The commit loop shared by strip and incremental validation.
+    ) -> tuple[dict[str, DataFrame], int]:
+        """Commit loop + finalize shared by strip and incremental
+        validation.
 
-        Each ``(unit_id, files)`` unit is one write job of
-        ``write(df, unit_dir)`` into ``roots[0]/<part_col>=<unit_id>``;
-        the parquet commit protocol's ``_SUCCESS`` marker is the
-        commit, so a cancelled or killed job commits nothing. A unit
-        whose marker exists under ANY of ``roots`` (probed in order)
-        is skipped, scan included. Probes go through the Hadoop
-        FileSystem API, never driver-local os.path, so the roots may
-        live on file://, hdfs://, s3a:// or a bare local path (on S3A
-        the committer still guarantees marker-implies-complete, which
-        is all resume needs). ``on_unit(i, n, done)`` fires for every
-        unit and ``stop`` is polled at each unit boundary
+        Each ``(unit_id, files)`` unit is one write job of the files'
+        fused partials (``histograms.fused_scan_partials``: histogram
+        and per-row check partials from one content read, partitioned
+        by ``kind``) into ``root/<part_col>=<unit_id>``; the parquet
+        commit protocol's ``_SUCCESS`` marker is the commit, so a
+        cancelled or killed job commits nothing, and a unit whose
+        marker exists is skipped, scan included. Probes go through the
+        Hadoop FileSystem API, never driver-local os.path, so the root
+        may live on file://, hdfs://, s3a:// or a bare local path (on
+        S3A the committer still guarantees marker-implies-complete,
+        which is all resume needs). ``on_unit(i, n, done)`` fires for
+        every unit and ``stop`` is polled at each unit boundary
         (strip.rs:510-513).
 
-        Returns ({root: ids of the units committed there}, number of
-        units written by this call)."""
-        committed: dict[str, list[str]] = {root: [] for root in roots}
+        The finalize reads exactly these units' ids: any other unit
+        committed under ``root`` (another layout, file set or config)
+        is pruned by partition filter, never opened. Returns (outputs,
+        number of units written by this call)."""
+        spark = baseline.sparkSession
         recomputed = 0
         for i, (uid, files) in enumerate(units):
-            where = next(
-                (r for r in roots
-                 if io.fs_exists(spark, io.uri_join(r, f"{part_col}={uid}/_SUCCESS"))),
-                None,
-            )
+            unit_dir = io.uri_join(root, f"{part_col}={uid}")
+            done = io.fs_exists(spark, io.uri_join(unit_dir, "_SUCCESS"))
             if on_unit is not None:
-                on_unit(i, len(units), where is not None)
-            if where is None:
+                on_unit(i, len(units), done)
+            if not done:
                 if stop is not None and stop.cancelled:
                     raise ValidationCancelled(stop.reason)
-                where = roots[0]
-                write(
-                    spark.read.schema(schema).parquet(*files),
-                    io.uri_join(where, f"{part_col}={uid}"),
-                )
+                histograms.fused_scan_partials(
+                    spark.read.schema(schema).parquet(*files), self.config
+                ).write.mode("overwrite").partitionBy("kind").parquet(unit_dir)
                 recomputed += 1
-            committed[where].append(uid)
-        return committed, recomputed
-
-    def _write_hists(self, df: DataFrame, path: str) -> None:
-        histograms.partial_histograms(df, self.config).write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    def _write_fused(self, df: DataFrame, path: str) -> None:
-        histograms.fused_scan_partials(df, self.config).write.mode(
-            "overwrite"
-        ).partitionBy("kind").parquet(path)
+        if stop is not None and stop.cancelled:
+            raise ValidationCancelled(stop.reason)
+        committed = spark.read.parquet(root).filter(
+            F.col(part_col).isin([uid for uid, _ in units])
+        )
+        out = self._finalize(
+            baseline, *histograms.split_fused(committed), commits, expected_manifest
+        )
+        return out, recomputed
 
     # -- strip-mode validation ----------------------------------------------
     def validate_strips(
@@ -369,41 +306,35 @@ class ValidationEngine:
         on_strip=None,
         commits: DataFrame | None = None,
         expected_manifest: DataFrame | None = None,
-        include_violations: bool = False,
     ) -> dict[str, DataFrame]:
         """Strip-walker validation — butteraugli_strip
         (strip.rs:227-455, walker strip.rs:491-581) recast to the one
         resource that matters at 100 TB: the input scan.
 
-        The snapshot table's parquet files are split into ``n_strips``
-        contiguous strips; each strip is scanned once and its partials
-        committed to ``checkpoint_dir`` (``_commit_units``), then
-        ``_finalize`` merges them. A resumed run skips committed strips
-        entirely, scan included, so resume cost is proportional to the
-        remaining input fraction (measured in BENCH.md). Strip ids hash
-        the strip's file paths and the config: a resume never rereads
-        committed content, and a config change recomputes every strip.
-        The finalize reads only this run's strip ids, so strips from
-        another n_strips, file set or config under a reused
-        checkpoint_dir are pruned, never merged (they stay in place).
+        Each of the snapshot table's parquet files goes to strip
+        ``crc32(path) % n_strips`` (empty strips are dropped), so
+        appending a file changes one strip's file set and leaves every
+        other strip's id, and commit, alone. Each strip is scanned
+        once and commits ONE fused table to
+        ``checkpoint_dir/fused_partials/strip=<sid>``: histogram
+        partials plus the narrow per-row check partials, from a single
+        pass over its content (``_validate_units``). The finalize
+        merges them into verdicts and derives every row-level violation
+        (global uniqueness counts, null_required, referential vs
+        ``commits``, sha256 manifest vs ``expected_manifest``) without
+        reading content again — a full validate, beyond the reference,
+        whose strip API returns only score/pnorm (strip.rs:601-905).
 
-        ``include_violations=False`` commits histogram partials to
-        ``partials/strip=<sid>`` and returns verdicts; a strip already
-        committed by a full-validate run under ``fused_partials`` is
-        reused (its hist rows are a superset). ``include_violations=True``
-        makes strip mode a FULL validate (beyond the reference, whose
-        strip API returns only score/pnorm, strip.rs:601-905): each
-        strip commits ONE fused table (``fused_partials/strip=<sid>``,
-        partitioned by ``kind``) of histogram partials and the narrow
-        per-row check partials from a single pass over its content, and
-        the finalize derives every row-level violation (global
-        uniqueness counts, null_required, referential vs ``commits``,
-        sha256 manifest vs ``expected_manifest``) from them.
+        A resumed run skips committed strips entirely, scan included,
+        so resume cost is proportional to the remaining input fraction
+        (measured in BENCH.md). Strip ids hash the strip's file paths
+        and the config: a resume never rereads committed content, and
+        a config change recomputes every strip.
 
         ``stop`` fences in-flight jobs through its job group and is
         polled at strip boundaries; with it the outputs are
         materialized before return. ``on_strip(i, n, skipped)`` is an
-        optional per-strip progress hook.
+        optional per-strip progress hook over the non-empty strips.
         """
         spark = baseline.sparkSession
         with _fenced(spark, stop, "sparkval strip validation"):
@@ -412,44 +343,17 @@ class ValidationEngine:
             files = sorted(probe.inputFiles())
             if not files:
                 raise ValueError(f"no parquet files under {snapshot_path}")
-            n_strips = max(1, min(n_strips, len(files)))
-            strips = [
-                files[len(files) * i // n_strips : len(files) * (i + 1) // n_strips]
-                for i in range(n_strips)
-            ]
+            # crc32, not hash(): str hashes are salted per process, and
+            # a strip's id must survive into the resuming process
+            by_strip: dict[int, list[str]] = {}
+            for f in files:
+                by_strip.setdefault(zlib.crc32(f.encode()) % max(1, n_strips), []).append(f)
+            strips = [by_strip[k] for k in sorted(by_strip)]
             units = list(zip(self._unit_ids(["\n".join(s) for s in strips]), strips))
-            fused_root = io.uri_join(checkpoint_dir, "fused_partials")
-            # verdict-only runs also resume from fused commits; the
-            # reverse recomputes (a full validate needs row partials the
-            # classic tree never wrote)
-            roots = [fused_root] if include_violations else [
-                io.uri_join(checkpoint_dir, "partials"), fused_root
-            ]
-            committed, _ = self._commit_units(
-                spark, units, roots, "strip",
-                self._write_fused if include_violations else self._write_hists,
-                probe.schema, on_strip, stop,
+            out, _ = self._validate_units(
+                baseline, units, io.uri_join(checkpoint_dir, "fused_partials"),
+                "strip", probe.schema, commits, expected_manifest, on_strip, stop,
             )
-            if stop is not None and stop.cancelled:
-                raise ValidationCancelled(stop.reason)
-            tables = {
-                root: _read_units(spark, root, "strip", ids)
-                for root, ids in committed.items() if ids
-            }
-            if include_violations:
-                out = self._finalize(
-                    baseline, *histograms.split_fused(tables[fused_root]), commits,
-                    expected_manifest,
-                )
-            else:
-                hists = [
-                    histograms.split_fused(t)[0] if root == fused_root
-                    else t.select(*histograms.PARTIAL_SCHEMA.fieldNames())
-                    for root, t in tables.items()
-                ]
-                out = self._finalize(
-                    baseline, functools.reduce(DataFrame.unionByName, hists)
-                )
             if stop is not None:
                 out = {k: v.localCheckpoint(eager=True) for k, v in out.items()}
             return out
@@ -492,15 +396,11 @@ class ValidationEngine:
             raise ValueError(f"no data files under {snapshot_path}")
         probe = spark.read.parquet(snapshot_path)
         check_corpus_schema(probe)
-        root = io.uri_join(cache_dir, "file_partials")
         fids = self._unit_ids([f"{uri}|{size}|{mtime}" for uri, size, mtime in statuses])
-        _, recomputed = self._commit_units(
-            spark, [(fid, [uri]) for fid, (uri, _, _) in zip(fids, statuses)],
-            [root], "file", self._write_fused, probe.schema, on_file,
-        )
-        committed = _read_units(spark, root, "file", sorted(fids))
-        out = self._finalize(
-            baseline, *histograms.split_fused(committed), commits, expected_manifest
+        out, recomputed = self._validate_units(
+            baseline, [(fid, [uri]) for fid, (uri, _, _) in zip(fids, statuses)],
+            io.uri_join(cache_dir, "file_partials"), "file", probe.schema,
+            commits, expected_manifest, on_file,
         )
         return {
             **out,
@@ -532,13 +432,7 @@ class ValidationEngine:
         """
         with _fenced(snapshot.sparkSession, stop, "sparkval cancellable validation"):
             out = self.validate(snapshot, baseline, commits, expected_manifest)
-            result = {k: v.localCheckpoint(eager=True) for k, v in out.items()}
-            # both outputs are materialized above, so any fused scan
-            # table still cached (this call's, or a stale one validate()
-            # did not yet self-release) is done — drain the registry
-            # (review round 5 / ADVICE r5)
-            release_scan_caches()
-            return result
+            return {k: v.localCheckpoint(eager=True) for k, v in out.items()}
 
     # -- lineage / metrics ----------------------------------------------------
     def run_metrics(

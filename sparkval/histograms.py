@@ -302,14 +302,10 @@ _ROW_COLS = ("repo", "path", "commit", "content_sha256", "null_detail")
 
 def fused_scan_partials(corpus: DataFrame, config: ValidationConfig) -> DataFrame:
     """Single-scan fusion of the two per-row passes a full validate
-    needs (round-5 optimization): histogram partials AND row-check
-    partials from ONE read of the content column.
-
-    validate()'s classic shape scans content twice — once for
-    violations (sha256/null/key projections) and once for histograms.
-    At 100 TB the content scan IS the cost (memory-bandwidth-bound,
-    docs/SCALE.md), so halving scans nearly halves the engine's
-    steady-state wall time. Mechanics:
+    needs: histogram partials AND row-check partials from ONE read of
+    the content column — the format every committed unit holds
+    (``validate_strips`` strips, ``validate_incremental`` files), so a
+    committed unit's content is never read again. Mechanics:
 
     - every expensive per-row expression (sha256, null detail, bucket,
       fingerprint, UTF-8 encode) stays JVM-side codegen;
@@ -318,12 +314,14 @@ def fused_scan_partials(corpus: DataFrame, config: ValidationConfig) -> DataFram
       dropped _bytes buffer) and folds the content buffer into
       histogram partials emitted as kind='h';
     - downstream, filter(kind) splits the (tiny: ~100 B/row + tasks x
-      keys hist rows) fused table; one persist of it replaces a full
-      second corpus scan.
+      keys hist rows) fused table (``split_fused``).
 
-    Same monoid contract as partial_histograms; the kind='r' rows feed
+    One-shot ``validate`` does not use it: there the fusion pays the
+    Arrow pass-through and a sha256 of every row, and measured no
+    faster than its two plans (docs/SCALE.md). Same monoid contract as
+    partial_histograms; the kind='r' rows feed
     constraints.violations_from_row_partials — bit-identical outputs
-    to the two-pass path (parity-tested)."""
+    to the two-plan path (parity-tested)."""
     from sparkval.constraints import NATURAL_KEY, row_check_exprs
 
     n_langs = len(LANG_VOCAB)
@@ -392,7 +390,7 @@ _FUSED_PA_SCHEMA = pa.schema(
 
 def split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(hist_partials, row_partials) views of a fused table — filters
-    over the (persisted, tiny) fused output, NOT rescans of content."""
+    over the (committed, tiny) fused output, NOT rescans of content."""
     hist = fused.filter(F.col("kind") == "h").select(
         *[f.name for f in PARTIAL_SCHEMA.fields]
     )

@@ -247,35 +247,42 @@ def test_strip_walker_resume_scans_only_remaining_files(spark, tmp_path):
     base = eng.build_baseline(corpus)
     ckpt = str(tmp_path / "ck")
 
+    # files hash to strips: the hook reports the non-empty strip
+    # count n, and the cancel fires at its midpoint
     stop = CancellationToken(spark)
+    half = []
+
+    def cancel_at_half(i, n, sk):
+        if i == n // 2:
+            half.append(i)
+            stop.cancel("half")
+
     try:
-        eng.validate_strips(
-            path, base, ckpt, stop=stop, n_strips=6,
-            on_strip=lambda i, n, sk: stop.cancel("half") if i == 3 else None,
-        )
+        eng.validate_strips(path, base, ckpt, stop=stop, n_strips=6,
+                            on_strip=cancel_at_half)
     except ValidationCancelled:
         pass
 
     import os
 
     committed = {
-        d for d in os.listdir(f"{ckpt}/partials")
-        if os.path.exists(f"{ckpt}/partials/{d}/_SUCCESS")
+        d for d in os.listdir(f"{ckpt}/fused_partials")
+        if os.path.exists(f"{ckpt}/fused_partials/{d}/_SUCCESS")
     }
-    assert len(committed) == 3
+    assert len(committed) == half[0]
 
     seen = []
     out = eng.validate_strips(
         path, base, ckpt, n_strips=6,
         on_strip=lambda i, n, sk: seen.append(sk),
     )
-    assert seen == [True, True, True, False, False, False]
+    assert seen == [True] * half[0] + [False] * (len(seen) - half[0])
     out["verdicts"].count()
-    # all 6 strips committed now; nothing left to scan on a third run
+    # every strip committed now; nothing left to scan on a third run
     seen3 = []
     eng.validate_strips(path, base, ckpt, n_strips=6,
                         on_strip=lambda i, n, sk: seen3.append(sk))
-    assert seen3 == [True] * 6
+    assert seen3 == [True] * len(seen)
 
 
 def test_strip_violation_finalize_plan_narrow_and_vectorized(spark):
@@ -290,9 +297,11 @@ def test_strip_violation_finalize_plan_narrow_and_vectorized(spark):
     from sparkval.config import ValidationConfig
     from sparkval.constraints import violations_from_row_partials
 
+    # ids k and k + 250 share (repo, path, commit): 250 planted
+    # duplicate keys, two rows each
     corpus = spark.range(0, 500).select(
-        F.concat(F.lit("r"), (F.col("id") % 7).cast("string")).alias("repo"),
-        (F.col("id") % 250).cast("string").alias("path"),  # planted dups
+        F.concat(F.lit("r"), (F.col("id") % 250 % 7).cast("string")).alias("repo"),
+        (F.col("id") % 250).cast("string").alias("path"),
         F.lit("c0").alias("commit"),
         F.lit("python").alias("lang"),
         F.sha2(F.col("id").cast("string"), 256).alias("content"),
@@ -307,6 +316,9 @@ def test_strip_violation_finalize_plan_narrow_and_vectorized(spark):
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan  # dup-key + commits sides
+    # closed form: both rows of every duplicated key, nothing else
+    assert out.count() == 500
+    assert out.filter(F.col("check") != "uniqueness").count() == 0
 
 
 def _node(line: str) -> str:

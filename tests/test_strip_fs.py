@@ -44,23 +44,31 @@ def test_strip_walker_uri_checkpoint_cancel_resume(spark, tmp_path):
     base = eng.build_baseline(corpus)
     ckpt = f"file://{tmp_path}/ck_uri"
 
+    # files hash to strips, so the non-empty strip count n is read
+    # from the hook; cancel at its midpoint
     stop = CancellationToken(spark)
+    half = []
+
+    def cancel_at_half(i, n, sk):
+        if i == n // 2:
+            half.append(i)
+            stop.cancel("half")
+
     with pytest.raises(ValidationCancelled):
-        eng.validate_strips(
-            path, base, ckpt, stop=stop, n_strips=6,
-            on_strip=lambda i, n, sk: stop.cancel("half") if i == 3 else None,
-        )
-    # three strips committed under the URI dir, visible through the FS API
+        eng.validate_strips(path, base, ckpt, stop=stop, n_strips=6,
+                            on_strip=cancel_at_half)
+    # strips before the midpoint committed under the URI dir, visible
+    # through the FS API
     from sparkval.io import fs_exists, uri_join
 
-    assert fs_exists(spark, uri_join(ckpt, "partials"))
+    assert fs_exists(spark, uri_join(ckpt, "fused_partials"))
 
     seen = []
     out = eng.validate_strips(
         path, base, ckpt, n_strips=6,
         on_strip=lambda i, n, sk: seen.append(sk),
     )
-    assert seen == [True, True, True, False, False, False]
+    assert seen == [True] * half[0] + [False] * (len(seen) - half[0])
 
     full = eng.validate(spark.read.parquet(path), base)["verdicts"].toPandas()
     got = out["verdicts"].toPandas()
@@ -108,17 +116,17 @@ def test_strip_config_change_invalidates_checkpoint(spark, tmp_path):
 
     eng = ValidationEngine()
     eng.validate_strips(
-        path, eng.build_baseline(corpus), ckpt, n_strips=4, include_violations=True
+        path, eng.build_baseline(corpus), ckpt, n_strips=4
     )["verdicts"].count()
 
     other = ValidationEngine(ValidationConfig(n_repo_buckets=32))
     base32 = other.build_baseline(corpus)
     seen = []
     out = other.validate_strips(
-        path, base32, ckpt, n_strips=4, include_violations=True,
+        path, base32, ckpt, n_strips=4,
         on_strip=lambda i, n, sk: seen.append(sk),
     )
-    assert seen == [False] * 4  # no stale reuse
+    assert seen and not any(seen)  # no stale reuse
     full = other.validate(spark.read.parquet(path), base32)
     for k in ("verdicts", "violations"):
         assert sorted(map(tuple, out[k].collect())) == sorted(
@@ -168,7 +176,7 @@ def test_baseline_bytes_fs_form_matches_local_walk(spark, tmp_path):
 
 
 def test_strip_mode_violations_parity_with_batch(spark, tmp_path):
-    """include_violations=True makes strip mode a FULL validate: the
+    """Strip mode is a FULL validate: the
     row-level violation set (uniqueness + null_required + referential +
     sha256 manifest) finalized from committed per-row partials must
     equal validate()'s, exactly — including global uniqueness counts
@@ -200,7 +208,7 @@ def test_strip_mode_violations_parity_with_batch(spark, tmp_path):
 
     out = eng.validate_strips(
         path, base, str(tmp_path / "ckv"), n_strips=4,
-        commits=commits, expected_manifest=expected, include_violations=True,
+        commits=commits, expected_manifest=expected,
     )
     batch = eng.validate(
         spark.read.parquet(path), base, commits=commits, expected_manifest=expected
@@ -231,10 +239,8 @@ def test_strip_half_committed_strip_reruns_both_writes(spark, tmp_path):
     base = eng.build_baseline(corpus)
     ckpt = str(tmp_path / "ck_half")
 
-    # full strip run with violations -> every strip has its fused commit
-    eng.validate_strips(
-        path, base, ckpt, n_strips=4, include_violations=True
-    )["verdicts"].count()
+    # full strip run -> every strip has its fused commit
+    eng.validate_strips(path, base, ckpt, n_strips=4)["verdicts"].count()
 
     # simulate the mid-commit kill: drop ONE strip's _SUCCESS marker
     # (data files may exist, but an uncommitted strip must not count)
@@ -249,7 +255,7 @@ def test_strip_half_committed_strip_reruns_both_writes(spark, tmp_path):
 
     seen = []
     out = eng.validate_strips(
-        path, base, ckpt, n_strips=4, include_violations=True,
+        path, base, ckpt, n_strips=4,
         on_strip=lambda i, n, sk: seen.append(sk),
     )
     assert seen.count(False) == 1  # exactly the half-committed strip re-ran
@@ -293,7 +299,7 @@ def test_sidecar_config_from_breadcrumb_and_explicit_param(spark, tmp_path):
 
 
 def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
-    """validate_strips(include_violations=True) is THE resumable full
+    """validate_strips is THE resumable full
     validate (round-4 verdict #2): once a strip's two partial tables
     are committed, its content is never read again. Proven by
     poisoning the snapshot's bytes in place after the first run —
@@ -311,15 +317,13 @@ def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
     snap.coalesce(1).repartition(4).write.parquet(path)
     ckpt = str(tmp_path / "ck_fullval")
 
-    out1 = eng.validate_strips(
-        path, base, ckpt, n_strips=4, include_violations=True
-    )
+    out1 = eng.validate_strips(path, base, ckpt, n_strips=4)
     v1 = out1["violations"].toPandas()
     assert len(v1) > 0  # the planted dups are visible
 
     # poison: rewrite the same part-file NAMES with a corpus holding 12
-    # extra duplicates (strip ids hash the file path list, so names
-    # must be preserved; .crc shadows are dropped so the new bytes stay
+    # extra duplicates (strip assignment and ids hash the file paths,
+    # so names must be preserved; .crc shadows are dropped so the new bytes stay
     # readable if anything were to read them)
     snap2 = corpus.union(corpus.limit(12))
     path2 = str(tmp_path / "snap_poison_v2.parquet")
@@ -336,10 +340,10 @@ def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
 
     seen = []
     out2 = eng.validate_strips(
-        path, base, ckpt, n_strips=4, include_violations=True,
+        path, base, ckpt, n_strips=4,
         on_strip=lambda i, n, sk: seen.append(sk),
     )
-    assert seen == [True] * 4  # every strip resumed from its commit
+    assert seen and all(seen)  # every strip resumed from its commit
     v2 = out2["violations"].toPandas()
     key = ["check", "repo", "path", "commit"]
     a = v1[key].sort_values(key).reset_index(drop=True)
@@ -347,38 +351,38 @@ def test_resumed_full_validate_never_rescans_committed_content(spark, tmp_path):
     assert a.equals(b)  # original violations — content never rescanned
 
     # sanity: the poison IS detectable from the bytes on disk
-    out3 = eng.validate_strips(
-        path, base, str(tmp_path / "ck_freshval"), n_strips=4,
-        include_violations=True,
-    )
+    out3 = eng.validate_strips(path, base, str(tmp_path / "ck_freshval"), n_strips=4)
     assert len(out3["violations"].toPandas()) > len(v1)
 
 
-def test_verdict_only_resume_reads_fused_commits(spark, tmp_path):
-    """A completed full validate's fused strips satisfy a later
-    verdict-only run on the same checkpoint dir: every strip skips,
-    verdicts match a fresh batch run. A probe of the classic partials
-    tree alone would silently rescan everything."""
+def test_appended_file_recomputes_one_strip(spark, tmp_path):
+    """Each file goes to strip crc32(path) % n_strips, so appending one
+    data file changes one strip's file set: the rerun recomputes at
+    most that strip and still equals a plain validate. Contiguous
+    slices of the sorted path list would shift every strip boundary
+    after the new file's (random) part name."""
+    from sparkval import fixtures as fx
+
+    base_pd = fx.make_case("random_mid__identity", n_rows=800)[0]
+    corpus = spark.createDataFrame(base_pd)
     eng = ValidationEngine(ValidationConfig(short_circuit_identical=False))
-    corpus = _corpus(spark, n=1500)
-    path = str(tmp_path / "snap.parquet")
-    corpus.repartition(4).write.parquet(path)
     base = eng.build_baseline(corpus)
-    ckpt = str(tmp_path / "ck_cross")
+    path = str(tmp_path / "snap.parquet")
+    corpus.repartition(40).write.parquet(path)
+    ckpt = str(tmp_path / "ck_append")
+    eng.validate_strips(path, base, ckpt, n_strips=16)["verdicts"].count()
 
-    eng.validate_strips(
-        path, base, ckpt, n_strips=4, include_violations=True
-    )["verdicts"].count()
-
+    corpus.limit(20).coalesce(1).write.mode("append").parquet(path)
     seen = []
     out = eng.validate_strips(
-        path, base, ckpt, n_strips=4, include_violations=False,
+        path, base, ckpt, n_strips=16,
         on_strip=lambda i, n, sk: seen.append(sk),
     )
-    assert seen == [True] * 4  # all strips resumed from fused commits
-    got = out["verdicts"].toPandas()
-    full = eng.validate(spark.read.parquet(path), base)["verdicts"].toPandas()
-    cols = ["repo_bucket", "lang", "score", "verdict"]
-    a = got[cols].sort_values(cols[:2]).reset_index(drop=True)
-    b = full[cols].sort_values(cols[:2]).reset_index(drop=True)
-    assert a.equals(b)
+    assert seen.count(False) <= 1, seen
+
+    full = eng.validate(spark.read.parquet(path), base)
+    for k in ("verdicts", "violations"):
+        assert sorted(map(tuple, out[k].collect())) == sorted(
+            map(tuple, full[k].collect())
+        ), k
+    assert full["violations"].count() == 40  # 20 duplicated keys

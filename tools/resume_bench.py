@@ -85,9 +85,9 @@ def main() -> None:
         pass
     t_cancelled = time.perf_counter() - t0
     n_committed = len(
-        [d for d in os.listdir(f"{ck}/partials")
-         if os.path.exists(f"{ck}/partials/{d}/_SUCCESS")]
-    ) if os.path.isdir(f"{ck}/partials") else 0
+        [d for d in os.listdir(f"{ck}/fused_partials")
+         if os.path.exists(f"{ck}/fused_partials/{d}/_SUCCESS")]
+    ) if os.path.isdir(f"{ck}/fused_partials") else 0
 
     # leg 3: resume to completion
     skipped = []
