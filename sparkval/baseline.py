@@ -24,20 +24,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from sparkval.config import ValidationConfig
 from sparkval.drift import partition_histograms
-from sparkval.histograms import repo_bucket_py
-
-
-def _bucket_col(n_buckets: int) -> F.Column:
-    """JVM-side crc32-based bucket, bit-equal to histograms.repo_bucket_py
-    (NULL repos map through the same sentinel, never a NULL bucket)."""
-    from sparkval.histograms import NULL_REPO_SENTINEL
-
-    repo_nn = F.coalesce(F.col("repo"), F.lit(NULL_REPO_SENTINEL))
-    return F.pmod(F.crc32(repo_nn.cast("binary")), F.lit(n_buckets)).cast("int")
 
 
 def build_baseline(corpus: DataFrame, config: ValidationConfig) -> DataFrame:

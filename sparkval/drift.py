@@ -231,13 +231,11 @@ def drill_down_bucket(
         NULL_REPO_SENTINEL,
         merge_histograms_with_lang,
         partial_histograms,
+        repo_bucket_col,
     )
 
     repo_nn = F.coalesce(F.col("repo"), F.lit(NULL_REPO_SENTINEL))
-    in_bucket = (
-        F.pmod(F.crc32(repo_nn.cast("binary")), F.lit(config.n_repo_buckets)).cast("int")
-        == bucket_id
-    )
+    in_bucket = repo_bucket_col(config.n_repo_buckets) == bucket_id
     s = snapshot.withColumn("repo", repo_nn).filter(in_bucket)
     b = baseline_corpus.withColumn("repo", repo_nn).filter(in_bucket)
 

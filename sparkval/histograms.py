@@ -6,16 +6,23 @@ vector: byte-frequency (256 bins), log2-length (64 bins), and lang mix
 (LANG_VOCAB bins). The interleaved->planar conversion
 (opsin.rs:346-376) becomes histogram aggregation.
 
-Scale design (the part that must survive 100 TB):
+The vectors form one mergeable monoid: counts and histograms sum,
+fingerprints XOR, so the split of the input never changes the result.
+``_hist_partial_arrays`` turns an Arrow batch of rows into per-key
+partial rows, and ``_fold`` is the one place partial rows combine. It
+runs in three places:
 
-1. ``partial_histograms`` — mapInPandas over the scan. Each Arrow
-   batch collapses to at most (#keys-in-batch) rows of packed count
-   vectors. This is the map-side combine: raw content NEVER shuffles.
-   100 TB of content becomes ~(tasks x keys) rows of ~2.6 KB each.
-2. ``merge_histograms_with_lang`` — one grouped-map merge on
-   repo_bucket: numpy sums/xors of the partial rows per (bucket,
-   lang), plus the bucket-wide lang-mix vector, in a single shuffle —
+1. **Task state** (``partial_histograms``, ``fused_scan_partials``):
+   each task folds its batches' partials into a running O(present
+   keys) state and emits it once. This is the map-side combine: raw
+   content never shuffles, and 100 TB of content becomes ~(tasks x
+   keys) rows of ~2.6 KB each.
+2. **Bucket merge** (``merge_histograms_with_lang``): one grouped-map
+   shuffle on repo_bucket folds the bucket's partial rows per lang and
+   derives the bucket-wide lang-mix vector from the folded counts —
    Spark's own StripReducer (strip.rs:126-209 analog).
+3. **Stream state** (``streaming.stream_cumulative_drift``): each
+   micro-batch's partials fold into the bucket's running state.
 
 The histogram bins are uniform by construction, so the merge stage
 has zero skew even when repos are hot — skew lives only in the
@@ -28,11 +35,12 @@ import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from sparkval.config import BYTE_BINS, LANG_VOCAB, LEN_BINS, ValidationConfig
 
@@ -60,6 +68,9 @@ PARTIAL_SCHEMA = T.StructType(
 )
 
 
+_PARTIAL_PA_SCHEMA = to_arrow_schema(PARTIAL_SCHEMA)
+
+
 #: Sentinel standing in for a NULL repo when bucketing. NULL repos are
 #: still *reported* by constraints.null_violations; the histogram scan
 #: must tolerate them (crc32(NULL) would NULL the group key and crash
@@ -79,9 +90,13 @@ def repo_bucket_py(repo: str | None, n_buckets: int) -> int:
     return zlib.crc32(repo.encode("utf-8")) % n_buckets
 
 
-def _lang_norm(s: pd.Series) -> pd.Series:
-    low = s.fillna("other").str.lower()
-    return low.where(low.isin(LANG_VOCAB), "other")
+def repo_bucket_col(n_buckets: int) -> F.Column:
+    """JVM-side twin of ``repo_bucket_py``: crc32 of the repo (NULL
+    repos through the same sentinel, never a NULL bucket) mod
+    ``n_buckets``. The one bucket expression of the scan and of the
+    drill-down filter."""
+    repo_nn = F.coalesce(F.col("repo"), F.lit(NULL_REPO_SENTINEL))
+    return F.pmod(F.crc32(repo_nn.cast("binary")), F.lit(n_buckets)).cast("int")
 
 
 def prepared_scan(
@@ -106,15 +121,11 @@ def prepared_scan(
     """
     lang_low = F.lower(F.coalesce(F.col("lang"), F.lit("other")))
     lang_norm = F.when(lang_low.isin(*LANG_VOCAB), lang_low).otherwise(F.lit("other"))
-    # coalesce BEFORE crc32: crc32(NULL) is NULL, which would NULL the
+    # the sentinel matters: crc32(NULL) is NULL, which would NULL the
     # composite _key and abort the whole mapInArrow scan on the first
     # corpus with a NULL repo (tolerate-and-report, never fatal —
     # null_violations is where NULL keys get flagged)
-    repo_nn = F.coalesce(F.col("repo"), F.lit(NULL_REPO_SENTINEL))
-    if bucket is None:
-        bucket = F.pmod(F.crc32(repo_nn.cast("binary")), F.lit(n_buckets)).cast("int")
-    else:
-        bucket = bucket.cast("int")
+    bucket = repo_bucket_col(n_buckets) if bucket is None else bucket.cast("int")
     lang_code = (
         F.array_position(F.array(*[F.lit(l) for l in LANG_VOCAB]), lang_norm).cast("int")
         - F.lit(1)
@@ -141,7 +152,7 @@ def prepared_scan(
 def partial_histograms(
     corpus: DataFrame, config: ValidationConfig, bucket: F.Column | None = None
 ) -> DataFrame:
-    """Map-side partial histograms: one output row per (key, batch).
+    """Map-side partial histograms: one output row per (key, task).
 
     Per-row work (bucket, lang-norm, group key, fingerprint, length,
     UTF-8 bytes) runs JVM-side in prepared_scan; the Python stage is a
@@ -160,21 +171,18 @@ def partial_histograms(
     n_langs = len(LANG_VOCAB)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # per-TASK accumulation (guide §2.3, aggregate before the
-        # shuffle): fold every batch's per-key partials into one
-        # O(present keys) accumulator and emit ONCE per task — the
-        # per-batch emit shipped (batches x keys) rows into the merge
-        # shuffle (479k rows / ~1.2 GB at the 6M-file bench corpus vs
-        # ~20k rows after this change). The fold is the same monoid the
-        # merge stage applies (sum/xor), so merged outputs are
-        # bit-identical for any batch split.
-        acc = _HistAccumulator(n_langs)
+        # per-TASK fold (guide §2.3, aggregate before the shuffle):
+        # every batch's partials fold into one O(present keys) state,
+        # emitted ONCE per task — the per-batch emit shipped (batches x
+        # keys) rows into the merge shuffle (479k rows / ~1.2 GB at the
+        # 6M-file bench corpus vs ~20k rows with the fold)
+        state = None
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            acc.add(*_hist_partial_arrays(batch, n_langs))
-        if acc:
-            yield acc.to_batch()
+            if batch.num_rows:
+                part = _hist_partial_arrays(batch, n_langs)
+                state = part if state is None else _fold_rows(state, part)
+        if state is not None:
+            yield _partial_batch(state, n_langs)
 
     prepped = prepared_scan(corpus, config.n_repo_buckets, bucket=bucket).select(
         "_key", "_fp", "_len", "_bytes"
@@ -182,51 +190,54 @@ def partial_histograms(
     return prepped.mapInArrow(gen, PARTIAL_SCHEMA)
 
 
-class _HistAccumulator:
-    """Per-task fold of per-batch histogram partials, keyed by the
-    composite int key. Sum/xor only — the identical monoid the merge
-    stage applies, so any (batch, task) split yields bit-identical
-    merged histograms."""
+def _fold(keys, n_files, nulls, total, byte_hist, len_hist, fingerprint) -> tuple:
+    """The histogram monoid, applied once: partial rows sharing a key
+    fold to one row — counts and histograms sum, fingerprints XOR.
+    Every place partials meet runs through here (a task's batches, a
+    bucket's partial rows, a stream bucket's micro-batches), so no
+    split of the input changes the result. Returns the same seven
+    columns with ``keys`` unique and ascending."""
+    order = np.argsort(keys, kind="stable")
+    ukeys, starts = np.unique(keys[order], return_index=True)
 
-    def __init__(self, n_langs: int):
-        self.n_langs = n_langs
-        self.state: dict[int, list] = {}
+    def add(a):
+        return np.add.reduceat(a[order], starts, axis=0)
 
-    def __bool__(self) -> bool:
-        return bool(self.state)
+    return (
+        ukeys, add(n_files), add(nulls), add(total), add(byte_hist), add(len_hist),
+        np.bitwise_xor.reduceat(fingerprint[order], starts),
+    )
 
-    def add(self, ukeys, n_files, nulls, total, bh, lh, fpx) -> None:
-        for i, k in enumerate(ukeys.tolist()):
-            st = self.state.get(k)
-            if st is None:
-                self.state[k] = [
-                    int(n_files[i]), int(nulls[i]), int(total[i]),
-                    int(fpx[i]), bh[i].copy(), lh[i].copy(),
-                ]
-            else:
-                st[0] += int(n_files[i])
-                st[1] += int(nulls[i])
-                st[2] += int(total[i])
-                st[3] ^= int(fpx[i])
-                st[4] += bh[i]
-                st[5] += lh[i]
 
-    def to_batch(self) -> pa.RecordBatch:
-        keys = sorted(self.state)
-        rows = [self.state[k] for k in keys]
-        karr = np.asarray(keys, dtype=np.int64)
-        return pa.record_batch(
-            {
-                "repo_bucket": pa.array((karr // self.n_langs).astype(np.int32), pa.int32()),
-                "lang": pa.array([LANG_VOCAB[int(k) % self.n_langs] for k in keys], pa.string()),
-                "n_files": pa.array([r[0] for r in rows], pa.int64()),
-                "n_null_content": pa.array([r[1] for r in rows], pa.int64()),
-                "total_bytes": pa.array([r[2] for r in rows], pa.int64()),
-                "byte_hist": pa.array([r[4] for r in rows], pa.list_(pa.int64())),
-                "len_hist": pa.array([r[5] for r in rows], pa.list_(pa.int64())),
-                "fingerprint": pa.array([r[3] for r in rows], pa.int64()),
-            }
-        )
+def _fold_rows(*parts: tuple) -> tuple:
+    """``_fold`` over the row-wise concatenation of partial tuples."""
+    return _fold(*(np.concatenate(cols) for cols in zip(*parts)))
+
+
+def _list_array(m: np.ndarray) -> pa.ListArray:
+    """(rows, bins) matrix -> list column over its flat buffer."""
+    offsets = np.arange(0, m.size + 1, m.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, pa.array(m.ravel()))
+
+
+def _list_matrix(col: pa.ChunkedArray, bins: int) -> np.ndarray:
+    """list<int64> column of fixed-length vectors -> (rows, bins)."""
+    return col.combine_chunks().flatten().to_numpy().reshape(-1, bins)
+
+
+def _partial_batch(state: tuple, n_langs: int) -> pa.RecordBatch:
+    """Folded partial rows keyed by bucket * n_langs + lang code ->
+    a PARTIAL_SCHEMA record batch."""
+    keys, n_files, nulls, total, bh, lh, fp = state
+    return pa.record_batch(
+        [
+            pa.array((keys // n_langs).astype(np.int32)),
+            pa.array(np.asarray(LANG_VOCAB, dtype=object)[keys % n_langs], pa.string()),
+            pa.array(n_files), pa.array(nulls), pa.array(total),
+            _list_array(bh), _list_array(lh), pa.array(fp),
+        ],
+        schema=_PARTIAL_PA_SCHEMA,
+    )
 
 
 def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
@@ -236,8 +247,9 @@ def _hist_partial_arrays(batch: pa.RecordBatch, n_langs: int) -> tuple:
     Python bytes objects), groups via np.unique over the JVM int key,
     folds fingerprints with one segmented XOR, scatter-adds length
     bins, and bincounts content bytes. Shared verbatim by
-    partial_histograms and fused_scan_partials so the two paths can
-    never drift. Returns (ukeys, n_files, nulls, total, bh, lh, fpx)."""
+    partial_histograms, fused_scan_partials and the stream monitor so
+    the paths can never drift. Returns (ukeys, n_files, nulls, total,
+    bh, lh, fpx): one partial row per key, ready for ``_fold``."""
     n = batch.num_rows
     key = batch.column(0).to_numpy()
     fp = batch.column(1).to_numpy().view(np.uint64)
@@ -338,54 +350,36 @@ def fused_scan_partials(corpus: DataFrame, config: ValidationConfig) -> DataFram
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # kind='r' rows stream out per batch; kind='h' partials fold
-        # into one per-task accumulator (guide §2.3 — same monoid as
-        # the merge stage, bit-identical downstream; see
-        # partial_histograms) and emit once at task end.
-        acc = _HistAccumulator(n_langs)
+        # into one per-task state (as in partial_histograms) emitted
+        # once at task end
+        state = None
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             # -- kind='r': pass the narrow row columns through
             # (content bytes stay behind in the dropped _bytes buffer)
-            row_cols = {"kind": pa.array(["r"] * n, pa.string())}
-            for f in PARTIAL_SCHEMA.fields:
-                row_cols[f.name] = pa.nulls(n, _PA_TYPES[f.name])
-            for i, c in enumerate(_ROW_COLS):
-                row_cols[c] = batch.column(4 + i)
-            yield pa.record_batch(row_cols, schema=_FUSED_PA_SCHEMA)
+            yield _fused_batch("r", n, dict(zip(_ROW_COLS, batch.columns[4:])))
+            part = _hist_partial_arrays(batch, n_langs)
+            state = part if state is None else _fold_rows(state, part)
 
-            acc.add(*_hist_partial_arrays(batch, n_langs))
-
-        if acc:
-            hb = acc.to_batch()
-            G = hb.num_rows
-            hist_cols = {"kind": pa.array(["h"] * G, pa.string())}
-            for f in PARTIAL_SCHEMA.fields:
-                hist_cols[f.name] = hb.column(f.name)
-            for c in _ROW_COLS:
-                hist_cols[c] = pa.nulls(G, pa.string())
-            yield pa.record_batch(hist_cols, schema=_FUSED_PA_SCHEMA)
+        if state is not None:
+            hb = _partial_batch(state, n_langs)
+            yield _fused_batch("h", hb.num_rows, dict(zip(hb.schema.names, hb.columns)))
 
     return src.mapInArrow(gen, FUSED_SCHEMA)
 
 
-_PA_TYPES = {
-    "repo_bucket": pa.int32(),
-    "lang": pa.string(),
-    "n_files": pa.int64(),
-    "n_null_content": pa.int64(),
-    "total_bytes": pa.int64(),
-    "byte_hist": pa.list_(pa.int64()),
-    "len_hist": pa.list_(pa.int64()),
-    "fingerprint": pa.int64(),
-}
+_FUSED_PA_SCHEMA = to_arrow_schema(FUSED_SCHEMA)
 
-_FUSED_PA_SCHEMA = pa.schema(
-    [("kind", pa.string())]
-    + [(k, v) for k, v in _PA_TYPES.items()]
-    + [(c, pa.string()) for c in _ROW_COLS]
-)
+
+def _fused_batch(kind: str, n: int, cols: dict) -> pa.RecordBatch:
+    """``n`` fused rows of ``kind``: the given columns, nulls elsewhere."""
+    cols = {"kind": pa.array([kind] * n, pa.string()), **cols}
+    return pa.record_batch(
+        [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in _FUSED_PA_SCHEMA],
+        schema=_FUSED_PA_SCHEMA,
+    )
 
 
 def split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -396,28 +390,6 @@ def split_fused(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     rows = fused.filter(F.col("kind") == "r").select(*_ROW_COLS)
     return hist, rows
-
-
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """numpy merge of partial rows sharing one (repo_bucket, lang):
-    scalar sums, xor of fingerprints, elementwise vector sums."""
-    fp = 0
-    for f in pdf["fingerprint"]:
-        fp ^= int(f)
-    return pd.DataFrame(
-        [
-            {
-                "repo_bucket": int(pdf["repo_bucket"].iloc[0]),
-                "lang": pdf["lang"].iloc[0],
-                "n_files": int(pdf["n_files"].sum()),
-                "n_null_content": int(pdf["n_null_content"].sum()),
-                "total_bytes": int(pdf["total_bytes"].sum()),
-                "byte_hist": np.sum(np.stack(pdf["byte_hist"].to_numpy()), axis=0),
-                "len_hist": np.sum(np.stack(pdf["len_hist"].to_numpy()), axis=0),
-                "fingerprint": fp,
-            }
-        ]
-    )
 
 
 MERGED_LANG_SCHEMA = T.StructType(
@@ -431,22 +403,34 @@ def merge_histograms_with_lang(partials: DataFrame) -> DataFrame:
     lang-mix vector (LANG_VOCAB order) on every row of the bucket.
 
     ONE grouped-map shuffle on repo_bucket does both the per-(bucket,
-    lang) merge (vector sums are a numpy stack-sum; xor/sum are
-    associative, so any grouping of the partials gives identical
-    results) and the lang-mix vector — the operator-fusion rewrite the
-    reference applied by hand everywhere (SURVEY §4), applied to
-    shuffle stages: every stage saved is ~0.5-1 s of latency that would
-    otherwise be a fixed serial cost at any cluster size. Partials are
-    tiny (tasks x keys rows), so stage count, not data volume,
-    dominates the merge.
+    lang) merge (``_fold`` over the group's Arrow columns, whose
+    list<int64> vectors flatten into (rows, bins) matrices) and the
+    lang-mix vector, derived from the folded counts. That is the
+    operator-fusion rewrite the reference applied by hand everywhere
+    (SURVEY §4), applied to shuffle stages: every stage saved is
+    ~0.5-1 s of latency that would otherwise be a fixed serial cost at
+    any cluster size. Partials are tiny (tasks x keys rows), so stage
+    count, not data volume, dominates the merge.
     """
+    n_langs = len(LANG_VOCAB)
+    vocab = pa.array(LANG_VOCAB)
 
-    def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pd.concat([_merge_group(g) for _, g in pdf.groupby("lang", sort=False)])
-        counts = dict(zip(rows["lang"], rows["n_files"]))
-        raw = np.array([float(counts.get(l, 0)) for l in LANG_VOCAB])
+    def merge_bucket(tbl: pa.Table) -> pa.Table:
+        # partial langs are prepared_scan-normalized: all in LANG_VOCAB
+        code = pc.index_in(tbl.column("lang"), value_set=vocab).to_numpy()
+        state = _fold(
+            tbl.column("repo_bucket").to_numpy().astype(np.int64) * n_langs + code,
+            *(tbl.column(c).to_numpy() for c in ("n_files", "n_null_content", "total_bytes")),
+            _list_matrix(tbl.column("byte_hist"), BYTE_BINS),
+            _list_matrix(tbl.column("len_hist"), LEN_BINS),
+            tbl.column("fingerprint").to_numpy(),
+        )
+        keys, n_files = state[:2]
+        raw = np.zeros(n_langs)
+        raw[keys % n_langs] = n_files
         vec = raw / max(raw.sum(), 1.0)
-        rows["lang_hist"] = [vec] * len(rows)
-        return rows
+        return pa.Table.from_batches([_partial_batch(state, n_langs)]).append_column(
+            "lang_hist", _list_array(np.tile(vec, (len(keys), 1)))
+        )
 
-    return partials.groupBy("repo_bucket").applyInPandas(merge_bucket, MERGED_LANG_SCHEMA)
+    return partials.groupBy("repo_bucket").applyInArrow(merge_bucket, MERGED_LANG_SCHEMA)

@@ -1,15 +1,20 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same results contract:
+Entry points:
 
 - ``brute_force_topk``: exact cosine top-k. The query side is small
   and broadcast; the corpus side streams through one vectorized
   pandas UDF per partition computing a PARTIAL top-k (numpy matmul
   over the Arrow batch), then a tiny global top-k reduction. Shuffle
   volume is O(n_queries * k * partitions), never the corpus.
-- ``lsh_topk``: random-hyperplane LSH (deterministic seed) buckets
-  corpus and queries; only same-bucket pairs are scored. The scale
-  path when n_queries is large.
+- ``ivf_topk_indexed``: approximate top-k against a centroid-
+  partitioned index (``write_ivf_index``); each query scores only its
+  ``nprobe`` nearest cells, and the probe is a partition filter, so
+  unprobed cells are never read. ``ivf_topk`` is the index-free
+  variant that quantizes the corpus on every call.
+- ``near_duplicates_cosine``: near-duplicate PAIRS above a cosine
+  threshold — random-hyperplane LSH (``lsh_bands``) with a
+  bucket-local exact verify (``pipeline.lsh``).
 
 Cosine in the JVM would be F.aggregate(F.zip_with(...)) per pair —
 fine for single pairs, but top-k against every corpus row is a

@@ -14,11 +14,17 @@ histogram aggregation built from built-ins only.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from sparkval.config import ValidationConfig
+from sparkval.config import BYTE_BINS, LANG_VOCAB, LEN_BINS, ValidationConfig
 from sparkval.drift import drift_verdicts, partition_histograms
+from sparkval.histograms import (
+    _fold, _fold_rows, _hist_partial_arrays, _list_matrix, _partial_batch,
+)
 
 
 def stream_validate(
@@ -54,31 +60,36 @@ def stream_validate(
     return writer.start()
 
 
-def _baseline_by_bucket(baseline: DataFrame) -> dict[int, dict]:
-    """Collapse the per-(bucket, lang) baseline table to per-bucket
-    channel vectors for the stateful monitor. Driver-side collect is
-    safe: the table is O(buckets x langs) rows at any corpus size."""
-    import numpy as np
+def _bucket_channels(hists: pa.Table) -> dict[int, dict]:
+    """Per-bucket drift channels of a per-(repo_bucket, lang) hist
+    table: byte and length histograms fold over the bucket, and the
+    lang channel holds each lang's file count."""
+    buckets = hists.column("repo_bucket").to_numpy()
+    n_files = hists.column("n_files").to_numpy()
+    z = np.zeros(len(buckets), dtype=np.int64)
+    ub, _, _, _, bh, lh, _ = _fold(
+        buckets, n_files, z, z, _list_matrix(hists.column("byte_hist"), BYTE_BINS),
+        _list_matrix(hists.column("len_hist"), LEN_BINS), z,
+    )
+    lang = np.zeros((len(ub), len(LANG_VOCAB)), dtype=np.int64)
+    code = pc.index_in(hists.column("lang"), value_set=pa.array(LANG_VOCAB)).to_numpy()
+    lang[np.searchsorted(ub, buckets), code] = n_files
+    return {int(b): {"byte": bh[i], "len": lh[i], "lang": lang[i]} for i, b in enumerate(ub)}
 
-    from sparkval.config import LANG_VOCAB
 
-    out: dict[int, dict] = {}
-    for r in baseline.select(
-        "repo_bucket", "lang", "n_files", "byte_hist", "len_hist"
-    ).collect():
-        b = out.setdefault(
-            int(r["repo_bucket"]),
-            {
-                "byte": np.zeros(256, dtype=np.float64),
-                "len": np.zeros(64, dtype=np.float64),
-                "lang": np.zeros(len(LANG_VOCAB), dtype=np.float64),
-            },
-        )
-        b["byte"] += np.asarray(r["byte_hist"], dtype=np.float64)
-        b["len"] += np.asarray(r["len_hist"], dtype=np.float64)
-        if r["lang"] in LANG_VOCAB:
-            b["lang"][LANG_VOCAB.index(r["lang"])] += float(r["n_files"])
-    return out
+def _state_rows(bucket: int, state: tuple) -> tuple:
+    """A bucket's stored stream state (n_files, byte_hist, len_hist,
+    lang_hist) as lang-keyed partial rows for ``_fold``: lang counts in
+    n_files, the bucket's byte/len totals on the first row (only their
+    bucket-wide fold is ever read)."""
+    n_langs = len(LANG_VOCAB)
+    _, bh, lh, gh = state
+    z = np.zeros(n_langs, dtype=np.int64)
+    byte_hist = np.zeros((n_langs, BYTE_BINS), dtype=np.int64)
+    len_hist = np.zeros((n_langs, LEN_BINS), dtype=np.int64)
+    byte_hist[0], len_hist[0] = bh, lh
+    keys = bucket * n_langs + np.arange(n_langs)
+    return keys, np.asarray(gh, dtype=np.int64), z, z, byte_hist, len_hist, z
 
 
 def stream_cumulative_drift(
@@ -92,23 +103,29 @@ def stream_cumulative_drift(
     Unlike ``stream_validate`` (which scores each micro-batch in
     isolation), this keeps the RUNNING histograms of everything seen so
     far as typed group state — the streaming twin of the strip walker's
-    running StripReducer (strip.rs:126-209), except the state is the
-    mergeable histogram monoid, so the emitted score after the final
-    batch is bit-comparable to a batch run over the full input.
+    running StripReducer (strip.rs:126-209). Each micro-batch goes
+    through the batch kernel (``histograms._hist_partial_arrays``) and
+    folds into the state with the one histogram fold
+    (``histograms._fold``), so the emitted score after the final batch
+    is bit-comparable to a batch run over the full input.
 
-    State per repo_bucket: (n_files, byte_hist[256], len_hist[64],
-    lang_counts[|vocab|]) — a few KB regardless of stream volume.
+    State per repo_bucket: (n_files, byte_hist[BYTE_BINS],
+    len_hist[LEN_BINS], lang_counts[|vocab|]) — a few KB regardless of
+    stream volume. The per-bucket baseline is a fold of the collected
+    baseline table, O(buckets x langs) rows at any corpus size.
     """
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from sparkval import kernels
-    from sparkval.config import LANG_VOCAB
+    from sparkval.drift import VERDICT_FAIL, VERDICT_PASS, VERDICT_WARN
     from sparkval.histograms import prepared_scan
 
-    base_by_bucket = _baseline_by_bucket(baseline)
+    n_langs = len(LANG_VOCAB)
+    base_by_bucket = _bucket_channels(
+        baseline.select("repo_bucket", "lang", "n_files", "byte_hist", "len_hist").toArrow()
+    )
     good, bad = config.good_score, config.bad_score
     hf_asym, single_res = config.hf_asymmetry, config.single_resolution
     xmul = config.xmul
@@ -131,51 +148,42 @@ def stream_cumulative_drift(
             T.StructField("lang_hist", T.ArrayType(T.LongType()), False),
         ]
     )
+    batch_schema = pa.schema(
+        [("_key", pa.int32()), ("_fp", pa.int64()), ("_len", pa.int32()),
+         ("_bytes", pa.binary()), ("_b", pa.int32())]
+    )
+    empty = {"byte": np.zeros(BYTE_BINS), "len": np.zeros(LEN_BINS), "lang": np.zeros(n_langs)}
 
     def update(key, pdfs, state):
         bucket = int(key[0])
+        parts = [
+            _hist_partial_arrays(
+                pa.RecordBatch.from_pandas(pdf, schema=batch_schema, preserve_index=False),
+                n_langs,
+            )
+            for pdf in pdfs
+        ]
         if state.exists:
-            n, bh, lh, gh = state.get
-            bh = np.asarray(bh, dtype=np.int64).copy()
-            lh = np.asarray(lh, dtype=np.int64).copy()
-            gh = np.asarray(gh, dtype=np.int64).copy()
-        else:
-            n = 0
-            bh = np.zeros(256, dtype=np.int64)
-            lh = np.zeros(64, dtype=np.int64)
-            gh = np.zeros(len(LANG_VOCAB), dtype=np.int64)
-        for pdf in pdfs:
-            present = pdf["_bytes"].dropna()
-            if len(present):
-                # per-doc bincount over buffer views — no join-copy of
-                # the batch's content (same rule as partial_histograms)
-                for doc in present.tolist():
-                    bh += np.bincount(np.frombuffer(doc, dtype=np.uint8), minlength=256)
-                lens = pdf["_len"].dropna().to_numpy(dtype=np.int64)
-                np.add.at(lh, np.clip(np.log2(lens + 1).astype(np.int64), 0, 63), 1)
-            for lg, cnt in pdf["_l"].value_counts().items():
-                gh[LANG_VOCAB.index(lg)] += int(cnt)
-            n += len(pdf)
-        state.update((int(n), bh.tolist(), lh.tolist(), gh.tolist()))
-        base = base_by_bucket.get(
-            bucket,
-            {k: np.zeros(s, dtype=np.float64)
-             for k, s in (("byte", 256), ("len", 64), ("lang", len(LANG_VOCAB)))},
-        )
-        snap = {"byte": bh.astype(np.float64), "len": lh.astype(np.float64),
-                "lang": gh.astype(np.float64) / max(gh.sum(), 1)}
+            parts.append(_state_rows(bucket, state.get))
+        snap = _bucket_channels(pa.table(_partial_batch(_fold_rows(*parts), n_langs)))[bucket]
+        gh = snap["lang"]
+        n = int(gh.sum())
+        state.update((n, snap["byte"].tolist(), snap["len"].tolist(), gh.tolist()))
         score, pnorm3, _ = kernels.drift_score(
-            base, snap, hf_asymmetry=hf_asym, xmul=xmul,
+            base_by_bucket.get(bucket, empty), {**snap, "lang": gh / max(n, 1)},
+            hf_asymmetry=hf_asym, xmul=xmul,
             single_resolution=single_res, intensity_factor=intensity,
         )
-        verdict = "PASS" if score < good else ("WARN" if score < bad else "FAIL")
+        verdict = (
+            VERDICT_PASS if score < good else (VERDICT_WARN if score < bad else VERDICT_FAIL)
+        )
         yield pd.DataFrame(
-            [{"repo_bucket": bucket, "files_seen": int(n), "score": float(score),
+            [{"repo_bucket": bucket, "files_seen": n, "score": float(score),
               "pnorm_3": float(pnorm3), "verdict": verdict}]
         )
 
     prepped = prepared_scan(stream, config.n_repo_buckets).select(
-        "_b", "_l", "_len", "_bytes"
+        "_key", "_fp", "_len", "_bytes", "_b"
     )
     return prepped.groupBy("_b").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout

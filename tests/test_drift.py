@@ -13,11 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkval import fixtures as fx, kernels as K
-from sparkval.baseline import _bucket_col, build_baseline
+from sparkval.baseline import build_baseline
 from sparkval.config import LANG_VOCAB, ValidationConfig
 from sparkval.drift import partition_histograms
 from sparkval.engine import ValidationEngine
-from sparkval.histograms import repo_bucket_py
+from sparkval.histograms import repo_bucket_col, repo_bucket_py
 
 CFG = ValidationConfig()
 
@@ -34,10 +34,11 @@ def baseline_df(spark):
 
 
 def test_bucket_hash_consistency(spark):
-    """JVM crc32 bucket must equal the pandas-side zlib.crc32 bucket."""
+    """The JVM crc32 bucket (the one expression the scan and the
+    drill-down filter use) must equal the Python zlib.crc32 bucket."""
     pdf = fx.make_corpus("random_mid", 200)
     df = spark.createDataFrame(pdf[["repo"]].drop_duplicates())
-    got = df.select("repo", _bucket_col(16).alias("b")).collect()
+    got = df.select("repo", repo_bucket_col(16).alias("b")).collect()
     for r in got:
         assert r["b"] == repo_bucket_py(r["repo"], 16), r["repo"]
 

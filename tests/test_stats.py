@@ -64,17 +64,72 @@ def test_corpus_histograms_match_numpy_oracle(spark, corpus_pdf):
         assert np.array_equal(np.array(row["len_hist"]), lh)
 
 
+def test_fold_matches_per_key_oracle():
+    """histograms._fold against a per-key Python loop over unsorted
+    rows: counts and vectors sum, signed int64 fingerprints XOR."""
+    from sparkval.histograms import _fold
+
+    rng = np.random.default_rng(7)
+    m = 500
+    keys = rng.integers(0, 40, m)
+    cols = (
+        rng.integers(0, 100, m), rng.integers(0, 5, m), rng.integers(0, 10**6, m),
+        rng.integers(0, 1000, (m, BYTE_BINS)), rng.integers(0, 50, (m, LEN_BINS)),
+        rng.integers(-(2**63), 2**63 - 1, m, dtype=np.int64),
+    )
+    got = _fold(keys, *cols)
+    assert np.array_equal(got[0], np.unique(keys))
+    for i, k in enumerate(got[0]):
+        sel = keys == k
+        for j in range(5):
+            assert np.array_equal(got[j + 1][i], cols[j][sel].sum(axis=0)), (k, j)
+        fp = 0
+        for f in cols[5][sel]:
+            fp ^= int(f)
+        assert int(got[6][i]) == fp, k
+
+
+def _merged_hists(df) -> pd.DataFrame:
+    return (
+        partition_histograms(df, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
+    )
+
+
+def _assert_same_hists(a: pd.DataFrame, b: pd.DataFrame) -> None:
+    """Every merged column equal, row for row: the summed counts and
+    vectors, the XOR'd fingerprint and the derived lang mix."""
+    assert list(a.index) == list(b.index)
+    assert sorted(a.columns) == sorted(b.columns) == sorted(
+        ["n_files", "n_null_content", "total_bytes", "byte_hist", "len_hist",
+         "fingerprint", "lang_hist"]
+    )
+    for c in a.columns:
+        for k in a.index:
+            assert np.array_equal(np.asarray(a.loc[k, c]), np.asarray(b.loc[k, c])), (c, k)
+
+
 def test_histograms_partition_parity(spark, corpus_pdf):
     """repartition(1) == repartition(8): the strip_parity analog
-    (strip.rs:38-45) — counts must be exactly equal."""
-    df1 = spark.createDataFrame(corpus_pdf).repartition(1)
-    df8 = spark.createDataFrame(corpus_pdf).repartition(8)
-    a = partition_histograms(df1, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
-    b = partition_histograms(df8, CFG).toPandas().set_index(["repo_bucket", "lang"]).sort_index()
-    assert list(a.index) == list(b.index)
-    for k in a.index:
-        assert np.array_equal(np.array(a.loc[k, "byte_hist"]), np.array(b.loc[k, "byte_hist"]))
-        assert np.array_equal(np.array(a.loc[k, "len_hist"]), np.array(b.loc[k, "len_hist"]))
+    (strip.rs:38-45) — every merged column must be exactly equal."""
+    _assert_same_hists(
+        _merged_hists(spark.createDataFrame(corpus_pdf).repartition(1)),
+        _merged_hists(spark.createDataFrame(corpus_pdf).repartition(8)),
+    )
+
+
+def test_histograms_parity_across_many_batches(spark, corpus_pdf):
+    """With 50-record Arrow batches each task folds several batches
+    into its state (200 rows per task here); the merged table must
+    equal the one-partition, one-batch build column for column."""
+    want = _merged_hists(spark.createDataFrame(corpus_pdf).repartition(1))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        got = _merged_hists(spark.createDataFrame(corpus_pdf).repartition(4))
+    finally:
+        spark.conf.set(key, prev)
+    _assert_same_hists(want, got)
 
 
 def test_lang_hist_normalized(spark, corpus_pdf):

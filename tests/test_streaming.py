@@ -92,22 +92,24 @@ def test_windowed_lang_counts_matches_batch_groupby(spark, tmp_path):
 
 def test_stream_cumulative_drift_matches_numpy(spark, tmp_path):
     """The stateful monitor's running score after the last micro-batch
-    equals a straight-line numpy drift over everything streamed."""
+    equals a straight-line numpy drift over everything streamed. One
+    file per micro-batch, so each bucket's state folds across
+    batches."""
     from sparkval import kernels
     from sparkval.config import LANG_VOCAB
     from sparkval.histograms import repo_bucket_py
-    from sparkval.streaming import _baseline_by_bucket, stream_cumulative_drift
+    from sparkval.streaming import stream_cumulative_drift
 
     base_pdf = fx.make_corpus("random_mid", 500)
     snap_pdf = fx.distort(base_pdf, "quantize_3")
     src = str(tmp_path / "cum_src")
-    spark.createDataFrame(snap_pdf).write.parquet(src)
+    spark.createDataFrame(snap_pdf).repartition(3).write.parquet(src)
 
     eng = ValidationEngine(CFG)
     base = eng.build_baseline(spark.createDataFrame(base_pdf))
     base.persist().count()
 
-    stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(src)
+    stream = spark.readStream.schema(CORPUS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
     q = (
         stream_cumulative_drift(stream, base, CFG)
         .writeStream.outputMode("update")
@@ -118,6 +120,7 @@ def test_stream_cumulative_drift_matches_numpy(spark, tmp_path):
         .start()
     )
     q.awaitTermination(300)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) >= 2
     got = (
         spark.table("cum_drift")
         .toPandas()
@@ -126,8 +129,18 @@ def test_stream_cumulative_drift_matches_numpy(spark, tmp_path):
         .last()  # last emitted row per bucket = full-stream state
     )
 
-    # numpy oracle: full-snapshot hists per bucket
-    base_by_bucket = _baseline_by_bucket(base)
+    # numpy oracle: per-bucket baseline channels from the collected
+    # baseline table, full-snapshot hists per bucket
+    base_by_bucket = {}
+    for b, grp in base.toPandas().groupby("repo_bucket"):
+        lang = np.zeros(len(LANG_VOCAB))
+        for lg, n in zip(grp["lang"], grp["n_files"]):
+            lang[LANG_VOCAB.index(lg)] += n
+        base_by_bucket[b] = {
+            "byte": np.sum(np.stack(grp["byte_hist"]), axis=0).astype(np.float64),
+            "len": np.sum(np.stack(grp["len_hist"]), axis=0).astype(np.float64),
+            "lang": lang,
+        }
     snap_pdf = snap_pdf.assign(
         _b=snap_pdf["repo"].map(lambda r: repo_bucket_py(r, CFG.n_repo_buckets))
     )
