@@ -408,13 +408,6 @@ def corpus_diff(
     return j.select(F.col(id_col), status.alias("status"))
 
 
-def corpus_diff_report(diff: DataFrame) -> DataFrame:
-    """One-row-per-status accounting over a ``corpus_diff`` result —
-    the O(1)-output summary a version bump gets logged with. Single
-    narrow groupBy on a 4-value key (map-side partials collapse it)."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
 # --------------------------------------------------------------------------
 # declarative rule suites + functional-dependency mining — schema-level
 # checks beyond the fixed uniqueness/referential/null trio (SURVEY §2.4):

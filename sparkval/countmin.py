@@ -61,7 +61,7 @@ def update(
 ) -> np.ndarray:
     """Add ``counts[i]`` occurrences of ``terms[i]`` into the sketch
     (in place). Hashing is per DISTINCT term — callers pre-aggregate
-    their batch (pandas value_counts), so the python-level md5 cost
+    their batch (Arrow value_counts), so the python-level md5 cost
     is O(batch vocabulary), not O(tokens)."""
     for term, n in zip(terms, counts):
         h0 = term_hash(term)

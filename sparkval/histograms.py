@@ -82,7 +82,7 @@ NULL_REPO_SENTINEL = "\x00NULL_REPO"
 def repo_bucket_py(repo: str | None, n_buckets: int) -> int:
     """Deterministic repo->bucket hash, identical in every context.
 
-    crc32 rather than Spark's hash() so pandas-side and JVM-side
+    crc32 rather than Spark's hash() so Python-side and JVM-side
     bucket assignments can never diverge. NULL repos map through the
     same sentinel prepared_scan uses.
     """
@@ -108,7 +108,7 @@ def prepared_scan(
 ) -> DataFrame:
     """JVM-side per-row preparation for the histogram scan: bucket,
     normalized lang, 64-bit row fingerprint, char length, and UTF-8
-    bytes — all codegen'd expressions, zero per-row Python. The pandas
+    bytes — all codegen'd expressions, zero per-row Python. The Arrow
     stage downstream only groups and bin-counts.
 
     encode() matters doubly: the Arrow transfer ships raw bytes and the
@@ -161,10 +161,8 @@ def partial_histograms(
 
     - the binary column's data buffer is ONE contiguous allocation for
       the whole batch — per-row views of it feed bincount with ZERO
-      copies and zero Python bytes objects (the old mapInPandas path
-      materialized every content as a bytes object, then paid another
-      full copy joining them into a blob: 2x the memory traffic of
-      the data itself, on the stage that is memory-bandwidth-bound);
+      copies and zero Python bytes objects, on the stage that is
+      memory-bandwidth-bound;
     - grouping is np.unique over the JVM-computed int key (no string
       hashing), fingerprints fold with one segmented XOR, and length
       histograms are one scatter-add per batch.

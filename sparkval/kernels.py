@@ -1,7 +1,7 @@
 """Pure-numpy drift kernels — butteraugli's pipeline recast to 1-D.
 
-This module is BOTH the production kernel (called from the grouped-map
-pandas UDF in sparkval.drift) and the golden oracle (tests pin ITS
+This module is BOTH the production kernel (called from the mapInArrow
+scoring stage in sparkval.drift) and the golden oracle (tests pin ITS
 numbers, as the reference pinned C++ butteraugli_main's — see
 reference tests/reference_parity.rs discipline).
 

@@ -20,7 +20,7 @@ Estimators (U = 2^32, h_(k) = the kth smallest hash):
 - distinct count: exact |sketch| while |sketch| < k, else
   (k-1) * U / h_(k)
 - Jaccard(A, B): X = k smallest of (A ∪ B) sketch union;
-  |{x in X : x in A and x in B}| / |X|
+  |{x in X : x in A and x in B}| / |X| (``stats.kmv_jaccard_expr``)
 """
 
 from __future__ import annotations
@@ -57,13 +57,3 @@ def distinct_estimate(sketch: np.ndarray, k: int = K) -> float:
         return float(n)
     return (k - 1) * float(U) / float(sketch[k - 1])
 
-
-def jaccard_estimate(a: np.ndarray, b: np.ndarray, k: int = K) -> float:
-    """|X ∩ A ∩ B| / |X| with X = k smallest of the hash union."""
-    a = np.asarray(a, dtype=np.int64)
-    b = np.asarray(b, dtype=np.int64)
-    x = np.unique(np.concatenate([a, b]))[:k]
-    if len(x) == 0:
-        return 0.0
-    both = np.intersect1d(np.intersect1d(x, a), b)
-    return float(len(both)) / float(len(x))

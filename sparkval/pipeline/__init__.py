@@ -5,5 +5,5 @@ Large-scale corpus curation ops the validation engine's users need at
 embedding-cosine), approximate similarity search, text analysis
 (language-ID, quality scoring, token counting, fingerprinting), and
 multimodal binary-column plumbing. All built-in DataFrame expressions
-plus vectorized pandas UDFs — no per-row Python.
+plus vectorized Arrow UDFs — no per-row Python.
 """

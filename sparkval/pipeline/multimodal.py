@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video travel as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as
-mapInPandas stages over Arrow batches. REAL pure-numpy decoders cover
+struct; decode and feature extraction run as one mapInArrow stage
+over Arrow batches. REAL pure-numpy decoders cover
 P6 PPM, farbfeld, 24/32bpp BMP, 8-bit RGB(A) non-interlaced PNG
 (stdlib zlib) and PCM16 WAV; formats needing external libs (jpeg,
 webp, mp4, compressed audio) stay STUBBED: ``decode_stub`` raises
@@ -25,10 +25,11 @@ import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -444,41 +445,28 @@ def extract_features(
     Input must contain (media_id, kind, payload); everything else is
     pruned before the Arrow transfer on purpose.
     """
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                p = bytes(payload) if payload is not None else b""
-                out.append(
-                    {
-                        "media_id": mid,
-                        "payload_sha256": hashlib.sha256(p).hexdigest(),
-                        "payload_bytes": len(p),
-                        "features": decode_stub(p, kind, deterministic_fake),
-                    }
-                )
-            yield pd.DataFrame(out)
+    schema = to_arrow_schema(_FEATURE_SCHEMA)
 
-    return media.select("media_id", "kind", "payload").mapInPandas(gen, _FEATURE_SCHEMA)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # a NULL payload hashes and sizes as b""
+            payloads = [p or b"" for p in batch.column("payload").to_pylist()]
+            kinds = batch.column("kind").to_pylist()
+            yield pa.record_batch(
+                [
+                    batch.column("media_id"),
+                    pa.array([hashlib.sha256(p).hexdigest() for p in payloads], pa.string()),
+                    pa.array([len(p) for p in payloads], pa.int64()),
+                    pa.array(
+                        [decode_stub(p, k, deterministic_fake) for p, k in zip(payloads, kinds)],
+                        schema.field("features").type,
+                    ),
+                ],
+                schema=schema,
+            )
 
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: one row per (media_id, frame_ts).
-    Pure built-ins — sequence() explodes the sampling timeline from
-    metadata without touching payloads (the decode happens later,
-    payload-joined, in extract_features)."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
+    return media.select(F.col("media_id").cast("long"), "kind", "payload").mapInArrow(
+        gen, _FEATURE_SCHEMA
     )
 
 

@@ -48,14 +48,6 @@ def _es_priority(id_col: str, weight_col: str):
     return -F.log(u) / F.col(weight_col).cast("double")
 
 
-def deterministic_sample(df: DataFrame, permille: int, id_col: str = "doc_id") -> DataFrame:
-    """Keep rows whose hash bucket < ``permille`` (0..1000): a
-    reproducible ~permille/1000 sample, nested across rates."""
-    if not 0 <= permille <= _BUCKETS:
-        raise ValueError(f"permille out of range: {permille}")
-    return df.filter(_hash_bucket(id_col) < permille)
-
-
 def stratified_sample(
     df: DataFrame,
     strata_col: str,

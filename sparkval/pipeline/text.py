@@ -6,7 +6,9 @@ all; Catalyst pushes the column prune down to the parquet scan.
 
 from __future__ import annotations
 
-import pandas as pd
+import unicodedata
+
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -687,18 +689,20 @@ def with_normalized_text(df: DataFrame, col: str = "text") -> DataFrame:
     and minhash keys stable across crawls that differ only in
     composition form or whitespace.
 
-    NFC runs in a vectorized pandas string op (Arrow batches — the
-    only step Spark has no built-in for); the regex steps stay
-    JVM-side expressions on top of it. Map-only projection: no
+    NFC runs in an Arrow UDF over each batch's string array (the only
+    step Spark has no built-in for; pyarrow 16.1's ``utf8_normalize``
+    returns decomposed text for every form, so it is not used); the
+    regex steps stay JVM-side expressions on top of it. Map-only projection: no
     shuffle, scales linearly with partitions.
 
     Adds ``<col>_norm``, ``n_chars_norm`` and ``was_changed``.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _nfc(s: pd.Series) -> pd.Series:
-        return s.str.normalize("NFC")
+    @F.arrow_udf("string")
+    def _nfc(s: pa.Array) -> pa.Array:
+        return pa.array(
+            [None if v is None else unicodedata.normalize("NFC", v) for v in s.to_pylist()],
+            pa.string(),
+        )
 
     norm = F.regexp_replace(_nfc(F.col(col)), "[\\x00-\\x1f\\x7f]", " ")
     norm = F.trim(F.regexp_replace(norm, " {2,}", " "))

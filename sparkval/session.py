@@ -5,11 +5,12 @@ Scale posture (designed for a 1000-executor cluster, tested on local[N]):
   splitting replace hand-tuned partition counts at 100 TB.
 - Arrow on: Python-side kernels are vectorized batch UDFs (the engine
   has NO per-row Python — north-rule requirement), and Arrow batch
-  transfer is the boundary. Most kernels read and write
-  ``pa.RecordBatch`` directly (mapInArrow / applyInArrow); list
+  transfer is the boundary. Kernels read and write Arrow data
+  directly (mapInArrow / applyInArrow / arrow_udf); list
   columns cross it as (rows, width) numpy matrices through the one
-  ``_list_matrix`` / ``_list_array`` pair below. A few sketch and
-  text stages still go through pandas.
+  ``_list_matrix`` / ``_list_array`` pair below. No stage goes
+  through pandas except the streaming state call
+  (``applyInPandasWithState``, which has no Arrow form).
 - shuffle.partitions: a default for local runs; real deployments set it
   (or rely on AQE advisory sizes) per cluster.
 """
@@ -104,7 +105,10 @@ def _list_matrix(col: pa.Array | pa.ChunkedArray, width: int = -1) -> np.ndarray
     return col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), width)
 
 
-def _list_array(m: np.ndarray) -> pa.ListArray:
-    """(rows, width) matrix -> list column over its flat buffer."""
+def _list_array(m: np.ndarray, mask: np.ndarray | None = None) -> pa.ListArray:
+    """(rows, width) matrix -> list column over its flat buffer; rows
+    where ``mask`` is true are NULL."""
     offsets = np.arange(0, m.size + 1, m.shape[1], dtype=np.int32)
-    return pa.ListArray.from_arrays(offsets, pa.array(m.ravel()))
+    return pa.ListArray.from_arrays(
+        offsets, pa.array(m.ravel()), mask=None if mask is None else pa.array(mask)
+    )

@@ -9,7 +9,7 @@ hll_sketch_agg. The four Python sketches — t-digest lengths,
 count-min frequencies, Bloom membership, KMV set overlap — are each a
 ``_Monoid`` on ONE path, the StripReducer shape (strip.rs:126-209):
 ``_sketch_build`` collapses each Arrow batch to per-group partials
-(mapInPandas, numpy) and merges them per key (applyInPandas), and
+(mapInArrow, numpy) and merges them per key (applyInArrow), and
 ``_sketch_rollup`` merges built sketches up to coarser groups.
 """
 
@@ -20,15 +20,17 @@ from collections.abc import Callable, Iterator
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from sparkval import tdigest
 from sparkval.config import ValidationConfig
 from sparkval.histograms import prepared_scan
-from sparkval.session import _spread_small_input
+from sparkval.session import _list_matrix, _spread_small_input
 
 
 def column_stats(corpus: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
@@ -86,7 +88,7 @@ def per_repo_stats(corpus: DataFrame, salt_buckets: int = 8) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# mergeable sketch monoids: mapInPandas partials -> applyInPandas merge
+# mergeable sketch monoids: mapInArrow partials -> applyInArrow merge
 # --------------------------------------------------------------------------
 
 _LONGS = T.ArrayType(T.LongType())
@@ -97,15 +99,16 @@ class _Monoid(NamedTuple):
 
     ``fields``: the merged sketch columns, after the group keys.
     ``partial(values)``: one group's non-NULL values from one Arrow
-    batch (a pandas Series) -> {column: value} of its partial row.
-    ``merge(rows)``: one group's partial (or merged) rows as a pandas
-    frame -> {column: value} of the merged row. ``partial_fields``:
-    the partial row's columns when they differ from ``fields``.
-    ``null_keys``: whether the output declares group keys nullable."""
+    batch (a ``pa.Array``) -> {column: value} of its partial row.
+    ``merge(rows)``: one group's partial (or merged) rows as a
+    ``pa.Table`` -> {column: value} of the merged row.
+    ``partial_fields``: the partial row's columns when they differ
+    from ``fields``. ``null_keys``: whether the output declares group
+    keys nullable."""
 
     fields: list[T.StructField]
-    partial: Callable[[pd.Series], dict]
-    merge: Callable[[pd.DataFrame], dict]
+    partial: Callable[[pa.Array], dict]
+    merge: Callable[[pa.Table], dict]
     partial_fields: list[T.StructField] | None = None
     null_keys: bool = True
 
@@ -120,50 +123,71 @@ def _sketch_value(col) -> F.Column:
     return (F.col(col) if isinstance(col, str) else col).cast("string").alias("_v")
 
 
+def _sketch_table(keys: dict, rows: list[dict], schema: pa.Schema) -> pa.Table:
+    """Group-key columns plus one sketch row per group -> ``schema``
+    (a NaN quantile ships as NULL)."""
+    return pa.table(
+        [keys[f.name] if f.name in keys
+         else pa.array([r[f.name] for r in rows], f.type, from_pandas=True)
+         for f in schema],
+        schema=schema,
+    )
+
+
 def _sketch_build(part: DataFrame, group_cols: list[str], monoid: _Monoid) -> DataFrame:
     """Per-group sketches of ``part`` (``group_cols`` + the value
-    ``_v``): one mapInPandas pass collapses each Arrow batch to one
-    partial row per group, which ``_sketch_rollup`` merges per key —
-    the shuffle carries one partial sketch per (task, group), never a
-    row per value."""
+    ``_v``): one mapInArrow pass collapses each Arrow batch to one
+    partial row per group (NULL keys are groups of their own), which
+    ``_sketch_rollup`` merges per key — the shuffle carries one
+    partial sketch per (task, group), never a row per value."""
     if not group_cols:
         raise ValueError("group_cols must be non-empty; roll up to "
                          "global with the family's merge_*(sketches, [])")
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = []
-            for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                out.append(dict(zip(group_cols, key)) | monoid.partial(grp["_v"].dropna()))
-            yield pd.DataFrame(out)
-
     keys = [T.StructField(c, part.schema[c].dataType, monoid.null_keys) for c in group_cols]
     schema = T.StructType(keys + (monoid.partial_fields or monoid.fields))
-    return _sketch_rollup(part.mapInPandas(partials, schema), group_cols, monoid)
+    pa_schema = to_arrow_schema(schema)
+
+    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            groups = pa.Table.from_batches([batch]).group_by(
+                group_cols, use_threads=False
+            ).aggregate([("_v", "list")])
+            rows = [monoid.partial(v.values.drop_null()) for v in groups.column("_v_list")]
+            keys = {c: groups.column(c) for c in group_cols}
+            yield from _sketch_table(keys, rows, pa_schema).to_batches()
+
+    return _sketch_rollup(part.mapInArrow(partials, schema), group_cols, monoid)
 
 
 def _sketch_rollup(sketches: DataFrame, group_cols: list[str], monoid: _Monoid) -> DataFrame:
-    """Merge sketch rows per ``group_cols`` key (one applyInPandas), or
+    """Merge sketch rows per ``group_cols`` key (one applyInArrow), or
     to one global row with ``group_cols=[]`` via a constant ``_g``
     key that is dropped again."""
     tmp = sketches if group_cols else sketches.withColumn("_g", F.lit(0))
     keys = group_cols or ["_g"]
-
-    # no type hints: PySpark infers a grouped-map eval type only from
-    # COMPLETE hints and warns on partial ones, on every call
-    def merge(key, pdf):
-        return pd.DataFrame([dict(zip(keys, key)) | monoid.merge(pdf)])
-
     fields = [T.StructField(c, tmp.schema[c].dataType, monoid.null_keys) for c in keys]
-    out = tmp.groupBy(*keys).applyInPandas(merge, T.StructType(fields + monoid.fields))
+    schema = T.StructType(fields + monoid.fields)
+    pa_schema = to_arrow_schema(schema)
+
+    def merge(tbl: pa.Table) -> pa.Table:
+        first = {c: tbl.column(c).slice(0, 1) for c in keys}
+        return _sketch_table(first, [monoid.merge(tbl)], pa_schema)
+
+    out = tmp.groupBy(*keys).applyInArrow(merge, schema)
     return out if group_cols else out.drop("_g")
 
 
-def _tdigest_merge(rows: pd.DataFrame) -> dict:
-    d = tdigest.merge_digests([np.asarray(x) for x in rows["digest"]])
+def _flat(rows: pa.Table, col: str) -> np.ndarray:
+    """Every row's list ``col`` concatenated in row order."""
+    return pc.list_flatten(rows.column(col)).to_numpy()
+
+
+def _tdigest_merge(rows: pa.Table) -> dict:
+    # merging the concatenated centroids of every row equals merging
+    # the rows' digests one by one
+    d = tdigest.merge_digests([_flat(rows, "digest")])
     # an all-NULL group's empty digest has NaN quantiles, which Arrow
     # ships as NULL — F.percentile's answer over all-NULL input
     p50, p90, p99 = tdigest.quantile(d, np.array([0.5, 0.9, 0.99]))
@@ -173,7 +197,7 @@ def _tdigest_merge(rows: pd.DataFrame) -> dict:
 _TDIGEST = _Monoid(
     [T.StructField("len_tdigest", T.ArrayType(T.DoubleType()), False)]
     + [T.StructField(f"len_p{p}", T.DoubleType(), True) for p in (50, 90, 99)],
-    lambda v: {"digest": tdigest.digest_from_values(v.to_numpy(dtype=np.float64))},
+    lambda v: {"digest": tdigest.digest_from_values(v.to_numpy(zero_copy_only=False))},
     _tdigest_merge,
     [T.StructField("digest", T.ArrayType(T.DoubleType()), False)],
     null_keys=False,  # prepared_scan's (repo_bucket, lang) are never NULL
@@ -402,24 +426,28 @@ def psi_report(
 # hashing sketches: count-min frequency, Bloom membership, KMV overlap
 # --------------------------------------------------------------------------
 
-def _counted(name: str, sketch: Callable[[pd.Series], np.ndarray], merge) -> _Monoid:
+def _counted(name: str, sketch: Callable[[pa.Array], np.ndarray], merge) -> _Monoid:
     """A fixed-size int64 sketch column ``name`` plus ``n_values``, the
     non-NULL values it absorbed (count-min, Bloom)."""
     return _Monoid(
         [T.StructField(name, _LONGS, False), T.StructField("n_values", T.LongType(), False)],
         lambda values: {name: sketch(values), "n_values": len(values)},
-        lambda rows: {name: merge(rows[name]), "n_values": int(rows["n_values"].sum())},
+        lambda rows: {
+            name: merge(_list_matrix(rows.column(name))),
+            "n_values": int(pc.sum(rows.column("n_values")).as_py()),
+        },
     )
 
 
 def _countmin_monoid(depth: int = 4, width: int = 2048) -> _Monoid:
     from sparkval import countmin
 
-    def sketch(values: pd.Series) -> np.ndarray:
+    def sketch(values: pa.Array) -> np.ndarray:
         # hash each distinct value once, weighted by its batch count
-        vc = values.value_counts()
+        vc = pc.value_counts(values)
         return countmin.update(
-            countmin.empty_sketch(depth, width), vc.index.to_numpy(), vc.to_numpy(), depth, width
+            countmin.empty_sketch(depth, width), vc.field("values").to_pylist(),
+            vc.field("counts").to_numpy(), depth, width,
         )
 
     return _counted("sketch", sketch, countmin.merge)
@@ -428,8 +456,8 @@ def _countmin_monoid(depth: int = 4, width: int = 2048) -> _Monoid:
 def _bloom_monoid(k: int = 4, m_bits: int = 1 << 20) -> _Monoid:
     from sparkval import bloom
 
-    def sketch(values: pd.Series) -> np.ndarray:
-        return bloom.add(bloom.empty_filter(m_bits), values.unique(), k, m_bits)
+    def sketch(values: pa.Array) -> np.ndarray:
+        return bloom.add(bloom.empty_filter(m_bits), pc.unique(values).to_pylist(), k, m_bits)
 
     return _counted("filter", sketch, bloom.merge)
 
@@ -439,8 +467,9 @@ def _kmv_monoid(k: int = 256) -> _Monoid:
 
     return _Monoid(
         [T.StructField("sketch", _LONGS, False)],
-        lambda values: {"sketch": kmv.sketch_of(values.unique(), k)},
-        lambda rows: {"sketch": kmv.merge(rows["sketch"], k)},
+        lambda values: {"sketch": kmv.sketch_of(pc.unique(values).to_pylist(), k)},
+        # union-then-k-smallest of the concatenation = of the rows
+        lambda rows: {"sketch": kmv.merge([_flat(rows, "sketch")], k)},
     )
 
 
@@ -531,23 +560,6 @@ def merge_bloom(
     return _sketch_rollup(filters, group_cols or [], _bloom_monoid())
 
 
-def bloom_contains_expr(
-    term_col,
-    filter_col: str = "filter",
-    k: int = 4,
-    m_bits: int = 1 << 20,
-) -> F.Column:
-    """Membership probe as a PURE codegen boolean expression over a
-    filter array column: h0 = first 8 md5 hex chars (conv base 16),
-    the k bit positions from the same mod-prime mixing as the numpy
-    kernel, each tested with getbit() on the packed long — so probing
-    a broadcast filter costs no Python at all and the whole probe
-    dies map-side inside WholeStageCodegen. ``term_col`` may be a
-    column name or an arbitrary string-typed Column (e.g. an n-gram
-    expression that never materializes outside the projection)."""
-    return bloom_h0_contains_expr(bloom_h0_expr(term_col), filter_col, k, m_bits)
-
-
 def bloom_h0_expr(term) -> F.Column:
     """The base hash of the Bloom and count-min chain (first 8 md5
     hex chars as a long) as its own expression — split out so hot
@@ -566,8 +578,11 @@ def bloom_h0_expr(term) -> F.Column:
 def bloom_h0_contains_expr(
     h0, filter_col: str = "filter", k: int = 4, m_bits: int = 1 << 20
 ) -> F.Column:
-    """Membership test given a precomputed base hash (bloom_h0_expr):
-    the k mod-prime bit positions and getbit() probes, pure codegen."""
+    """Membership probe given a base hash (``bloom_h0_expr``) as a PURE
+    codegen boolean expression over a filter array column: the k bit
+    positions from the same mod-prime mixing as the numpy kernel, each
+    tested with getbit() on the packed long — so probing a broadcast
+    filter costs no Python and dies map-side inside WholeStageCodegen."""
     h0 = F.col(h0) if isinstance(h0, str) else h0
     bits = []
     for pos in _chain_positions(h0, k, m_bits):

@@ -106,8 +106,8 @@ def test_distorted_snapshot_flagged(spark, engine, baseline_df):
 
 
 def test_spark_scores_match_numpy_kernel(spark, engine, baseline_df):
-    """Distribution parity: the Spark path (mapInPandas hists ->
-    broadcast join -> kernel) must reproduce the straight-line numpy
+    """Distribution parity: the Spark path (mapInArrow hists ->
+    full-outer join -> kernel) must reproduce the straight-line numpy
     score bit-for-bit on every partition."""
     from tests.test_kernels import hists_of
 

@@ -93,13 +93,17 @@ def test_deterministic_sampling_properties(spark, docs):
     tolerance."""
     from sparkval.pipeline import sampling
 
-    s20 = set(r["doc_id"] for r in sampling.deterministic_sample(docs, 200).collect())
-    s20_re = set(
-        r["doc_id"]
-        for r in sampling.deterministic_sample(docs.repartition(13), 200).collect()
-    )
-    assert s20 == s20_re  # partitioning-invariant (df.sample is not)
-    s50 = set(r["doc_id"] for r in sampling.deterministic_sample(docs, 500).collect())
+    def sample(df, permille):
+        return {
+            r["doc_id"]
+            for r in sampling.stratified_sample(df, "lang", {}, default_permille=permille)
+            .collect()
+        }
+
+    s20 = sample(docs, 200)
+    # partitioning-invariant (df.sample is not)
+    assert s20 == sample(docs.repartition(13), 200)
+    s50 = sample(docs, 500)
     assert s20 <= s50  # nested rates
     n = docs.count()
     assert abs(len(s50) / n - 0.5) < 0.1
@@ -304,16 +308,6 @@ def test_extract_features_real_decode_path(spark):
         assert 0.0 <= f[3] <= 1.0
         # luma histogram sums to 1
         assert abs(sum(f[8:24]) - 1.0) < 1e-5
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.make_fake_media(spark, 30)
-    plan = multimodal.frame_sample_plan(media, every_ms=500).toPandas()
-    vids = media.filter(F.col("kind") == "video").select("media_id", "meta.duration_ms").toPandas()
-    for _, r in vids.iterrows():
-        got = plan[plan["media_id"] == r["media_id"]]["frame_ts_ms"].tolist()
-        want = list(range(0, int(r["duration_ms"]), 500))
-        assert got == want
 
 
 def test_ivf_topk_recall_vs_brute_force(spark, embs):
@@ -950,8 +944,6 @@ def test_hash_split_stable_and_covering(spark, docs):
     )
     base = pdf.set_index("doc_id")["split"]
     assert (base.loc[again.index] == again).all()
-    # nested with deterministic_sample: the split of a sampled subset
-    # matches the full corpus split (hash-keyed, not positional)
     with pytest.raises(ValueError):
         sampling.hash_split(d, {"train": 700, "val": 100})  # sums to 800
     with pytest.raises(ValueError):

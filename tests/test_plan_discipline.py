@@ -1,11 +1,12 @@
 """Physical-plan discipline tests (SURVEY §7.3 hard part d).
 
 The north rule requires ALL predicate evaluation through vectorized
-pandas/Arrow UDFs and DataFrame SQL — no per-row Python. These tests
-enforce it two ways: statically (no .rdd / row-at-a-time udf anywhere
-in the package) and physically (scans prune + push down, dimension
-joins broadcast, python stages are Arrow-vectorized (MapInArrow,
-ArrowEvalPython, MapInPandas), never BatchEvalPython).
+Arrow UDFs and DataFrame SQL — no per-row Python. These tests
+enforce it two ways: statically (no .rdd / row-at-a-time udf / pandas
+UDF anywhere in the package) and physically (scans prune + push down,
+dimension joins broadcast, python stages are Arrow-vectorized
+(MapInArrow, FlatMapGroupsInArrow, ArrowEvalPython), never
+BatchEvalPython).
 """
 
 from __future__ import annotations
@@ -46,9 +47,22 @@ def test_no_rdd_api_usage():
 
 def test_no_row_at_a_time_udf():
     # row-at-a-time registrations: F.udf(...), @udf — the slow path the
-    # north rule forbids. Batch boundaries (mapInArrow / applyInArrow,
-    # pandas_udf / mapInPandas / applyInPandas) are the only ones allowed.
+    # north rule forbids. Batch boundaries (mapInArrow / applyInArrow /
+    # arrow_udf) are the only ones allowed.
     pat = re.compile(r"(?<!pandas_)\budf\s*\(")
+    offenders = []
+    for p, src in _pkg_sources():
+        for m in pat.finditer(src):
+            line = src[: m.start()].count("\n") + 1
+            offenders.append(f"{p}:{line}")
+    assert not offenders, offenders
+
+
+def test_no_pandas_udf_boundary():
+    # every Python stage reads and writes Arrow data: a pandas UDF adds
+    # a pandas conversion on each side of the boundary. The streaming
+    # state call (applyInPandasWithState) has no Arrow form and stays.
+    pat = re.compile(r"mapInPandas\(|applyInPandas\(|pandas_udf")
     offenders = []
     for p, src in _pkg_sources():
         for m in pat.finditer(src):
@@ -86,18 +100,35 @@ def test_referential_check_broadcasts(spark, corpus_pair):
 
 
 def test_python_stages_are_arrow_vectorized(spark, corpus_pair):
-    """Every python execution node in the drift pipeline must be an
-    Arrow-vectorized operator (MapInPandas / ArrowEvalPython /
-    FlatMapGroupsInPandas) — BatchEvalPython (pickled row-at-a-time)
-    must never appear."""
-    from sparkval import ValidationConfig, ValidationEngine
+    """Every python execution node of the drift pipeline, the sketch
+    builds and roll-ups and feature extraction reads and writes Arrow
+    batches (MapInArrow, plus FlatMapGroupsInArrow for merges): no
+    pandas conversion (MapInPandas, FlatMapGroupsInPandas) and no
+    BatchEvalPython (pickled row-at-a-time)."""
+    from sparkval import ValidationConfig, ValidationEngine, stats
+    from sparkval.pipeline import multimodal
 
     base, snap, _ = corpus_pair
     eng = ValidationEngine(ValidationConfig())
-    out = eng.validate(snap, eng.build_baseline(base))
-    plan = out["verdicts"]._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan, plan
-    assert "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan, plan
+    terms = snap.select("lang", "repo", F.col("path").alias("term"))
+    frames = {
+        "verdicts": eng.validate(snap, eng.build_baseline(base))["verdicts"],
+        "length_tdigests": stats.length_tdigests(snap, ValidationConfig()),
+        "extract_features": multimodal.extract_features(multimodal.make_fake_media(spark, 8)),
+    }
+    for name, build, merge in (
+        ("countmin", stats.countmin_sketches, stats.merge_countmin),
+        ("bloom", stats.bloom_filters, stats.merge_bloom),
+        ("kmv", stats.kmv_sketches, stats.merge_kmv),
+    ):
+        sk = build(terms, "term", ["lang", "repo"])
+        frames[name] = sk
+        frames[f"merge_{name}"] = merge(sk, ["lang"])
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, (name, plan)
+        for node in ("MapInPandas", "FlatMapGroupsInPandas", "BatchEvalPython"):
+            assert node not in plan, (name, node, plan)
 
 
 def test_similarity_python_stages_are_arrow(spark, sf_dir, tmp_path, monkeypatch):
@@ -480,7 +511,7 @@ def test_bloom_decontaminate_probe_and_verify_are_jvm_side(spark, sf_dir):
     import pandas as pd
 
     from sparkval import bloom
-    from sparkval.stats import bloom_contains_expr
+    from sparkval.stats import bloom_h0_contains_expr, bloom_h0_expr
 
     docs = load(spark, sf_dir, "documents")
     filt = spark.createDataFrame(
@@ -500,7 +531,7 @@ def test_bloom_decontaminate_probe_and_verify_are_jvm_side(spark, sf_dir):
         .select(
             "doc_id",
             F.size(
-                F.filter("_grams", lambda g: bloom_contains_expr(g, "filter"))
+                F.filter("_grams", lambda g: bloom_h0_contains_expr(bloom_h0_expr(g), "filter"))
             ).alias("bloom_hits"),
         )
     )
@@ -598,7 +629,7 @@ def test_round5_session3_ops_plan_discipline(spark, sf_dir):
         assert "CartesianProduct" not in plan, name
         assert "SortMergeJoin" not in plan, name
         if name == "normalize":
-            assert "ArrowEvalPython" in plan, name  # the NFC pandas_udf
+            assert "ArrowEvalPython" in plan, name  # the NFC arrow_udf
 
 
 def test_seasonal_anomaly_windows_run_after_collapse(spark, sf_dir):
